@@ -114,23 +114,10 @@ class SuiteEvaluator:
         spark: SparkSession,
         suite: ConstraintSuite,
         vocab_dfs: dict[str, DataFrame] | None = None,
-        share_input_scan: bool = False,
     ):
-        """``share_input_scan=True`` derives ONE persisted narrow
-        projection per input side (keys + equality hashes + drift bins,
-        no text) and feeds every non-row-level family from it instead of
-        per-family scans. Measured at 8M turns/local[32]: a net LOSS
-        (43.8–52.3 s vs 35.6 s) — parquet column pruning already gives
-        each family a minimal scan (uniqueness reads only the key
-        columns, drift only its binned expression), so the columnar
-        cache build costs more than the pruned re-scans it replaces.
-        Kept as an opt-in for storage layouts without column pruning
-        (row-oriented sources, pre-joined views); results are
-        fingerprint-identical either way (tested)."""
         self.spark = spark
         self.suite = suite
         self.vocab_dfs = vocab_dfs or {}
-        self.share_input_scan = share_input_scan
         self._persisted: list[DataFrame] = []
         # physical-strategy decision cache (constraint_id -> choice),
         # e.g. text_equality digest-vs-direct. A probe result found here
@@ -216,53 +203,6 @@ class SuiteEvaluator:
         ref = (ref_df.withColumn("_pid", self._partition_id_col(ref_df))
                if ref_df is not None else None)
 
-        # ---- shared narrow input scan --------------------------------
-        # The equality / drift / uniqueness / dim-RI families each need
-        # only keys + 64-bit hashes + bin ids + a dim column — never the
-        # text. Without sharing, each family re-scans the (text-heavy)
-        # input to derive them. With sharing, ONE narrow projection per
-        # side (~60 B/row vs the full row) is persisted and every family
-        # reads it: one full scan of cur and one of ref feed the whole
-        # suite (the fused row-check scan stays on the raw input — it
-        # needs every checked column — and the rare violation-value
-        # fetches go back to the raw input by key).
-        eq_list = [
-            (i, c) for i, c in enumerate(cons)
-            if c.kind == "text_equality" and ref is not None
-            and not c.params.get("digest", False)
-        ]
-        drift_cs = [c for c in cons if c.kind in ("drift_psi", "drift_ks")]
-        drift_groups: list[tuple] = []
-        if ref is not None:
-            for c in drift_cs:
-                key = (c.params["expr"], c.params["bins"],
-                       c.params["lo"], c.params["hi"])
-                if key not in drift_groups:
-                    drift_groups.append(key)
-        uniq_idx = [i for i, c in enumerate(cons) if c.kind == "unique"]
-        ri_list = [(i, c) for i, c in enumerate(cons)
-                   if c.kind in ROW_LEVEL_KINDS and not self._fusable(c)]
-
-        cur_consumers = len(eq_list) + (1 if drift_groups else 0) \
-            + len(uniq_idx) + len(ri_list)
-        ref_consumers = len(eq_list) + (1 if drift_groups else 0)
-        extra_cols = [c.params["col"] for _, c in ri_list]
-        for i in uniq_idx:
-            extra_cols += list(cons[i].params["cols"])
-
-        cur_n = ref_n = None
-        if self.share_input_scan and cur_consumers >= 2:
-            cur_n = self._share(
-                self._narrow_frame(df, eq_list, drift_groups, extra_cols)
-            )
-        # every ref_n consumer (equality pre-path, shared drift) requires
-        # cur_n AND ref_n — so a ref projection built without its cur twin
-        # would be a persisted full ref scan nobody ever reads
-        if self.share_input_scan and ref_consumers >= 2 and cur_n is not None:
-            ref_n = self._share(
-                self._narrow_frame(ref, eq_list, drift_groups, [])
-            )
-
         # ---- unique + group_stats stage-2 count sharing --------------
         # A group_stats whose group column is covered by a unique key
         # set derives its group sizes from that constraint's stage-2 key
@@ -271,8 +211,9 @@ class SuiteEvaluator:
         # AND group sizes.
         shared_counts: dict[int, DataFrame] = {}   # unique idx -> counts
         shared_sizes: dict[int, DataFrame] = {}    # group_stats idx -> sizes
-        for i in uniq_idx:
-            c = cons[i]
+        for i, c in enumerate(cons):
+            if c.kind != "unique":
+                continue
             reusers = [
                 j for j, g in enumerate(cons)
                 if g.kind == "group_stats" and j not in shared_sizes
@@ -281,8 +222,7 @@ class SuiteEvaluator:
             if not reusers:
                 continue
             counts = self._share(
-                self._key_counts(cur_n if cur_n is not None else df,
-                                 list(c.params["cols"]),
+                self._key_counts(df, list(c.params["cols"]),
                                  c.params.get("salted", True))
             )
             shared_counts[i] = counts
@@ -294,31 +234,17 @@ class SuiteEvaluator:
 
         for i, c in enumerate(cons):
             if c.kind in ROW_LEVEL_KINDS and not self._fusable(c):
-                r, v = self._referential_join(
-                    cur_n if cur_n is not None else df, c)
+                r, v = self._referential_join(df, c)
                 results.append(r)
                 if with_violations and v is not None:
                     violations.append(v)
             elif c.kind == "unique":
-                counts = shared_counts.get(i)
-                if counts is None and cur_n is not None:
-                    # stage-2 counts persist in all shared-scan modes:
-                    # totals, dup stats and dup violations all read them
-                    counts = self._share(self._key_counts(
-                        cur_n, list(c.params["cols"]),
-                        c.params.get("salted", True)))
-                r, v = self._unique(
-                    cur_n if cur_n is not None else df, c, counts=counts)
+                r, v = self._unique(df, c, counts=shared_counts.get(i))
                 results.append(r)
                 if with_violations:
                     violations.append(v)
             elif c.kind == "text_equality":
-                pre = None
-                if cur_n is not None and ref_n is not None \
-                        and not c.params.get("digest", False):
-                    pre = (f"__eq{i}_ts", f"__eq{i}_h", f"__eq{i}_norm")
-                r, v = self._text_equality(
-                    df, ref, c, cur_n=cur_n, ref_n=ref_n, pre=pre)
+                r, v = self._text_equality(df, ref, c)
                 results.append(r)
                 if with_violations:
                     violations.append(v)
@@ -374,10 +300,9 @@ class SuiteEvaluator:
                     f"unknown constraint kind {c.kind!r} "
                     f"({c.constraint_id})")
 
+        drift_cs = [c for c in cons if c.kind in ("drift_psi", "drift_ks")]
         if drift_cs:
-            results.extend(self._drift_family(
-                df, ref, drift_cs,
-                cur_n=cur_n, ref_n=ref_n, groups=drift_groups))
+            results.extend(self._drift_family(df, ref, drift_cs))
 
         if not results:
             raise ValueError(
@@ -678,7 +603,6 @@ class SuiteEvaluator:
         )
         return res, vio
 
-    # -- shared narrow input projection --------------------------------------
     @staticmethod
     def _norm_opts(c: Constraint) -> dict:
         p = c.params
@@ -686,39 +610,6 @@ class SuiteEvaluator:
             lowercase=p["lowercase"], collapse_ws=p["collapse_ws"],
             strip_punct=p["strip_punct"], strip_diacritics=p["strip_diacritics"],
         )
-
-    def _narrow_frame(
-        self, df: DataFrame, eq_list: list[tuple[int, Constraint]],
-        drift_groups: list[tuple], extra_cols: list[str],
-    ) -> DataFrame:
-        """ONE narrow projection of an input side feeding every
-        non-row-level family: suite keys + _pid, per-equality-constraint
-        order/content hashes (``__eq{i}_ts/_h/_norm`` — the exact
-        expressions `_eq_turn_join` would compute), per-drift-group bin
-        ids (``__db{g}``), and the dim/unique columns. ~60 B/row versus
-        the text-carrying input row; persisting it converts k family
-        scans of the raw table into one scan + k cache reads."""
-        names: list[str] = []
-        for c in [*self.suite.key_cols, "_pid", *extra_cols]:
-            if c not in names:
-                names.append(c)
-        sel: list[F.Column] = [F.col(c) for c in names]
-        for i, c in eq_list:
-            col = c.params["col"]
-            sel += [
-                F.coalesce(F.col("ts").cast("timestamp").cast("long"),
-                           F.lit(0)).alias(f"__eq{i}_ts"),
-                F.xxhash64(F.col(col)).bitwiseXOR(F.lit(-1))
-                .alias(f"__eq{i}_h"),
-                # fused Arrow normalize+hash (guide §4.2), one UDF call
-                norm_hash64_arrow(F.col(col), **self._norm_opts(c))
-                .alias(f"__eq{i}_norm"),
-            ]
-        for g, (expr_s, bins, lo, hi) in enumerate(drift_groups):
-            sel.append(
-                self._bin_expr(F.expr(expr_s), bins, lo, hi).alias(f"__db{g}")
-            )
-        return df.select(*sel)
 
     # -- uniqueness ----------------------------------------------------------
     def _key_counts(
@@ -1362,8 +1253,6 @@ class SuiteEvaluator:
 
     def _text_equality(
         self, df: DataFrame, ref: DataFrame, c: Constraint,
-        cur_n: DataFrame | None = None, ref_n: DataFrame | None = None,
-        pre: tuple[str, str, str] | None = None,
     ) -> tuple[DataFrame, DataFrame]:
         """Per-turn text equality vs the reference snapshot.
 
@@ -1429,16 +1318,7 @@ class SuiteEvaluator:
                 self.strategy_cache[c.constraint_id] = digest_opt
 
         if not digest_opt:
-            if pre is not None:
-                # shared-scan path: hashes were derived once into the
-                # persisted narrow frames; the raw `df` is only touched
-                # by the violating-key value fetch
-                counts, vio = self._eq_turn_join(
-                    cur_n, ref_n, keys, col, norm_opts, c,
-                    pre=pre, raw_cur=df)
-            else:
-                counts, vio = self._eq_turn_join(df, ref, keys, col,
-                                                 norm_opts, c)
+            counts, vio = self._eq_turn_join(df, ref, keys, col, norm_opts, c)
             return self._eq_finalize(counts, c), vio
 
         conv = keys[0]
@@ -1522,8 +1402,6 @@ class SuiteEvaluator:
     def _eq_turn_join(
         self, cur: DataFrame, ref: DataFrame, keys: list, col: str,
         norm_opts: dict, c: Constraint,
-        pre: tuple[str, str, str] | None = None,
-        raw_cur: DataFrame | None = None,
     ) -> tuple[DataFrame, DataFrame]:
         """Exact per-turn classification WITHOUT a join.
 
@@ -1544,44 +1422,28 @@ class SuiteEvaluator:
         the text column once for ~0.1% of keys instead of shipping 256
         chars per row through the engine's widest shuffle.
 
-        ``pre``: column names of prederived (ts_order, raw_hash,
-        norm_hash) when cur/ref are the shared narrow frames; the raw
-        current side then rides in ``raw_cur`` for the value fetch.
         Returns (per-pid counts, violation rows)."""
-        if pre is not None:
-            ts_n, h_n, norm_n = pre
-            sel = [*keys, ts_n, h_n, norm_n, "_pid"]
-            tagged = (
-                cur.select(*sel).withColumn("_is_cur", F.lit(True))
-                .unionByName(ref.select(*sel)
-                             .withColumn("_is_cur", F.lit(False)))
-            )
-            w_ts, w_h, w_norm = F.col(ts_n), F.col(h_n), F.col(norm_n)
-        else:
-            sel = [*keys, "ts", col, "_pid"]
-            tagged = (
-                cur.select(*sel).withColumn("_is_cur", F.lit(True))
-                .unionByName(ref.select(*sel)
-                             .withColumn("_is_cur", F.lit(False)))
-            )
-            # same total order + payload as _stable_winner (see there
-            # for the hashing / tie-break rationale); fused Arrow
-            # normalize+hash projected ONCE pre-exchange (guide §4.2 —
-            # both winner structs read the projected column, so the UDF
-            # runs exactly once per row)
-            tagged = tagged.withColumn(
-                "__nh_eq", norm_hash64_arrow(F.col(col), **norm_opts))
-            w_norm = F.col("__nh_eq")
-            w_ts = F.coalesce(F.col("ts").cast("timestamp").cast("long"),
-                              F.lit(0))
-            w_h = F.xxhash64(F.col(col)).bitwiseXOR(F.lit(-1))
-        s_cur = F.struct(w_ts.alias("__ts_o"), w_h.alias("__h_o"),
-                         w_norm.alias("norm"), F.col("_pid").alias("pid"))
-        s_ref = F.struct(w_ts.alias("__ts_o"), w_h.alias("__h_o"),
-                         w_norm.alias("norm"), F.col("_pid").alias("pid"))
+        sel = [*keys, "ts", col, "_pid"]
+        tagged = (
+            cur.select(*sel).withColumn("_is_cur", F.lit(True))
+            .unionByName(ref.select(*sel)
+                         .withColumn("_is_cur", F.lit(False)))
+        )
+        # same total order + payload as _stable_winner (see there for
+        # the hashing / tie-break rationale); fused Arrow normalize+hash
+        # projected ONCE pre-exchange (guide §4.2 — both winner structs
+        # read the projected column, so the UDF runs exactly once per row)
+        tagged = tagged.withColumn(
+            "__nh_eq", norm_hash64_arrow(F.col(col), **norm_opts))
+        w_ts = F.coalesce(F.col("ts").cast("timestamp").cast("long"),
+                          F.lit(0))
+        w_h = F.xxhash64(F.col(col)).bitwiseXOR(F.lit(-1))
+        winner = F.struct(w_ts.alias("__ts_o"), w_h.alias("__h_o"),
+                          F.col("__nh_eq").alias("norm"),
+                          F.col("_pid").alias("pid"))
         agg = tagged.groupBy(*keys).agg(
-            F.max(F.when(F.col("_is_cur"), s_cur)).alias("_cw"),
-            F.max(F.when(~F.col("_is_cur"), s_ref)).alias("_rw"),
+            F.max(F.when(F.col("_is_cur"), winner)).alias("_cw"),
+            F.max(F.when(~F.col("_is_cur"), winner)).alias("_rw"),
         )
         status = (
             F.when(F.col("_cw").isNull(), F.lit("missing_in_current"))
@@ -1611,18 +1473,13 @@ class SuiteEvaluator:
         # the tied raw hash pins the same text — the fetched value is
         # the value the in-exchange struct would have carried.
         # missing_in_current keys have no cur rows -> left join -> null,
-        # matching the old _cw.val nullness. Always reads the RAW
-        # current side (the narrow frames carry no text).
-        fetch_src = raw_cur if raw_cur is not None else cur
-        f_ts = F.coalesce(F.col("ts").cast("timestamp").cast("long"),
-                          F.lit(0))
-        f_h = F.xxhash64(F.col(col)).bitwiseXOR(F.lit(-1))
+        # matching the old _cw.val nullness.
         cur_vals = (
-            fetch_src.select(*keys, "ts", col)
+            cur.select(*keys, "ts", col)
             .join(bad_keys.select(*keys), on=keys, how="left_semi")
             .groupBy(*keys)
             .agg(F.max(F.struct(
-                f_ts.alias("__ts_o"), f_h.alias("__h_o"),
+                w_ts.alias("__ts_o"), w_h.alias("__h_o"),
                 self._sval(F.col(col)).alias("val"),
             )).alias("__w"))
             .select(*keys, F.col("__w.val").alias("_cur_val"))
@@ -1872,8 +1729,6 @@ class SuiteEvaluator:
 
     def _drift_family(
         self, df: DataFrame, ref: DataFrame, constraints: list[Constraint],
-        cur_n: DataFrame | None = None, ref_n: DataFrame | None = None,
-        groups: list[tuple] | None = None,
     ) -> list[DataFrame]:
         """PSI / KS between current and reference per partition. Only bin
         counts are shuffled (bins × partitions rows), never raw data —
@@ -1883,10 +1738,7 @@ class SuiteEvaluator:
         "PSI and KS on the same column" suite shape — bin the inputs
         ONCE: the joined probability frame is persisted (it is tiny:
         bins × partitions rows) and both statistics derive from it, so
-        the 2×n-row histogram scans run once instead of per-constraint.
-        With shared narrow frames (``cur_n``/``ref_n`` + the evaluate()
-        ``groups`` ordering), the bin ids were already derived into
-        ``__db{g}`` columns during the single input scan."""
+        the 2×n-row histogram scans run once instead of per-constraint."""
         by_group: dict[tuple, list[Constraint]] = {}
         for c in constraints:
             p = c.params
@@ -1908,7 +1760,7 @@ class SuiteEvaluator:
         joint_cells = 1
         for _, bins, _, _ in gkeys:
             joint_cells *= max(1, int(bins))
-        if (cur_n is None and len(gkeys) > 1 and joint_cells <= 100_000):
+        if len(gkeys) > 1 and joint_cells <= 100_000:
             bcols = [
                 self._bin_expr(F.expr(e), b, lo, hi).alias(f"__jb{g}")
                 for g, (e, b, lo, hi) in enumerate(gkeys)
@@ -1933,13 +1785,7 @@ class SuiteEvaluator:
         for key, cs in by_group.items():
             expr_s, bins, lo, hi = key
             gkey = f"drifthist|{expr_s}|{bins}|{lo}|{hi}"
-            if cur_n is not None and ref_n is not None and groups is not None:
-                bcol = F.col(f"__db{groups.index(key)}")
-                h_cur = self._histogram(cur_n, bcol, "n_cur")
-                h_ref = self._ref_agg(
-                    gkey,
-                    lambda: self._histogram(ref_n, bcol, "n_ref"))
-            elif joint_cur is not None:
+            if joint_cur is not None:
                 g = gkeys.index(key)
 
                 def marginal(j: DataFrame, name: str) -> DataFrame:

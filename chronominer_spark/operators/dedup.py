@@ -547,8 +547,8 @@ def ngram_jaccard_pairs(
     any band either misdecides pairs or verifies nearly everything),
     the size bound is exact, so the surviving-pair OUTPUT is
     byte-identical to the unfiltered plan filtered at the same
-    threshold (A/B'd in tools/ab_jaccard_sizefilter.py). With
-    ``min_jaccard=None`` every candidate pair is verified and returned
+    threshold (A/B'd in ``git show 4ff6869:tools/ab_jaccard_sizefilter.py``).
+    With ``min_jaccard=None`` every candidate pair is verified and returned
     (below-threshold rows included), the previous contract.
 
     The intersection join ships 64-bit ``xxhash64`` shingle hashes, not

@@ -615,7 +615,7 @@ def q19_lsh_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min_jaccard arms the exact size-bound prefilter: candidates whose
     # shingle-count ratio already proves jaccard < 0.2 never reach the
     # intersection join (identical output, A/B'd in
-    # tools/ab_jaccard_sizefilter.py)
+    # `git show 4ff6869:tools/ab_jaccard_sizefilter.py`)
     verified = ngram_jaccard_pairs(d, "doc_id", "text", pairs, k=3,
                                    hash_df=fh, min_jaccard=0.2,
                                    pairs_materialized=True)

@@ -176,44 +176,48 @@ class SuiteRunner:
                      for i in range(0, len(pending), wave_size)]
 
         pcol = self.suite.partition_col
-        for wave in waves:
-            sub = df.where(F.col(pcol).isin(wave))
-            sub_ref = ref_df.where(F.col(pcol).isin(wave)) if ref_df is not None else None
-            pids = [self._partition_id(p) for p in wave]
-            if ref_df is not None:
-                from chronominer_spark.checkpoint import RefAggCache
-                wave_key = hashlib.sha1(
-                    repr(sorted(pids)).encode()).hexdigest()[:12]
-                self.evaluator.ref_agg_cache = RefAggCache(
-                    self.spark,
-                    os.path.join(ref_aggs_root, scope, f"wave={wave_key}"))
-            res, vio = self.evaluator.evaluate(
-                sub, sub_ref, snapshot_id=snapshot_id,
-                with_violations=with_violations,
-            )
-            self.manifest.save_strategy_decisions(
-                snapshot_id, suite_hash, self.evaluator.strategy_cache)
-            # results are written BEFORE violations on purpose: the
-            # first job populates the evaluator's persisted shares and
-            # the second reads them from cache. Overlapping the two
-            # (plans/actions.run_concurrent) was measured in round 6:
-            # gain inside noise at 8M, a 9% LOSS at 80M — the
-            # concurrent sibling re-computes shares the first job is
-            # still building. Sequential is the scale-safe order.
-            self._write(self._stamp(res, run_id), self.results_path)
-            if with_violations:
-                # dynamic partition overwrite only replaces partition dirs
-                # PRESENT in the frame: a re-validated partition that now
-                # has zero violations would leave its old violation files
-                # behind. A sentinel row per wave partition forces every
-                # wave partition dir to be rewritten; readers drop it.
-                vio = vio.unionByName(
-                    self._violation_sentinels(vio, pids, snapshot_id)
+        # the RefAggCache is scoped to one wave of this run: disarm it on
+        # every exit so a later evaluate() outside run() (or a crash
+        # mid-wave) never reads or writes a stale wave directory
+        try:
+            for wave in waves:
+                sub = df.where(F.col(pcol).isin(wave))
+                sub_ref = (ref_df.where(F.col(pcol).isin(wave))
+                           if ref_df is not None else None)
+                pids = [self._partition_id(p) for p in wave]
+                if ref_df is not None:
+                    from chronominer_spark.checkpoint import RefAggCache
+                    wave_key = hashlib.sha1(
+                        repr(sorted(pids)).encode()).hexdigest()[:12]
+                    self.evaluator.ref_agg_cache = RefAggCache(
+                        self.spark,
+                        os.path.join(ref_aggs_root, scope, f"wave={wave_key}"))
+                res, vio = self.evaluator.evaluate(
+                    sub, sub_ref, snapshot_id=snapshot_id,
+                    with_violations=with_violations,
                 )
-                self._write(self._stamp(vio, run_id), self.violations_path)
-            self.evaluator.unpersist_all()
-            self.manifest.mark_completed(pids, snapshot_id, suite_hash, run_id)
-            summary.completed.extend(pids)
+                self.manifest.save_strategy_decisions(
+                    snapshot_id, suite_hash, self.evaluator.strategy_cache)
+                # results are written BEFORE violations on purpose: the
+                # first job populates the evaluator's persisted shares and
+                # the second reads them from cache.
+                self._write(self._stamp(res, run_id), self.results_path)
+                if with_violations:
+                    # dynamic partition overwrite only replaces partition dirs
+                    # PRESENT in the frame: a re-validated partition that now
+                    # has zero violations would leave its old violation files
+                    # behind. A sentinel row per wave partition forces every
+                    # wave partition dir to be rewritten; readers drop it.
+                    vio = vio.unionByName(
+                        self._violation_sentinels(vio, pids, snapshot_id)
+                    )
+                    self._write(self._stamp(vio, run_id), self.violations_path)
+                self.evaluator.unpersist_all()
+                self.manifest.mark_completed(
+                    pids, snapshot_id, suite_hash, run_id)
+                summary.completed.extend(pids)
+        finally:
+            self.evaluator.ref_agg_cache = None
 
         res_run = self.results(run_only=run_id)
         counted = (

@@ -67,11 +67,6 @@ def build_session(
         # commits (the Spark analog of the reference's atomic
         # temp-write+replace, modules/infra/jsonl.py:329-349)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # FAIR between on-demand pools: concurrent independent actions
-        # (results + violations materialization, plans/actions.py)
-        # interleave their stages instead of queueing FIFO behind each
-        # other's low-parallelism tails
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )

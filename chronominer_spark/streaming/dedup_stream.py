@@ -271,7 +271,8 @@ class IncrementalNearDup(StreamFoldBase):
         # the band-bucket state joins against buckets computed by FUTURE
         # runs: a binary that changed the bucket scheme would silently
         # never collide with persisted state (lost recall). Stamp the
-        # scheme at state creation and refuse foreign state loudly.
+        # scheme at state creation and refuse foreign state loudly —
+        # including unmarked state, whose scheme is unknown.
         from chronominer_spark.operators.dedup import BUCKET_SCHEME
         import os
         os.makedirs(state_root, exist_ok=True)
@@ -285,6 +286,11 @@ class IncrementalNearDup(StreamFoldBase):
                     f"bucket scheme {found!r}; this engine uses "
                     f"{BUCKET_SCHEME!r} — rebuild the state or pin the "
                     "matching engine version")
+        elif os.listdir(state_root):
+            raise ValueError(
+                f"near-dup state at {state_root} has no bucket_scheme "
+                "marker, so its bucket scheme is unknown — rebuild the "
+                "state into an empty directory")
         else:
             with open(marker, "w") as fh:
                 fh.write(BUCKET_SCHEME)

@@ -1,7 +1,5 @@
 """Round-6 plumbing contracts:
 
-- ``plans/actions.run_concurrent``: overlapped jobs return the same
-  values as sequential calls and never swallow a sibling's failure.
 - strategy-decision cache: a rerun over the same (snapshot, suite)
   reuses the persisted digest-vs-direct choice instead of re-running
   the ``_digest_auto_choice`` probe job (round-5 verdict item 4), with
@@ -14,41 +12,6 @@
 from __future__ import annotations
 
 import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from chronominer_spark.plans.actions import run_concurrent
-
-
-# --------------------------------------------------------------- actions
-def test_run_concurrent_matches_sequential(spark, transcripts):
-    a = transcripts.groupBy("role").count()
-    b = transcripts.where(F.col("turn_idx") > 3)
-    seq = {"a": a.count(), "b": b.count()}
-    conc = run_concurrent(spark, {"a": a.count, "b": b.count})
-    assert conc == seq
-
-
-def test_run_concurrent_single_job_degrades_to_plain_call(spark):
-    calls = []
-    out = run_concurrent(spark, {"only": lambda: calls.append(1) or 7})
-    assert out == {"only": 7} and calls == [1]
-
-
-def test_run_concurrent_propagates_failure_after_all_finish(spark):
-    done = []
-
-    def ok():
-        done.append("ok")
-        return 1
-
-    def boom():
-        raise RuntimeError("job failed")
-
-    with pytest.raises(RuntimeError, match="job failed"):
-        run_concurrent(spark, {"ok": ok, "boom": boom})
-    assert done == ["ok"]  # the sibling ran to completion, not cancelled
 
 
 # --------------------------------------------------- strategy decision cache

@@ -127,3 +127,22 @@ def test_fix_and_revalidate_clears_stale_violations(runner, transcripts):
         F.col("constraint_id").startswith("unique:")
     )
     assert all(r["violation_count"] == 0 for r in res.collect())
+
+
+def test_run_disarms_ref_agg_cache(runner, transcripts, ref_snapshot,
+                                   monkeypatch):
+    """The RefAggCache armed for each wave is scoped to that run: after
+    ``run()`` returns — or raises mid-wave — the evaluator holds none,
+    so a later direct ``evaluate()`` cannot read a stale wave scope."""
+    from chronominer_spark.checkpoint import CheckpointManifest
+
+    runner.run(transcripts, ref_snapshot, snapshot_id=1, wave_size=4)
+    assert runner.evaluator.ref_agg_cache is None
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash at commit")
+
+    monkeypatch.setattr(CheckpointManifest, "mark_completed", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        runner.run(transcripts, ref_snapshot, snapshot_id=2)
+    assert runner.evaluator.ref_agg_cache is None

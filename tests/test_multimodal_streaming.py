@@ -2,6 +2,7 @@
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from chronominer_spark.operators.multimodal import (
@@ -813,3 +814,34 @@ def test_incremental_near_dup_compaction_bounds_state_and_emission(
     inc.process_batch(fresh, 99)
     new_pairs = inc.result().count() - before
     assert new_pairs == 0
+
+
+def test_incremental_near_dup_refuses_unmarked_state(spark, tmp_path):
+    """State with committed bucket segments but no ``bucket_scheme``
+    marker has an unknown bucket scheme: reopening it must fail loudly
+    instead of stamping it with the current scheme. A wrong marker is
+    refused the same way; an empty root is stamped and opens fine."""
+    import os
+
+    from chronominer_spark.operators.dedup import BUCKET_SCHEME
+    from chronominer_spark.streaming.dedup_stream import IncrementalNearDup
+
+    root = str(tmp_path / "nd_state")
+    inc = IncrementalNearDup(spark, root, "doc_id", "text",
+                             k=3, num_hashes=16, bands=4)
+    marker = os.path.join(root, "bucket_scheme")
+    with open(marker) as fh:
+        assert fh.read() == BUCKET_SCHEME
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    inc.process_batch(docs.limit(10), 0)
+    assert len(inc.buckets._segments()) == 1
+
+    IncrementalNearDup(spark, root, "doc_id", "text")   # marked: reopens
+    with open(marker, "w") as fh:
+        fh.write("md5-v0")
+    with pytest.raises(ValueError, match="bucket scheme 'md5-v0'"):
+        IncrementalNearDup(spark, root, "doc_id", "text")
+    os.remove(marker)
+    with pytest.raises(ValueError, match="no bucket_scheme marker"):
+        IncrementalNearDup(spark, root, "doc_id", "text")
+    assert not os.path.exists(marker)   # unmarked state is not stamped

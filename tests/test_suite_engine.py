@@ -361,30 +361,6 @@ def test_digest_equality_stale_duplicate_in_other_partition(spark):
     assert total_checked == 3  # 3 distinct (conv, turn) keys, no double count
 
 
-def test_shared_input_scan_identical_outputs(spark, transcripts, ref_snapshot):
-    """share_input_scan=True (one narrow projection per side feeding
-    equality/drift/unique/dim-RI) and =False (per-family scans) must be
-    pure physics: identical results and violation rows."""
-    from chronominer_spark.constraints.spec import (
-        default_transcript_suite,
-        default_vocab_dfs,
-    )
-    from chronominer_spark.datagen import ROLE_VOCAB, TOOL_VOCAB
-
-    def run(shared):
-        suite = default_transcript_suite(list(ROLE_VOCAB), list(TOOL_VOCAB))
-        ev = SuiteEvaluator(spark, suite,
-                            default_vocab_dfs(spark, list(TOOL_VOCAB)),
-                            share_input_scan=shared)
-        res, vio = ev.evaluate(transcripts, ref_snapshot, snapshot_id=1)
-        out = (sorted(map(tuple, res.collect())),
-               sorted(map(tuple, vio.collect())))
-        ev.unpersist_all()
-        return out
-
-    assert run(True) == run(False)
-
-
 def test_digest_auto_picks_by_observed_diff_rate(spark, transcripts, ref_snapshot):
     """digest='auto' must pick the digest prepass when the sampled
     conv-level mismatch rate is low (re-validating a mostly-identical
