@@ -42,7 +42,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from chronominer_spark.constraints.spec import Constraint, ConstraintSuite
-from chronominer_spark.functions.text import norm_hash64_arrow
+from chronominer_spark.functions.text import hash_backend_tag, norm_hash64_arrow
 
 logger = logging.getLogger(__name__)
 
@@ -1348,7 +1348,7 @@ class SuiteEvaluator:
         # drilldown below still reads raw ref rows, but only for the
         # rare digest-differing conversations
         ref_dig = self._ref_agg(
-            f"eqdigest|{c.constraint_id}",
+            f"eqdigest|{c.constraint_id}|{hash_backend_tag()}",
             lambda: conv_digest(ref_l, "_ref_"))
         conv_j = self._share(
             conv_digest(cur_l, "_cur_").join(

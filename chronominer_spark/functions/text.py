@@ -126,6 +126,18 @@ def _arrow_norm_array(s: pd.Series, lowercase: bool, collapse_ws: bool,
     return arr
 
 
+def hash_backend_tag() -> str:
+    """The content hash :func:`norm_hash64_arrow` uses in this process:
+    ``duckdb-<version>`` when DuckDB imports, else ``blake2b``. Anything
+    that persists those hashes must key on this tag, since the two
+    backends (and DuckDB versions) hash the same text differently."""
+    try:
+        import duckdb
+    except ImportError:                              # pragma: no cover
+        return "blake2b"
+    return f"duckdb-{duckdb.__version__}"
+
+
 def norm_hash64_arrow(
     col: Column | str,
     lowercase: bool = True,
@@ -158,11 +170,7 @@ def norm_hash64_arrow(
     # blake2b loop, measured 1.27 s → 0.16 s per 1M rows incl. the
     # to_pylist it also removes); a worker missing duckdb then fails
     # loudly instead of silently hashing differently.
-    try:
-        import duckdb  # noqa: F401
-        use_duckdb = True
-    except ImportError:                              # pragma: no cover
-        use_duckdb = False
+    use_duckdb = hash_backend_tag() != "blake2b"
 
     @F.pandas_udf(LongType())
     def _nh(s: pd.Series) -> pd.Series:

@@ -1044,14 +1044,14 @@ _Q29_REL_BOUND = 0.05
 
 
 def q29_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T-digest quantile sketches (pandas/Arrow UDAF, partial+final
-    merge). The sketch is approximate by design, so its raw value has no
-    SQL mirror — instead the query emits a CHECKABLE CONTRACT: the exact
-    per-group quantile (computable identically in both engines) plus a
-    bounded-error verdict ``within_bound`` = |sketch − exact| / max(|exact|, 1)
-    ≤ 5%. The oracle asserts the verdict TRUE for every row, so a sketch
-    drifting out of its error envelope turns the driver row red. Tighter
-    accuracy + partial/final merge invariance stay pytest-asserted.
+    """T-digest quantile sketches (``constraints/tdigest.py``: a
+    map-side partial per input partition, one fold per group, a
+    row-wise interpolation). The sketch is approximate by design, so its
+    raw value has no SQL mirror — instead the query emits the CHECKABLE
+    CONTRACT of :func:`_quantile_contract`. The oracle asserts
+    ``within_bound`` TRUE for every row, so a sketch drifting out of its
+    error envelope fails the parity check. Tighter accuracy and
+    partitioning invariance stay pytest-asserted.
 
     SKETCH-CONTRACT MINIMUM GROUP SIZE (round-6 ADVICE): the 5%
     relative envelope is calibrated for the correctness tier and up
@@ -1064,7 +1064,16 @@ def q29_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chronominer_spark.constraints.tdigest import tdigest_quantiles
 
     e = t(spark, sf_dir, "events")
-    td = tdigest_quantiles(e, "event_type", "value", _Q29_QS)
+    return _quantile_contract(
+        e, tdigest_quantiles(e, "event_type", "value", _Q29_QS))
+
+
+def _quantile_contract(e: DataFrame, td: DataFrame) -> DataFrame:
+    """q29's checkable sketch contract, shared with q74: for each
+    (event_type, q) of the sketch's ``td`` rows ``(part, q, value)``,
+    the exact quantile over events ``e`` (computable identically in
+    Spark and DuckDB) and ``within_bound`` = |sketch − exact| /
+    max(|exact|, 1) ≤ 5%."""
     exact = (
         e.groupBy(F.col("event_type").alias("part"))
         .agg(F.percentile("value", _Q29_QS).alias("__ps"))
@@ -4317,16 +4326,17 @@ def q74_incremental_tdigest_quantiles(
     """STREAMING-semantics t-digest quantiles, driver-verified: q29's
     per-event-type quantile sketch maintained INCREMENTALLY — events
     ingested as three deterministic micro-batches (event_id % 3)
-    through :class:`IncrementalQuantileDigest`'s centroid-array fold —
-    then checked against q29's exact-quantile bounded-error contract
-    (t-digest merges are mergeable summaries, so the folded digest
-    stays inside the sketch's error envelope over everything ingested;
-    unlike the count-fold twins the fixed point is BOUNDED, not exact,
-    because compression is lossy — hence the contract oracle rather
-    than a value oracle). Oracle IS q29's SQL. State per partition is
-    ≤δ centroids, never O(rows). The q29 sketch-contract minimum group
-    size applies here too (round-6 ADVICE): the 5% envelope holds at
-    sf0.01+ group sizes, not at the sf0.001 smoke tier."""
+    through :class:`IncrementalQuantileDigest`, which folds q29's own
+    t-digest partials batch by batch — then checked against q29's
+    contract (:func:`_quantile_contract`). T-digests are mergeable
+    summaries, so the folded digest stays inside the sketch's error
+    envelope over everything ingested; unlike the count-fold twins the
+    fixed point is BOUNDED, not exact, because compression is lossy —
+    hence the contract oracle rather than a value oracle. Oracle IS
+    q29's SQL. State per partition is O(δ) centroids, never O(rows).
+    The q29 sketch-contract minimum group size applies here too
+    (round-6 ADVICE): the 5% envelope holds at sf0.01+ group sizes, not
+    at the sf0.001 smoke tier."""
     import shutil
     import tempfile
 
@@ -4344,28 +4354,7 @@ def q74_incremental_tdigest_quantiles(
         td = inc.quantiles(_Q29_QS).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    exact = (
-        e.groupBy(F.col("event_type").alias("part"))
-        .agg(F.percentile("value", _Q29_QS).alias("__ps"))
-        .select(
-            "part",
-            F.explode(F.arrays_zip(
-                F.array(*[F.lit(q) for q in _Q29_QS]).alias("q"),
-                F.col("__ps").alias("exact"),
-            )).alias("z"),
-        )
-        .select("part", F.col("z.q").alias("q"), F.col("z.exact").alias("exact"))
-    )
-    return (
-        td.join(exact, ["part", "q"])
-        .select(
-            "part", "q",
-            F.round("exact", 4).alias("exact_value"),
-            ((F.abs(F.col("value") - F.col("exact"))
-              / F.greatest(F.abs(F.col("exact")), F.lit(1.0)))
-             <= _Q29_REL_BOUND).alias("within_bound"),
-        )
-    )
+    return _quantile_contract(e, td)
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

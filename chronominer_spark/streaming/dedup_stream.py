@@ -48,6 +48,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from pyspark.sql import Column
 
+from chronominer_spark.constraints import tdigest
 from chronominer_spark.operators.dedup import (
     band_buckets,
     content_key,
@@ -137,9 +138,9 @@ class MergeableStateFold(StreamFoldBase):
     def _merge(self, union_df: DataFrame) -> DataFrame:
         """Collapse the state∪partial union back to one row per key
         (must carry ``__bucket`` through). Default: the SQL-aggregate
-        merge from :meth:`_merge_exprs`; twins whose state is not a
-        plain SQL aggregate (e.g. t-digest centroid arrays) override
-        this with an ``applyInPandas`` fold instead."""
+        merge from :meth:`_merge_exprs`; a twin whose state is not a
+        plain SQL aggregate overrides this instead (t-digest centroid
+        arrays: ``tdigest.fold`` grouped by key and ``__bucket``)."""
         return (
             union_df.groupBy(*self.key_cols)
             .agg(*self._merge_exprs(),
@@ -723,111 +724,40 @@ class IncrementalCategoricalDrift(MergeableStateFold):
 
 
 class IncrementalQuantileDigest(MergeableStateFold):
-    """Streaming twin of the t-digest quantile path
-    (``constraints/tdigest.py:tdigest_quantiles``, the engine's
-    ``quantiles`` / ``drift_quantile`` substrate): per-partition
-    quantile STATE maintained across micro-batches as t-digest centroid
-    arrays.
+    """Streaming twin of ``constraints/tdigest.py:tdigest_quantiles``:
+    per-partition quantile STATE kept across micro-batches as t-digest
+    centroid arrays, O(partitions × δ), never O(rows).
 
-    T-digests are mergeable summaries: each batch compresses to ≤δ
-    centroids per partition (vectorized numpy inside ``applyInPandas``),
-    and the fold concatenates centroid arrays and re-compresses — so
-    state is O(partitions × δ), never O(rows), and per-batch exchange
-    volume is centroids, not values. Unlike the count-fold twins the
-    fixed point is BOUNDED, not exact: t-digest compression is lossy
-    and pairwise-merge order changes centroids, so the folded digest's
-    quantiles agree with the batch digest (and the exact quantiles)
-    only within the sketch's rank-error envelope — the same checkable
-    contract q29 uses for the batch sketch (pytest + q74 oracle).
-    Commit/replay/bucket mechanics from :class:`MergeableStateFold`;
-    the merge step overrides :meth:`_merge` with a pandas fold.
+    Every step is the batch module's own: a batch's partial is
+    ``fold(partial(batch))``, the commit folds state∪partial with
+    ``fold(..., ("part", "__bucket"))``, and :meth:`quantiles`
+    interpolates the folded state. Unlike the count-fold twins the fixed
+    point is BOUNDED, not exact: compression is lossy and the merge tree
+    differs from the batch plan's, so the folded quantiles match the
+    batch digest (and the exact quantiles) only within the sketch's
+    rank-error envelope — the contract q29 and q74 share.
+    Commit/replay/bucket mechanics from :class:`MergeableStateFold`.
     """
 
     OP_PREFIX = "tdigest"
 
     def __init__(self, spark: SparkSession, state_root: str,
-                 partition_col: str, value_expr: str,
-                 delta: int = 200, n_buckets: int = 16):
+                 partition_col: str, value_expr: str, n_buckets: int = 16):
         super().__init__(spark, state_root, ["part"], n_buckets)
         self.partition_col = partition_col
         self.value_expr = value_expr
-        self.delta = delta
-
-    _STATE_DDL = ("part string, means array<double>, "
-                  "weights array<double>")
 
     def _partial(self, batch_df: DataFrame) -> DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        from chronominer_spark.constraints.tdigest import _compress
-
-        delta = self.delta
-        vals = batch_df.select(
-            F.col(self.partition_col).cast("string").alias("part"),
-            F.expr(self.value_expr).cast("double").alias("v"),
-            F.spark_partition_id().alias("_split"),
-        ).where(F.col("v").isNotNull())
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            v = pdf["v"].to_numpy(dtype=float)
-            m, w = _compress(v, np.ones_like(v), delta)
-            return pd.DataFrame({"part": [pdf["part"].iloc[0]],
-                                 "means": [m.tolist()],
-                                 "weights": [w.tolist()]})
-
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            m = np.concatenate([np.asarray(x) for x in pdf["means"]])
-            w = np.concatenate([np.asarray(x) for x in pdf["weights"]])
-            m, w = _compress(m, w, delta)
-            return pd.DataFrame({"part": [pdf["part"].iloc[0]],
-                                 "means": [m.tolist()],
-                                 "weights": [w.tolist()]})
-
-        partials = vals.groupBy("part", "_split").applyInPandas(
-            build, self._STATE_DDL)
-        return partials.groupBy("part").applyInPandas(
-            fold, self._STATE_DDL)
+        return tdigest.fold(tdigest.partial(
+            batch_df, self.partition_col, self.value_expr))
 
     def _merge(self, union_df: DataFrame) -> DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        from chronominer_spark.constraints.tdigest import _compress
-
-        delta = self.delta
-
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            m = np.concatenate([np.asarray(x) for x in pdf["means"]])
-            w = np.concatenate([np.asarray(x) for x in pdf["weights"]])
-            m, w = _compress(m, w, delta)
-            return pd.DataFrame({"part": [pdf["part"].iloc[0]],
-                                 "means": [m.tolist()],
-                                 "weights": [w.tolist()],
-                                 "__bucket": [pdf["__bucket"].iloc[0]]})
-
-        return union_df.groupBy("part").applyInPandas(
-            fold, self._STATE_DDL + ", __bucket long")
+        return tdigest.fold(union_df, ("part", "__bucket"))
 
     def quantiles(self, qs: list[float]) -> DataFrame:
         """Per-partition quantile estimates from the folded state:
         (part, q, value), one row per requested quantile."""
-        import numpy as np
-        import pandas as pd
-
-        from chronominer_spark.constraints.tdigest import _quantile
-
-        qs_arr = list(qs)
-
-        def interp(pdf: pd.DataFrame) -> pd.DataFrame:
-            m = np.asarray(pdf["means"].iloc[0])
-            w = np.asarray(pdf["weights"].iloc[0])
-            return pd.DataFrame({
-                "part": pdf["part"].iloc[0], "q": qs_arr,
-                "value": [_quantile(m, w, q) for q in qs_arr]})
-
-        return self.table.read().groupBy("part").applyInPandas(
-            interp, "part string, q double, value double")
+        return tdigest.quantiles(self.table.read(), qs)
 
     def result(self, ref_df: DataFrame, qs: list[float],
                max_abs_shift: float) -> DataFrame:
@@ -836,12 +766,10 @@ class IncrementalQuantileDigest(MergeableStateFold):
         folded estimate, the reference's t-digest estimate, and
         ``passed`` = |shift| ≤ ``max_abs_shift``. A partition on only
         one side is uncertifiable (null shift, failed)."""
-        from chronominer_spark.constraints.tdigest import tdigest_quantiles
-
         cur = self.quantiles(qs)
-        ref = tdigest_quantiles(
-            ref_df, self.partition_col, self.value_expr, qs,
-            delta=self.delta).withColumnRenamed("value", "ref_value")
+        ref = tdigest.tdigest_quantiles(
+            ref_df, self.partition_col, self.value_expr, qs
+        ).withColumnRenamed("value", "ref_value")
         j = cur.withColumnRenamed("value", "cur_value") \
             .join(ref, ["part", "q"], "full_outer")
         shift = F.abs(F.col("cur_value") - F.col("ref_value"))

@@ -180,3 +180,50 @@ def test_ref_agg_cache_skips_ref_scans_on_rerun(
     assert len(builds) > n_first, "snapshot advance must rebuild"
     scopes = os.listdir(os.path.join(out, "ref_aggs"))
     assert scopes == [f"snap=4_{suite.suite_hash()[:12]}"]
+
+
+def test_eqdigest_cache_keyed_by_hash_backend(
+    spark, tmp_path, transcripts, ref_snapshot, monkeypatch
+):
+    """The cached reference conversation digests hold content hashes, so
+    their RefAggCache key records which hash backend built them: a rerun
+    of the same (snapshot, suite, wave) under the same backend reads the
+    digests back, and one under another backend rebuilds them instead
+    of comparing against hashes it cannot reproduce."""
+    from chronominer_spark.checkpoint import RefAggCache
+    from chronominer_spark.constraints import engine
+    from chronominer_spark.constraints.spec import (
+        ConstraintSuite,
+        text_equality,
+    )
+    from chronominer_spark.runner import SuiteRunner
+
+    builds: list[str] = []
+    real = RefAggCache.get_or_build
+
+    def spy(self, key, build):
+        if self.load(key) is None:
+            builds.append(key)
+        return real(self, key, build)
+
+    monkeypatch.setattr(RefAggCache, "get_or_build", spy)
+    suite = ConstraintSuite(name="eqdigest_cache",
+                            constraints=(text_equality(digest=True),))
+    out = str(tmp_path / "out")
+
+    def rerun():
+        if os.path.exists(os.path.join(out, "manifest.json")):
+            os.remove(os.path.join(out, "manifest.json"))
+        s = SuiteRunner(spark, suite, out).run(
+            transcripts, ref_snapshot, snapshot_id=1)
+        assert s.status == "complete"
+
+    rerun()
+    assert builds and all(k.startswith("eqdigest|") for k in builds)
+    n_first = len(builds)
+    rerun()
+    assert len(builds) == n_first, "same backend must hit the cache"
+    monkeypatch.setattr(engine, "hash_backend_tag", lambda: "other-hash")
+    rerun()
+    assert len(builds) == 2 * n_first, "another backend must miss"
+    assert all(k.endswith("|other-hash") for k in builds[n_first:])

@@ -1,10 +1,11 @@
 """Tests for fuzzy matching (J1), range repair (W4/W5), chunk slicing
 (L1), t-digest quantiles, and 3-stage JSON extraction (F9)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from chronominer_spark.constraints.tdigest import tdigest_quantiles
+from chronominer_spark.constraints.tdigest import _compress, tdigest_quantiles
 from chronominer_spark.functions.jsonx import extract_json, extract_json_string
 from chronominer_spark.operators.fuzzy import fuzzy_match
 from chronominer_spark.operators.ranges import (
@@ -124,6 +125,38 @@ def test_tdigest_deterministic_across_partitionings(spark, transcripts):
     # stay within the digest's own error bound across partitionings
     for k in va:
         assert abs(va[k] - vb[k]) <= max(5.0, 0.02 * va[k])
+
+
+def test_tdigest_compress_ignores_centroid_order():
+    """Partial digests reach the fold in whatever order the shuffle
+    delivers them. Equal means with different weights must still merge
+    into the same centroids, or the fold is not deterministic."""
+    rng = np.random.default_rng(0)
+    means = rng.integers(0, 20, 2000).astype(float)
+    weights = rng.integers(1, 50, 2000).astype(float)
+    perm = rng.permutation(len(means))
+    m1, w1 = _compress(means, weights)
+    m2, w2 = _compress(means[perm], weights[perm])
+    assert np.array_equal(m1, m2) and np.array_equal(w1, w2)
+
+
+def test_tdigest_plans_one_exchange(spark, transcripts, tmp_path):
+    """The partial is built map-side, so raw values never shuffle: the
+    batch query and a stream micro-batch's partial each plan exactly one
+    exchange, the one that folds centroid arrays."""
+    from chronominer_spark.plans.inspect import count_exchanges
+    from chronominer_spark.streaming.dedup_stream import (
+        IncrementalQuantileDigest,
+    )
+
+    # a plain scan: the cached fixture's plan carries datagen's exchanges
+    transcripts.write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
+    td = tdigest_quantiles(df, "pbucket", "length(text)", [0.5])
+    assert count_exchanges(td) == 1
+    inc = IncrementalQuantileDigest(
+        spark, str(tmp_path / "td"), "pbucket", "length(text)")
+    assert count_exchanges(inc._partial(df)) == 1
 
 
 def test_json_extraction_three_stages(spark):

@@ -701,7 +701,7 @@ def test_incremental_tdigest_matches_batch_within_envelope(spark, tmp_path):
         "part string, value double")
 
     inc = IncrementalQuantileDigest(
-        spark, str(tmp_path / "td_state"), "part", "value", delta=200)
+        spark, str(tmp_path / "td_state"), "part", "value")
     for i in range(3):
         inc.process_batch(cur.where(F.col("b") == i).drop("b"), i)
     assert len(inc.table.snapshots()) == 3

@@ -22,7 +22,11 @@ from chronominer_spark.operators.dedup import (
     simhash,
 )
 from chronominer_spark.operators.evalmetrics import field_metrics, micro_macro_summary
-from chronominer_spark.operators.similarity import brute_force_topk, lsh_topk
+from chronominer_spark.operators.similarity import (
+    brute_force_topk,
+    embedding_near_dups,
+    lsh_topk,
+)
 from chronominer_spark.operators.textstats import (
     language_id,
     quality_features,
@@ -170,7 +174,8 @@ def test_lsh_topk_recall_on_clustered_vectors(vectors):
 def test_lsh_topk_broadcast_vectors_identical(vectors, spark):
     """Round-7 optimization guard: broadcast_vectors=True resolves
     vectors from broadcast matrices inside the cosine UDF instead of
-    per-pair re-attach joins — outputs must be row-identical, including
+    per-pair re-attach joins — outputs of lsh_topk and of its
+    embedding_near_dups wrapper must be row-identical, including
     NULL-vector (NULL cosine), zero-norm (0.0) and ragged-length edge
     rows routed through the scalar fallback."""
     from pyspark.sql import functions as F
@@ -185,6 +190,11 @@ def test_lsh_topk_broadcast_vectors_identical(vectors, spark):
                      broadcast_vectors=True)
     assert sorted(map(tuple, base.collect())) \
         == sorted(map(tuple, bcast.collect()))
+    # embedding_near_dups passes the flag through: the same pairs
+    near = [sorted(map(tuple, embedding_near_dups(
+        vectors, dim=8, n_bits=4, n_tables=8, broadcast_vectors=b).collect()))
+        for b in (False, True)]
+    assert near[0] and near[0] == near[1]
 
     # edge rows: NULL vector, zero vector, ragged length
     edge = spark.createDataFrame(
