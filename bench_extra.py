@@ -176,21 +176,22 @@ def cmd_phases() -> None:
         .repartition(spark.sparkContext.defaultParallelism)
     p = res["q19"] = {}
     print(f"  q19 documents rows: {d.count()}", file=sys.stderr)
-    sh = D.shingle_docs(d, "doc_id", "text", k=3) \
+    fh = D.shingle_hash_docs(d, "doc_id", "text", k=3) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    p["shingle_persist"] = _timed(spark, "q19:shingle", lambda: sh.count())
+    p["shingle_persist"] = _timed(spark, "q19:shingle", lambda: fh.count())
     sigs = D.minhash_signatures(d, "doc_id", "text", k=3, num_hashes=16,
-                                shingles_df=sh)
+                                hash_df=fh)
     p["signatures_noop"] = _timed(spark, "q19:sigs", lambda: _noop(sigs))
     pairs = D.lsh_candidate_pairs(sigs, "doc_id", bands=8, num_hashes=16)
     p["cand_pairs"] = _timed(spark, "q19:cand", lambda: pairs.count())
     print(f"  q19 candidate pairs: {pairs.count()}", file=sys.stderr)
     verified = D.ngram_jaccard_pairs(d, "doc_id", "text", pairs, k=3,
-                                     shingles_df=sh, min_jaccard=0.2)
+                                     hash_df=fh, min_jaccard=0.2,
+                                     pairs_materialized=True)
     p["verify"] = _timed(
         spark, "q19:verify",
         lambda: _noop(verified.where(F.col("jaccard") >= 0.2)))
-    sh.unpersist()
+    fh.unpersist()
     p["full_query"] = _timed(
         spark, "q19:full",
         lambda: QUERIES["q19_lsh_jaccard_pairs"](spark, SF_DIR).count())

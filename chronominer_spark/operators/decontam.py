@@ -12,9 +12,11 @@ small (10^4..10^6 docs -> ~10^5..10^7 distinct shingles), so the
 benchmark shingle set is BROADCAST and the corpus side never shuffles
 text — the only exchange is the per-doc hit-count groupBy, which
 map-side-combines to at most one row per (doc, map partition). The
-corpus is shingled exactly once (same ``word_shingles`` expression the
-dedup family shares), exploded, broadcast-hash-left-joined against the
-benchmark set, and counted. Nothing is O(corpus x benchmark).
+corpus is shingled exactly once (:func:`~chronominer_spark.operators.
+dedup.shingle_docs`, the dedup family's one tokenizer emitting the
+shingle strings: the match against the benchmark set is an exact string
+match, not a hash match), exploded, broadcast-hash-left-joined against
+the benchmark set, and counted. Nothing is O(corpus x benchmark).
 """
 
 from __future__ import annotations
@@ -60,7 +62,7 @@ def decontaminate(
     Plan: shingle corpus once -> explode -> broadcast left join against
     the benchmark shingle set -> single hash-aggregate per doc. The
     per-doc shingle count is recovered as ``count(*)`` of the exploded
-    rows (``word_shingles`` is distinct by construction), so the corpus
+    rows (the shingle set is distinct by construction), so the corpus
     is scanned exactly once.
     """
     if bench_shingles_df is None:

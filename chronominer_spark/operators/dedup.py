@@ -1,21 +1,32 @@
 """Deduplication family for large-scale training-data pipelines.
 
 Exact and near-dup detection over a documents table, all expressed as
-DataFrame plans that scale by shuffling only hashes/shingles, never by
+DataFrame plans that scale by shuffling only hashes, never by
 comparing all pairs:
 
 - :func:`exact_dedup`          hash-groupBy (md5 of normalized text)
-- :func:`minhash_signatures`   word-shingle MinHash; hashes are
-  ``md5(seed:shingle)`` strings so results are engine-portable (the same
-  signature is computable in DuckDB for the correctness oracle)
+- :func:`shingle_hash_docs`    the one shingle representation of the
+  near-dup family: per doc, the md5 halves of its distinct word
+  k-shingles
+- :func:`minhash_signatures`   Kirsch–Mitzenmacher MinHash over those
+  halves; md5-derived, so engine-portable (the same signature is
+  computable in DuckDB for the correctness oracle)
 - :func:`lsh_candidate_pairs`  banded LSH over the signature -> candidate
   pairs via bucket self-join (never O(n^2))
-- :func:`ngram_jaccard_pairs`  exact Jaccard on shingle sets for a given
-  candidate pair set (verification step after LSH)
+- :func:`ngram_jaccard_pairs`  exact Jaccard on shingle-hash sets for a
+  given candidate pair set (verification step after LSH)
+- :func:`prefix_jaccard_pairs` exact all-pairs Jaccard join by prefix
+  filtering
 - :func:`simhash`              64-bit SimHash via per-bit majority vote,
   computed with JVM bit ops (no UDF)
-- :func:`embedding_near_dups`  cosine near-dup pairs over an embedding
-  column via LSH-style random-hyperplane bucketing + in-bucket verify
+
+The near-dup family owns ONE tokenizer (:func:`_shingles`), ONE
+shingle hash (:func:`_shingle_halves`) and ONE MinHash fold
+(:func:`_minhash_fold`); every Arrow UDF here is a thin wrapper over
+them. :func:`word_shingles` is the Catalyst form of the tokenizer,
+kept as the reference the kernels are pytest-asserted against.
+Embedding near-dups live in
+:func:`chronominer_spark.operators.similarity.embedding_near_dups`.
 
 The reference's dedup is key-based last-wins (``/root/reference/modules/
 extract/batch_output.py:108-128``) — covered by
@@ -26,7 +37,9 @@ needs.
 
 from __future__ import annotations
 
+import hashlib
 import logging
+import re
 
 import numpy as np
 import pandas as pd
@@ -85,12 +98,14 @@ def exact_dedup(
 
 
 def word_shingles(text_col, k: int = 3) -> F.Column:
-    """Distinct word k-shingles of the normalized text (array<string>).
+    """Distinct word k-shingles of the normalized text (array<string>),
+    as a Catalyst expression: the reference the Arrow kernel below is
+    pytest-asserted against, and the expression the DuckDB oracles
+    mirror.
 
     Tokenization is a single regex split on ``\\s+`` over
     lower(trim(text)) — equivalent to collapsing whitespace first but
-    one regex pass instead of two (this is the hot path of the dedup
-    family)."""
+    one regex pass instead of two."""
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     words = F.split(F.lower(F.trim(F.coalesce(c, F.lit("")))), r"\s+")
     n = F.size(words)
@@ -103,14 +118,16 @@ def word_shingles(text_col, k: int = 3) -> F.Column:
     )
 
 
-def _np_shingles_udf(k: int):
-    """Vectorized (Arrow) twin of :func:`word_shingles` — one Python
-    pass per batch instead of the interpreted
-    split→transform→array_join→array_distinct chain per row (guide
-    §4.2; measured 8.2 s → ~2 s on the 50k-doc sf1.0 shingle stage).
+MINHASH_PRIME = 1_000_000_007
 
-    Semantics mirror the Catalyst expression exactly for the data this
-    engine processes:
+_WS = re.compile(r"\s+", re.ASCII)
+
+
+def _shingles(text: str | None, k: int) -> list[str]:
+    """The one tokenizer: the plain-Python twin of :func:`word_shingles`
+    for one text. Semantics mirror the Catalyst expression exactly for
+    the data this engine processes:
+
     - ``lower(trim(coalesce(text, '')))`` → NULL text becomes '',
       ``str.strip(' ')`` strips the 0x20 space char only (Spark's
       ``trim``), ``str.lower()`` matches UTF8String.toLowerCase for
@@ -123,26 +140,74 @@ def _np_shingles_udf(k: int):
     - k-shingles joined with ' ', first-occurrence-order dedup
       (``array_distinct`` preserves first occurrence; ``dict.fromkeys``
       ditto); docs with fewer than k words collapse to the single
-      whole-doc shingle.
-    Equivalence is pytest-asserted against the Catalyst fold on edge
-    fixtures (test_np_shingle_minhash_match_catalyst)."""
-    import re
+      whole-doc shingle."""
+    words = _WS.split(("" if text is None else text).strip(" ").lower())
+    n = len(words)
+    if n < k:
+        return [" ".join(words)]
+    return list(dict.fromkeys(
+        " ".join(words[i:i + k]) for i in range(n - k + 1)))
 
-    ws = re.compile(r"\s+", re.ASCII)
+
+def _shingle_halves(
+    text: str | None, k: int,
+) -> tuple[list[int], list[int], list[int]]:
+    """The one shingle hash: md5 every shingle of one text ONCE and
+    return three parallel lists over the deduped shingle set —
+
+    - ``h1``/``h2``: the two 60-bit md5 halves mod ``MINHASH_PRIME``,
+      exactly ``conv(substring(md5(s), 1, 15), 16, 10) % P`` /
+      ``substring(md5(s), 17, 15)`` — the Kirsch–Mitzenmacher inputs
+      of :func:`_minhash_fold` (and of the q18/q19 DuckDB oracles);
+    - ``hs``: the raw first 60-bit md5 half — a distinct-preserving
+      (w.h.p., ~s²·2⁻⁶⁰ per doc pair) stand-in for the shingle string
+      in Jaccard verification and in the prefix index (see the
+      collision caveat on :func:`ngram_jaccard_pairs`)."""
+    P = MINHASH_PRIME
+    h1: list[int] = []
+    h2: list[int] = []
+    hs: list[int] = []
+    for s in _shingles(text, k):
+        d = hashlib.md5(s.encode("utf-8")).hexdigest()
+        a = int(d[0:15], 16)
+        h1.append(a % P)
+        h2.append(int(d[16:31], 16) % P)
+        hs.append(a)
+    return h1, h2, hs
+
+
+def _minhash_fold(h1, h2, lens: list, num_hashes: int) -> pd.Series:
+    """The one MinHash fold over an Arrow batch: ``h1``/``h2`` hold the
+    md5 halves of every row's shingles, concatenated row after row, and
+    ``lens[i]`` is row i's shingle count (None for a NULL row). Per row,
+    ``sig[i] = min over shingles of (h1 + i·h2) mod P`` — one flat
+    numpy broadcast + ``minimum.reduceat`` for the whole batch. Integer
+    math only, so it is bit-identical to the Catalyst ``aggregate``
+    fold (pytest-asserted). A NULL row yields a NULL signature; an
+    EMPTY row yields the all-``MINHASH_PRIME`` fold init."""
+    P = MINHASH_PRIME
+    init = [P] * num_hashes
+    out = [None if n is None else init for n in lens]
+    rows = [i for i, n in enumerate(lens) if n]
+    if rows:
+        h1 = np.asarray(h1, dtype=np.int64)[:, None]
+        h2 = np.asarray(h2, dtype=np.int64)[:, None]
+        perms = (h1 + np.arange(num_hashes, dtype=np.int64) * h2) % P
+        starts = np.cumsum([0] + [lens[i] for i in rows[:-1]])
+        mins = np.minimum.reduceat(perms, starts, axis=0).tolist()
+        for i, m in zip(rows, mins):
+            out[i] = m
+    return pd.Series(out)
+
+
+def _np_shingles_udf(k: int):
+    """Arrow UDF: the shingle strings of :func:`_shingles` (array<string>).
+    Only decontamination needs the strings — its exact n-gram match
+    against a benchmark set is a string contract."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def shingles(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            s = ("" if t is None else t).strip(" ").lower()
-            words = ws.split(s)
-            n = len(words)
-            if n >= k:
-                sh = [" ".join(words[i:i + k]) for i in range(n - k + 1)]
-                out.append(list(dict.fromkeys(sh)))
-            else:
-                out.append([" ".join(words)])
-        return pd.Series(out)
+        return pd.Series([_shingles(t, k) for t in texts])
 
     return shingles
 
@@ -150,48 +215,18 @@ def _np_shingles_udf(k: int):
 def shingle_docs(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
-    """One row per doc: (id_col, ``shingles`` array<string>). Compute
-    once and feed both :func:`minhash_signatures` and
-    :func:`ngram_jaccard_pairs` (via their ``shingles_df`` parameter) —
-    shingling is the hot path of the dedup family and must not run
-    twice per pipeline. Uses the vectorized Arrow twin of
-    :func:`word_shingles` (identical output, pytest-asserted)."""
+    """One row per doc: (id_col, ``shingles`` array<string>), the
+    :func:`word_shingles` set computed by the Arrow tokenizer. Used by
+    :mod:`~chronominer_spark.operators.decontam`; the near-dup family
+    reads :func:`shingle_hash_docs` instead."""
     return df.select(
         F.col(id_col), _np_shingles_udf(k)(F.col(text_col)).alias("shingles")
     )
 
 
-MINHASH_PRIME = 1_000_000_007
-
-
 def _np_shingle_hash_udf(k: int):
-    """ONE Arrow pass fusing shingling + per-shingle md5 (guide §4.2 /
-    §1.2: the md5 of every shingle was computed twice per pipeline —
-    once in :func:`_np_minhash_udf` for signatures and again (as JVM
-    ``xxhash64``) for the verify stage's intersection arrays). Emits,
-    per doc, three parallel long arrays over the FIRST-OCCURRENCE-
-    DEDUPED shingle set:
-
-    - ``h1``/``h2``: the two 60-bit md5 halves mod ``MINHASH_PRIME`` —
-      exactly the Kirsch–Mitzenmacher inputs of
-      :func:`_np_minhash_udf`, so signatures built from them are
-      bit-identical to the string path (pytest-asserted);
-    - ``hs``: the raw first 60-bit md5 half — a distinct-preserving
-      (w.h.p., ~s²·2⁻⁶⁰ per doc pair vs the previous xxhash64's
-      ~s²·2⁻⁶⁴; both negligible and both inside the long-documented
-      hash-collision caveat on :func:`ngram_jaccard_pairs`) stand-in
-      for the shingle string in ``array_intersect`` verification.
-
-    Shingle/tokenization semantics are byte-identical to
-    :func:`_np_shingles_udf` (same strip/lower/ASCII-``\\s`` split and
-    ``dict.fromkeys`` dedup). The persisted frame carries ~3×8 B per
-    shingle instead of the shingle string — smaller cache, and the
-    verify stage needs no further hashing at all."""
-    import hashlib
-    import re
-
-    ws = re.compile(r"\s+", re.ASCII)
-    P = MINHASH_PRIME
+    """Arrow UDF: :func:`_shingle_halves` per text, as a struct of three
+    parallel long arrays ``h1``/``h2``/``hs``."""
 
     @F.pandas_udf(T.StructType([
         T.StructField("h1", T.ArrayType(T.LongType())),
@@ -199,32 +234,8 @@ def _np_shingle_hash_udf(k: int):
         T.StructField("hs", T.ArrayType(T.LongType())),
     ]))
     def fused(texts: pd.Series) -> pd.DataFrame:
-        h1s: list = []
-        h2s: list = []
-        hss: list = []
-        md5 = hashlib.md5
-        for t in texts:
-            s = ("" if t is None else t).strip(" ").lower()
-            words = ws.split(s)
-            n = len(words)
-            if n >= k:
-                sh = list(dict.fromkeys(
-                    " ".join(words[i:i + k]) for i in range(n - k + 1)))
-            else:
-                sh = [" ".join(words)]
-            h1: list = []
-            h2: list = []
-            hs: list = []
-            for x in sh:
-                d = md5(x.encode("utf-8")).hexdigest()
-                a = int(d[0:15], 16)
-                h1.append(a % P)
-                h2.append(int(d[16:31], 16) % P)
-                hs.append(a)
-            h1s.append(h1)
-            h2s.append(h2)
-            hss.append(hs)
-        return pd.DataFrame({"h1": h1s, "h2": h2s, "hs": hss})
+        return pd.DataFrame([_shingle_halves(t, k) for t in texts],
+                            columns=["h1", "h2", "hs"])
 
     return fused
 
@@ -233,12 +244,13 @@ def shingle_hash_docs(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
     """One row per doc: (id_col, ``__h1``, ``__h2``, ``__hs``
-    array<long>) — the fused shingle+hash frame (see
-    :func:`_np_shingle_hash_udf`). Compute once, persist, and feed both
-    :func:`minhash_signatures` (via ``kh_df``) and
-    :func:`ngram_jaccard_pairs` (via ``hash_df``): the corpus is then
-    tokenized AND hashed exactly once for the whole
-    signature→band→verify pipeline."""
+    array<long>) — the shingle representation the whole near-dup family
+    reads (see :func:`_shingle_halves`). Compute once, persist, and pass
+    it as ``hash_df`` to :func:`minhash_signatures`,
+    :func:`ngram_jaccard_pairs` and :func:`prefix_jaccard_pairs`: the
+    corpus is then tokenized AND hashed exactly once for the whole
+    signature→band→verify pipeline, and the cache holds ~3×8 B per
+    shingle instead of the shingle string."""
     return df.select(
         F.col(id_col), _np_shingle_hash_udf(k)(F.col(text_col)).alias("__f")
     ).select(
@@ -249,134 +261,73 @@ def shingle_hash_docs(
     )
 
 
+def _np_minhash_from_halves_udf(num_hashes: int):
+    """Arrow UDF: :func:`_minhash_fold` over the ``__h1``/``__h2``
+    arrays of :func:`shingle_hash_docs` — zero tokenization or hashing."""
+
+    def flat(rows: pd.Series) -> np.ndarray:
+        return np.concatenate([np.empty(0, dtype=np.int64),
+                               *(a for a in rows if a is not None)])
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def sig(h1_rows: pd.Series, h2_rows: pd.Series) -> pd.Series:
+        lens = [None if a is None else len(a) for a in h1_rows]
+        return _minhash_fold(flat(h1_rows), flat(h2_rows), lens, num_hashes)
+
+    return sig
+
+
+def _np_minhash_text_udf(k: int, num_hashes: int):
+    """Arrow UDF: raw text → signature in ONE Python pass
+    (:func:`_shingle_halves` then :func:`_minhash_fold`), so a raw-text
+    signature plan holds a single ``ArrowEvalPython`` node. Routing it
+    through :func:`shingle_hash_docs` would read a struct field between
+    two UDFs, which Spark cannot chain: two Python stages per batch."""
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def sig(texts: pd.Series) -> pd.Series:
+        h1: list[int] = []
+        h2: list[int] = []
+        lens: list[int] = []
+        for t in texts:
+            a, b, _ = _shingle_halves(t, k)
+            h1 += a
+            h2 += b
+            lens.append(len(a))
+        return _minhash_fold(h1, h2, lens, num_hashes)
+
+    return sig
+
+
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str,
     k: int = 3, num_hashes: int = 16,
-    shingles_df: DataFrame | None = None,
-    kh_df: DataFrame | None = None,
+    hash_df: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document MinHash signature via Kirsch–Mitzenmacher double
     hashing: each shingle is md5'd ONCE, split into two 60-bit halves
     (h1, h2), and the i-th permutation is ``(h1 + i·h2) mod p`` —
     ``sig[i] = min`` over shingles. One md5 per shingle instead of
-    ``num_hashes`` md5s (16× less hashing on the hot path) while staying
-    engine-portable: DuckDB reproduces it with
-    ``('0x' || substr(md5(s), ...))::UBIGINT`` (see the q18 oracle).
-    One row per doc: (id, sig array<long>).
+    ``num_hashes`` md5s while staying engine-portable: DuckDB
+    reproduces it with ``('0x' || substr(md5(s), ...))::UBIGINT`` (see
+    the q18 oracle). One row per doc: (id, signature array<long>).
 
-    Pass ``shingles_df`` (from :func:`shingle_docs`) to reuse an
-    already-computed (ideally persisted) shingle frame.
-
-    The signature is computed by a vectorized Arrow twin of the
-    reference Catalyst fold (md5 once per shingle, all ``num_hashes``
-    permutation mins in one numpy pass — guide §4.2): pure integer
-    math, so the output is bit-identical by construction and
-    pytest-asserted against the fold. Edge semantics preserved: an
-    EMPTY shingle array yields the all-``MINHASH_PRIME`` init
-    signature; a NULL array yields a NULL signature.
-
-    ``kh_df`` (from :func:`shingle_hash_docs`, ideally persisted) goes
-    one step further than ``shingles_df``: the per-shingle md5 halves
-    are already computed, so the signature is a pure numpy
-    permutation-min over the ``__h1``/``__h2`` arrays — no second
-    tokenization or hashing pass at all. Same integers in, same
-    fold → bit-identical signatures (pytest-asserted)."""
-    if kh_df is not None:
-        return kh_df.select(
+    Pass ``hash_df`` (from :func:`shingle_hash_docs`, ideally
+    persisted) to fold its precomputed md5 halves; otherwise the text
+    is shingled, hashed and folded in one Arrow pass. Both paths run
+    the same tokenizer, hash and fold, so their signatures are
+    bit-identical."""
+    if hash_df is not None:
+        return hash_df.select(
             F.col(id_col),
             _np_minhash_from_halves_udf(num_hashes)(
                 F.col("__h1"), F.col("__h2")).alias("signature"),
         )
-    if shingles_df is not None:
-        sh = shingles_df.select(F.col(id_col), F.col("shingles").alias("__sh"))
-    else:
-        sh = df.select(
-            F.col(id_col), _np_shingles_udf(k)(F.col(text_col)).alias("__sh"))
-    return sh.select(
+    return df.select(
         F.col(id_col),
-        _np_minhash_udf(num_hashes)(F.col("__sh")).alias("signature"),
+        _np_minhash_text_udf(k, num_hashes)(F.col(text_col))
+        .alias("signature"),
     )
-
-
-def _np_minhash_udf(num_hashes: int):
-    """Vectorized Kirsch–Mitzenmacher MinHash: md5 each shingle once,
-    split the hex digest into two 60-bit halves mod P (exactly
-    ``conv(substring(md5(s), 1, 15), 16, 10) % P`` /
-    ``substring(d, 17, 15)``), then one numpy
-    ``(h1 + i·h2) mod P`` broadcast + segment-min per Arrow batch.
-    Integer math only — bit-identical to the Catalyst fold it
-    replaces (pytest-asserted)."""
-    import hashlib
-
-    P = MINHASH_PRIME
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig(shingle_rows: pd.Series) -> pd.Series:
-        idx: list[int] = []          # row index per shingle
-        h1s: list[int] = []
-        h2s: list[int] = []
-        out: list = [None] * len(shingle_rows)
-        init = [P] * num_hashes
-        for i, row in enumerate(shingle_rows):
-            if row is None:
-                continue             # NULL array -> NULL signature
-            out[i] = init            # EMPTY array -> fold init values
-            for s in row:
-                d = hashlib.md5(s.encode("utf-8")).hexdigest()
-                idx.append(i)
-                h1s.append(int(d[0:15], 16) % P)
-                h2s.append(int(d[16:31], 16) % P)
-        if h1s:
-            h1 = np.asarray(h1s, dtype=np.int64)[:, None]
-            h2 = np.asarray(h2s, dtype=np.int64)[:, None]
-            perms = (h1 + np.arange(num_hashes, dtype=np.int64) * h2) % P
-            ridx = np.asarray(idx, dtype=np.int64)
-            starts = np.searchsorted(ridx, np.unique(ridx))
-            mins = np.minimum.reduceat(perms, starts, axis=0)
-            for j, i in enumerate(np.unique(ridx)):
-                out[i] = mins[j].tolist()
-        return pd.Series(out)
-
-    return sig
-
-
-def _np_minhash_from_halves_udf(num_hashes: int):
-    """Kirsch–Mitzenmacher permutation-min over PRE-HASHED md5 halves
-    (the ``__h1``/``__h2`` arrays of :func:`shingle_hash_docs`): one
-    flat numpy ``(h1 + i·h2) mod P`` broadcast + ``minimum.reduceat``
-    per Arrow batch and zero hashing. Identical integer math to
-    :func:`_np_minhash_udf` — bit-identical signatures, same
-    NULL-array → NULL / empty-array → all-``P`` init edge semantics."""
-    P = MINHASH_PRIME
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig(h1_rows: pd.Series, h2_rows: pd.Series) -> pd.Series:
-        out: list = [None] * len(h1_rows)
-        init = [P] * num_hashes
-        idx: list = []
-        h1_parts: list = []
-        h2_parts: list = []
-        for i, (a, b) in enumerate(zip(h1_rows, h2_rows)):
-            if a is None:
-                continue
-            out[i] = init
-            if len(a):
-                idx.append(np.full(len(a), i, dtype=np.int64))
-                h1_parts.append(np.asarray(a, dtype=np.int64))
-                h2_parts.append(np.asarray(b, dtype=np.int64))
-        if h1_parts:
-            h1 = np.concatenate(h1_parts)[:, None]
-            h2 = np.concatenate(h2_parts)[:, None]
-            perms = (h1 + np.arange(num_hashes, dtype=np.int64) * h2) % P
-            ridx = np.concatenate(idx)
-            uniq = np.unique(ridx)
-            starts = np.searchsorted(ridx, uniq)
-            mins = np.minimum.reduceat(perms, starts, axis=0)
-            for j, i in enumerate(uniq):
-                out[i] = mins[j].tolist()
-        return pd.Series(out)
-
-    return sig
 
 
 BUCKET_SCHEME = "xxhash64-v1"
@@ -527,15 +478,14 @@ def lsh_candidate_pairs(
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str,
     pairs: DataFrame, k: int = 3,
-    shingles_df: DataFrame | None = None,
     min_jaccard: float | None = None,
     hash_df: DataFrame | None = None,
     pairs_materialized: bool = False,
 ) -> DataFrame:
     """Jaccard similarity on word k-shingle sets for the given candidate
     (id_a, id_b) pairs — the verify step after LSH. Computed
-    set-algebraically: |A∩B| via an exploded shingle equi-join restricted
-    to candidate pairs, |A∪B| = |A|+|B|−|A∩B|.
+    set-algebraically: |A∩B| by a per-pair ``array_intersect`` of the
+    two shingle-hash arrays, |A∪B| = |A|+|B|−|A∩B|.
 
     ``min_jaccard`` arms a DETERMINISTIC size-bound prefilter (round-5
     verdict item 8): ``|A∩B| ≤ min(|A|,|B|)`` implies ``jaccard ≤
@@ -551,19 +501,13 @@ def ngram_jaccard_pairs(
     With ``min_jaccard=None`` every candidate pair is verified and returned
     (below-threshold rows included), the previous contract.
 
-    The intersection join ships 64-bit ``xxhash64`` shingle hashes, not
-    the shingle strings (~3× less shuffle), so the result is exact only
-    up to hash collisions: a colliding pair of distinct shingles across
-    a candidate pair inflates |A∩B| by 1. With s shingles per doc the
-    per-pair false-intersection probability is ~s²·2⁻⁶⁴ — negligible at
-    corpus scale but not zero; callers needing collision-free Jaccard
-    should pass the strings through ``shingles_df`` verbatim and join on
-    them (at ~3× the shuffle cost).
-
-    Pass ``shingles_df`` (from :func:`shingle_docs`, ideally persisted)
-    when the pipeline already shingled the corpus for MinHash — the
-    corpus is then shingled once for the whole signature→band→verify
-    pipeline instead of twice.
+    The intersection runs on the 60-bit md5-half ``hs`` shingle hashes
+    of :func:`shingle_hash_docs`, not the shingle strings (~3× less
+    shuffle), so the result is exact only up to hash collisions: a
+    colliding pair of distinct shingles across a candidate pair
+    inflates |A∩B| by 1. With s shingles per doc the per-pair
+    false-intersection probability is ~s²·2⁻⁶⁰ — negligible at corpus
+    scale but not zero.
 
     Plan discipline (round 7): the candidate list is referenced by
     several plan branches (participating ids, size prefilter,
@@ -578,13 +522,13 @@ def ngram_jaccard_pairs(
     shingle cache is filtered in place and the exploded shingle table
     is never shuffled for the semi-restrictions.
 
-    ``hash_df`` (from :func:`shingle_hash_docs`, ideally persisted)
-    supplies the per-shingle 60-bit md5-half arrays directly: the
-    verify stage then does NO tokenization or hashing at all — sizes
-    come from ``size(__hs)`` (the fused pass dedups shingles before
-    hashing, so sizes match the string path) and the intersection runs
-    on ``__hs`` verbatim (same w.h.p.-exact contract as hashed
-    strings; see the collision caveat above).
+    Pass ``hash_df`` (from :func:`shingle_hash_docs`, ideally
+    persisted) when the pipeline already hashed the corpus for MinHash:
+    the verify stage then does NO tokenization or hashing at all. Without
+    it, only the docs that participate in a candidate pair are shingled
+    and hashed, by the same kernel. Sizes are ``size(__hs)`` (the
+    shingles are deduped before hashing, so they equal the
+    :func:`word_shingles` set sizes).
     ``pairs_materialized=True`` skips the defensive eager checkpoint
     when the caller's pair frame is already materialized (e.g. the
     checkpointed output of :func:`lsh_candidate_pairs`) — one fewer
@@ -599,27 +543,16 @@ def ngram_jaccard_pairs(
         .union(pairs.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    prehashed = hash_df is not None
-    if prehashed:
-        sh = (
-            hash_df.select(F.col(id_col).alias("id"), "__hs")
-            .join(participating, on="id", how="left_semi")
-            .withColumn("__n", F.size("__hs"))
-        )
-    elif shingles_df is not None:
-        sh = (
-            shingles_df.select(F.col(id_col).alias("id"),
-                               F.col("shingles").alias("__sh"))
-            .join(participating, on="id", how="left_semi")
-            .withColumn("__n", F.size("__sh"))
-        )
-    else:
-        sh = (
-            df.select(F.col(id_col).alias("id"), F.col(text_col))
-            .join(participating, on="id", how="left_semi")
-            .select("id", word_shingles(text_col, k).alias("__sh"))
-            .withColumn("__n", F.size("__sh"))
-        )
+    if hash_df is None:
+        hash_df = shingle_hash_docs(
+            df.join(participating.select(F.col("id").alias(id_col)),
+                    on=id_col, how="left_semi"),
+            id_col, text_col, k)
+    sh = (
+        hash_df.select(F.col(id_col).alias("id"), "__hs")
+        .join(participating, on="id", how="left_semi")
+        .withColumn("__n", F.size("__hs"))
+    )
     sizes = sh.select("id", "__n")
 
     if min_jaccard is not None:
@@ -657,7 +590,7 @@ def ngram_jaccard_pairs(
                                F.col("__n").alias("nb")), "id_b")
         )
 
-    # |A∩B| on 64-bit shingle hashes (same distinct counts as strings
+    # |A∩B| on 60-bit shingle hashes (same distinct counts as strings
     # w.h.p. — the long-documented collision caveat), computed per pair
     # with array_intersect after attaching the hash arrays to the
     # broadcast pair set. The previous formulation exploded every
@@ -666,11 +599,7 @@ def ngram_jaccard_pairs(
     # doc's hash array exactly once through two pair-attach joins and
     # never exchanges per-shingle rows (guide §2.3/§8: decide on
     # lightweight proxies, move payloads once).
-    if prehashed:
-        harr = sh.select("id", "__hs")
-    else:
-        harr = sh.select(
-            "id", F.transform("__sh", lambda s: F.xxhash64(s)).alias("__hs"))
+    harr = sh.select("id", "__hs")
     inter = (
         F.broadcast(pairs.select("id_a", "id_b"))
         .join(harr.select(F.col("id").alias("id_a"),
@@ -696,8 +625,7 @@ def ngram_jaccard_pairs(
 def prefix_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str,
     threshold: float, k: int = 3,
-    shingles_df: DataFrame | None = None,
-    hot_token_warn: int | None = None,
+    hash_df: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT all-pairs Jaccard self-join via prefix filtering (the
     AllPairs/PPJoin family of set-similarity joins) — guaranteed to
@@ -713,56 +641,36 @@ def prefix_jaccard_pairs(
     shingles (dropping the last n-p elements of A can erase at most
     n-p intersections, and J >= t forces the intersection to be larger
     than that). So candidate generation = self-join on PREFIX tokens
-    only, then exact verification — never O(n²) and never lossy.
+    only, then exact verification — never O(n²) and never lossy. The
+    argument holds for ANY global total order, so the emitted pairs do
+    not depend on which one is chosen.
 
-    Scale posture (100 TB): the global order is ascending document
-    frequency (ties on the shingle string), so prefixes hold each
-    doc's RAREST shingles — posting lists in the prefix inverted index
-    are short by construction, and the index itself holds only
+    Scale posture (100 TB): tokens are the ``__hs`` shingle hashes of
+    :func:`shingle_hash_docs` (pass it as ``hash_df``, ideally
+    persisted, to share it with the verify stage) and the global order
+    is ascending document frequency, ties on the hash, so prefixes hold
+    each doc's RAREST shingles — posting lists in the prefix inverted
+    index are short by construction, and the index itself holds only
     ~(1-t)·total tokens. The size filter
     ``min(na, nb) >= t * max(na, nb)`` (a necessary condition for
     J >= t) prunes candidates before the distinct. The per-doc prefix
     is selected with a window partitioned by doc id — bounded,
     doc-sized groups, no global sort. Verification
     (:func:`ngram_jaccard_pairs`) runs only over surviving candidate
-    ids. ``hot_token_warn`` (opt-in: it costs one extra eager pass
-    over the prefix index) logs any prefix token whose posting list
-    still exceeds the cap (a stop-shingle slipping into prefixes — a
-    symptom of k too small for the corpus), without dropping it:
-    exactness is the contract here.
-
-    The frequency-ascending order is engine-portable (count, then
-    binary string comparison), so a SQL engine reproduces the exact
-    same prefixes — see the q45 DuckDB oracle."""
+    ids. The q45 DuckDB oracle orders its prefixes by (frequency,
+    shingle string) instead and reaches the same pair set."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    if shingles_df is not None:
-        sh = shingles_df.select(F.col(id_col).alias("id"),
-                                F.col("shingles").alias("__sh"))
-    else:
-        sh = df.select(F.col(id_col).alias("id"),
-                       word_shingles(text_col, k).alias("__sh"))
-    ex = sh.select(
-        "id", F.size("__sh").alias("n"), F.explode("__sh").alias("tok"))
+    if hash_df is None:
+        hash_df = shingle_hash_docs(df, id_col, text_col, k)
+    ex = hash_df.select(
+        F.col(id_col).alias("id"), F.size("__hs").alias("n"),
+        F.explode("__hs").alias("tok"))
     freq = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("__dfq"))
     w = W.partitionBy("id").orderBy(F.col("__dfq").asc(), F.col("tok").asc())
     ranked = ex.join(freq, "tok").withColumn("__rn", F.row_number().over(w))
     plen = F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + F.lit(1)
     pre = ranked.where(F.col("__rn") <= plen).select("id", "tok", "n")
-
-    if hot_token_warn is not None:
-        hot = (
-            pre.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
-            .where(F.col("c") > hot_token_warn)
-            .limit(5).collect()
-        )
-        if hot:
-            logger.warning(
-                "prefix_jaccard_pairs: %d+ prefix token(s) exceed "
-                "posting-list warn cap %d (worst: %s) — candidate join "
-                "cost is quadratic in these lists; consider a larger "
-                "shingle k", len(hot), hot_token_warn,
-                [(r["tok"], r["c"]) for r in hot])
 
     a = pre.alias("a")
     b = pre.alias("b")
@@ -775,7 +683,7 @@ def prefix_jaccard_pairs(
         .distinct()
     )
     verified = ngram_jaccard_pairs(df, id_col, text_col, cand, k=k,
-                                   shingles_df=shingles_df)
+                                   hash_df=hash_df)
     return verified.where(F.col("jaccard") >= threshold)
 
 

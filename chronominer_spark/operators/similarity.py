@@ -281,7 +281,14 @@ def _np_cosine_udf():
     return cos
 
 
-def _np_cosine_lookup_udf(spark, side_frames):
+# Spark-driver memory budget for the id→vector matrices lsh_topk
+# broadcasts (float64 rows): a side holding more than
+# BROADCAST_VECTOR_BYTES // (8 * dim) vectors is verified through the
+# shuffled re-attach joins instead.
+BROADCAST_VECTOR_BYTES = 64 << 20
+
+
+def _np_cosine_lookup_udf(spark, side_frames, cap: int):
     """Cosine over BROADCAST id→vector matrices: the UDF receives only
     the (query_id, neighbor_id) longs; vectors are resolved inside the
     Python worker from matrices broadcast ONCE per executor (guide §4.5
@@ -290,11 +297,12 @@ def _np_cosine_lookup_udf(spark, side_frames):
     candidate pair previously carried through two joins and the Arrow
     boundary (~1 KB/pair at dim=64 — the dominant verify-stage bytes).
 
-    Only used under ``broadcast_vectors=True``, i.e. when the caller
-    has already declared the id→vector side bounded (dimension-table-
-    sized): materializing it on the driver is the same collect a
-    ``BroadcastExchange`` of the re-attach join performed internally,
-    minus shipping it per pair afterwards.
+    Size-guarded: each side is collected through ``limit(cap + 1)``,
+    and if either holds more than ``cap`` rows nothing is broadcast and
+    ``None`` is returned — the caller then takes the shuffled
+    re-attach. Under the cap, materializing the side on the driver is
+    the same collect a ``BroadcastExchange`` of the re-attach join
+    performs internally, minus shipping it per pair afterwards.
 
     Semantics are exactly :func:`_np_cosine_udf` on the same float64
     values (Arrow driver collection is bit-lossless): NULL vector →
@@ -305,7 +313,9 @@ def _np_cosine_lookup_udf(spark, side_frames):
     import pandas as pd
 
     def _collect(df):
-        pdf = df.toPandas()
+        pdf = df.limit(cap + 1).toPandas()
+        if len(pdf) > cap:
+            return None
         idc, vc = pdf.columns[:2]
         ids: list = []
         rows: list = []
@@ -330,7 +340,9 @@ def _np_cosine_lookup_udf(spark, side_frames):
 
     qf, nf = side_frames
     q_side = _collect(qf)
-    n_side = q_side if nf is qf else _collect(nf)
+    n_side = q_side if nf is qf or q_side is None else _collect(nf)
+    if q_side is None or n_side is None:
+        return None
     bc = spark.sparkContext.broadcast((q_side, n_side))
 
     def _one(a, b):
@@ -378,7 +390,6 @@ def lsh_topk(
     seed: int = 42,
     max_bucket_size: int | None = 10_000,
     plane_scheme: str = "md5_uniform",
-    broadcast_vectors: bool = False,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates = corpus rows sharing any
     sketch-table bucket with the query; exact cosine + rank inside the
@@ -403,13 +414,13 @@ def lsh_topk(
     sides — the second full sketch pass of the identical plan was pure
     duplicate compute (guide §1.2: don't compute things twice).
 
-    ``broadcast_vectors=True`` broadcast-hints the two vector re-attach
-    joins (guide §3.1): correct when the caller KNOWS the id→vector
-    side fits executor memory (e.g. a dimension-table-sized embedding
-    set); the candidate pair set then crosses no exchange until the
-    final ranking window. Leave False when the corpus is
-    unbounded — the joins then shuffle pairs by id, which is the
-    scale-safe default."""
+    Verification resolves vectors from broadcast id→vector matrices
+    inside the cosine UDF (:func:`_np_cosine_lookup_udf`) when both
+    sides fit :data:`BROADCAST_VECTOR_BYTES` at ``dim`` float64s per
+    vector; the candidate pair set then crosses no exchange until the
+    final ranking window. A larger side logs a warning and re-attaches
+    vectors by shuffled joins on id — the scale-safe path. Both paths
+    produce identical rows (pytest-asserted)."""
     planes = [
         [_hyperplane(seed, t, b, dim, plane_scheme) for b in range(n_bits)]
         for t in range(n_tables)
@@ -473,33 +484,33 @@ def lsh_topk(
         # GC, unlike CacheManager entries.
         cand = cand.localCheckpoint(eager=True)
         cached.unpersist()
-    # re-attach vectors by key, once per surviving candidate pair; with
-    # broadcast_vectors the id→vector sides are broadcast (caller-known
-    # bounded) so the pair set crosses no exchange here; otherwise both
-    # sides shuffle by key — still linear in candidates, never in the
-    # corpus cross product
+    # resolve vectors once per surviving candidate pair: from broadcast
+    # matrices inside the cosine UDF when both id→vector sides fit the
+    # Spark-driver budget (only the id pair crosses the Arrow boundary,
+    # guide §8), otherwise by shuffled re-attach joins on id — still linear
+    # in candidates, never in the corpus cross product.
     # rank on ROUNDED cosine (ties broken by neighbor_id) so float noise
     # below the 6th decimal can never flip an ordering across engines or
     # parallelism levels
-    if broadcast_vectors:
-        # caller-declared bounded id→vector side: resolve vectors from
-        # broadcast matrices INSIDE the cosine UDF — only the id pair
-        # crosses the joins/exchange/Arrow boundary (guide §8; see
-        # _np_cosine_lookup_udf). Identical float64 math and edge
-        # semantics as the re-attach path (pytest-asserted).
-        qvec = queries.select(F.col(id_col), F.col(vec_col))
-        nvec = qvec if self_join else corpus.select(F.col(id_col),
-                                                    F.col(vec_col))
-        cos = _np_cosine_lookup_udf(queries.sparkSession, (qvec, nvec))
+    qvec = queries.select(F.col(id_col), F.col(vec_col))
+    nvec = qvec if self_join else corpus.select(F.col(id_col), F.col(vec_col))
+    cap = BROADCAST_VECTOR_BYTES // (8 * dim)
+    cos = _np_cosine_lookup_udf(queries.sparkSession, (qvec, nvec), cap)
+    if cos is not None:
         scored = cand.withColumn(
             "cosine",
             F.round(cos(F.col("query_id"), F.col("neighbor_id")), 6),
         )
     else:
-        qv = queries.select(F.col(id_col).alias("query_id"),
-                            F.col(vec_col).alias("__query_id_v"))
-        nv = corpus.select(F.col(id_col).alias("neighbor_id"),
-                           F.col(vec_col).alias("__neighbor_id_v"))
+        logger.warning(
+            "lsh_topk: an id→vector side exceeds %d vectors (%d B at "
+            "dim=%d); verifying through the shuffled re-attach",
+            cap, BROADCAST_VECTOR_BYTES, dim,
+        )
+        qv = qvec.select(F.col(id_col).alias("query_id"),
+                         F.col(vec_col).alias("__query_id_v"))
+        nv = nvec.select(F.col(id_col).alias("neighbor_id"),
+                         F.col(vec_col).alias("__neighbor_id_v"))
         cand = cand.join(qv, on="query_id").join(nv, on="neighbor_id")
         cos = _np_cosine_udf()
         scored = cand.withColumn(
@@ -522,16 +533,15 @@ def embedding_near_dups(
     threshold: float = 0.95, dim: int = 16, n_tables: int = 6,
     n_bits: int = 10, seed: int = 7,
     plane_scheme: str = "md5_uniform",
-    broadcast_vectors: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold, via the same
     hyperplane bucketing (self-join) + exact verify. The self-join path
-    sketches the corpus once (see :func:`lsh_topk`);
-    ``broadcast_vectors`` passes through to the verify re-attach."""
+    sketches the corpus once and size-guards the vector broadcast (see
+    :func:`lsh_topk`)."""
     pairs = lsh_topk(
         df, df, id_col=id_col, vec_col=vec_col, k=50,
         dim=dim, n_tables=n_tables, n_bits=n_bits, seed=seed,
-        plane_scheme=plane_scheme, broadcast_vectors=broadcast_vectors,
+        plane_scheme=plane_scheme,
     )
     return (
         pairs.where((F.col("cosine") >= threshold)

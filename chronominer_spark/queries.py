@@ -610,7 +610,7 @@ def q19_lsh_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fh = shingle_hash_docs(d, "doc_id", "text", k=3) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     sigs = minhash_signatures(d, "doc_id", "text", k=3, num_hashes=16,
-                              kh_df=fh)
+                              hash_df=fh)
     pairs = lsh_candidate_pairs(sigs, "doc_id", bands=8, num_hashes=16)
     # min_jaccard arms the exact size-bound prefilter: candidates whose
     # shingle-count ratio already proves jaccard < 0.2 never reach the
@@ -934,10 +934,8 @@ def q26_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 8)
     dim = len(emb.select("embedding").first()["embedding"])
-    # broadcast_vectors: embeddings is dimension-table-sized — the
-    # candidate re-attach broadcasts the id→vector sides (guide §3.1)
     return lsh_topk(q, emb, k=3, dim=dim, n_bits=4, n_tables=8,
-                    plane_scheme="rademacher_md5", broadcast_vectors=True)
+                    plane_scheme="rademacher_md5")
 
 
 # Faithful mirror of q26: the Rademacher-md5 plane signs are re-derived
@@ -1432,13 +1430,9 @@ def q35_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     corpus = base.unionByName(planted)
-    # broadcast_vectors: the embeddings table is dimension-table-sized
-    # (the id→vector side fits executor memory with room to spare), so
-    # the 3.7M-pair verify re-attach at sf1.0 runs as two broadcast
-    # hash joins instead of shuffling the pair set twice (guide §3.1)
     return embedding_near_dups(
         corpus, threshold=0.99, dim=64, n_tables=6, n_bits=10, seed=7,
-        plane_scheme="rademacher_md5", broadcast_vectors=True,
+        plane_scheme="rademacher_md5",
     ).orderBy("id_a")
 
 
@@ -2184,20 +2178,20 @@ def q45_prefix_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering (PPJoin-family) — the deterministic complement to q19's
     probabilistic MinHash-LSH path: guaranteed to surface EVERY pair
     with jaccard >= 0.25, not just pairs that happen to collide in a
-    band. The corpus is shingled once (persisted) and feeds both the
-    prefix index and the verification stage. Oracle: full DuckDB
-    mirror of frequency-ordered prefixes → prefix-token join → size
-    filter → exact Jaccard verify."""
+    band. The corpus is shingled and hashed once (persisted) and feeds
+    both the prefix index and the verification stage. Oracle: full
+    DuckDB mirror of frequency-ordered prefixes → prefix-token join →
+    size filter → exact Jaccard verify."""
     from pyspark import StorageLevel
 
-    from chronominer_spark.operators.dedup import shingle_docs
+    from chronominer_spark.operators.dedup import shingle_hash_docs
 
     d = t(spark, sf_dir, "documents") \
         .repartition(spark.sparkContext.defaultParallelism)
-    sh = shingle_docs(d, "doc_id", "text", k=3) \
+    fh = shingle_hash_docs(d, "doc_id", "text", k=3) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     out = prefix_jaccard_pairs(d, "doc_id", "text", threshold=0.25, k=3,
-                               shingles_df=sh)
+                               hash_df=fh)
     res = out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     return res
 

@@ -171,30 +171,47 @@ def test_lsh_topk_recall_on_clustered_vectors(vectors):
     assert recall >= 0.9  # clustered data: hyperplane LSH must find the cluster
 
 
-def test_lsh_topk_broadcast_vectors_identical(vectors, spark):
-    """Round-7 optimization guard: broadcast_vectors=True resolves
-    vectors from broadcast matrices inside the cosine UDF instead of
-    per-pair re-attach joins — outputs of lsh_topk and of its
-    embedding_near_dups wrapper must be row-identical, including
-    NULL-vector (NULL cosine), zero-norm (0.0) and ragged-length edge
-    rows routed through the scalar fallback."""
+def test_lsh_topk_broadcast_vectors_identical(vectors, spark, monkeypatch,
+                                              caplog):
+    """The vector broadcast is size-guarded: under the
+    ``BROADCAST_VECTOR_BYTES`` cap the cosine UDF resolves vectors from
+    broadcast matrices, over it ``lsh_topk`` logs a warning and takes
+    the shuffled per-pair re-attach. Both paths must give row-identical
+    ``lsh_topk`` and ``embedding_near_dups`` output, and the lookup UDF
+    must match the re-attach UDF on NULL-vector (NULL cosine), zero-norm
+    (0.0) and ragged-length edge rows routed through the scalar
+    fallback."""
+    import logging
+
     from pyspark.sql import functions as F
 
+    from chronominer_spark.operators import similarity as S
     from chronominer_spark.operators.similarity import (
         _np_cosine_lookup_udf,
         _np_cosine_udf,
     )
 
-    base = lsh_topk(vectors, vectors, k=3, dim=8, n_bits=4, n_tables=8)
-    bcast = lsh_topk(vectors, vectors, k=3, dim=8, n_bits=4, n_tables=8,
-                     broadcast_vectors=True)
-    assert sorted(map(tuple, base.collect())) \
-        == sorted(map(tuple, bcast.collect()))
-    # embedding_near_dups passes the flag through: the same pairs
-    near = [sorted(map(tuple, embedding_near_dups(
-        vectors, dim=8, n_bits=4, n_tables=8, broadcast_vectors=b).collect()))
-        for b in (False, True)]
-    assert near[0] and near[0] == near[1]
+    def run():
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger=S.__name__):
+            top = sorted(map(tuple, lsh_topk(
+                vectors, vectors, k=3, dim=8, n_bits=4,
+                n_tables=8).collect()))
+            near = sorted(map(tuple, embedding_near_dups(
+                vectors, dim=8, n_bits=4, n_tables=8).collect()))
+        fell_back = any("shuffled re-attach" in r.getMessage()
+                        for r in caplog.records)
+        return top, near, fell_back
+
+    bcast_top, bcast_near, bcast_fell_back = run()
+    n = vectors.count()
+    # one vector short of the row count: 8 float64s per vector at dim=8
+    monkeypatch.setattr(S, "BROADCAST_VECTOR_BYTES", (n - 1) * 8 * 8)
+    shuf_top, shuf_near, shuf_fell_back = run()
+    assert not bcast_fell_back and shuf_fell_back
+    assert bcast_top and bcast_top == shuf_top
+    assert bcast_near and bcast_near == shuf_near
+    assert _np_cosine_lookup_udf(spark, (vectors, vectors), n - 1) is None
 
     # edge rows: NULL vector, zero vector, ragged length
     edge = spark.createDataFrame(
@@ -212,7 +229,7 @@ def test_lsh_topk_broadcast_vectors_identical(vectors, spark):
                         F.col("embedding").alias("nb")), "neighbor_id") \
         .select("query_id", "neighbor_id",
                 F.round(ref_cos("qa", "nb"), 6).alias("cosine"))
-    got_cos = _np_cosine_lookup_udf(spark, (ev, ev))
+    got_cos = _np_cosine_lookup_udf(spark, (ev, ev), 5)
     got = pairs.select(
         "query_id", "neighbor_id",
         F.round(got_cos("query_id", "neighbor_id"), 6).alias("cosine"))
@@ -373,20 +390,23 @@ def test_lsh_hot_bucket_guard_bounds_candidates(spark):
 
 
 def test_shingle_once_pipeline_matches_per_stage_shingling(docs):
-    from chronominer_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        shingle_docs,
-    )
+    """Shingling once (one cached ``shingle_hash_docs`` frame passed as
+    ``hash_df`` to both stages) gives the same signatures and verify
+    rows as letting each stage shingle the raw text itself."""
+    from chronominer_spark.operators.dedup import shingle_hash_docs
+
     d = docs.where(F.col("text").isNotNull())
-    sh = shingle_docs(d, "doc_id", "text", k=3).cache()
+    fh = shingle_hash_docs(d, "doc_id", "text", k=3).cache()
     sigs_a = minhash_signatures(d, "doc_id", "text", k=3, num_hashes=16)
     sigs_b = minhash_signatures(d, "doc_id", "text", k=3, num_hashes=16,
-                                shingles_df=sh)
+                                hash_df=fh)
     assert sorted(map(tuple, sigs_a.collect())) == sorted(map(tuple, sigs_b.collect()))
     pairs = lsh_candidate_pairs(sigs_b, "doc_id", bands=8, num_hashes=16)
     va = ngram_jaccard_pairs(d, "doc_id", "text", pairs, k=3)
-    vb = ngram_jaccard_pairs(d, "doc_id", "text", pairs, k=3, shingles_df=sh)
-    assert sorted(map(tuple, va.collect())) == sorted(map(tuple, vb.collect()))
+    vb = ngram_jaccard_pairs(d, "doc_id", "text", pairs, k=3, hash_df=fh)
+    rows_a = sorted(map(tuple, va.collect()))
+    assert rows_a and rows_a == sorted(map(tuple, vb.collect()))
+    fh.unpersist()
 
 
 def test_portable_simhash_matches_duckdb(spark):
@@ -888,98 +908,185 @@ def test_np_sketch_and_cosine_match_catalyst_fold(spark):
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in ref.collect()}
 
 
-def test_np_shingle_minhash_match_catalyst(spark):
-    """Round-7 optimization guard: the Arrow twins of word_shingles
-    (_np_shingles_udf) and the MinHash fold (_np_minhash_udf) must
-    reproduce the Catalyst expressions exactly, including edge
-    semantics: NULL text -> '' -> [''] single shingle; fewer than k
-    words -> whole-doc shingle; leading/trailing non-space whitespace
-    survives Spark's space-only trim and produces the same empty
-    tokens under Java split semantics; dedup preserves first
-    occurrence; empty shingle array -> all-PRIME signature; NULL
-    array -> NULL signature."""
-    from pyspark.sql import functions as F
+# the edge rows the shingle kernel is checked on against Catalyst:
+# NULL text -> '' -> [''] single shingle; fewer than k words ->
+# whole-doc shingle; leading/trailing non-space whitespace survives
+# Spark's space-only trim and yields the same empty tokens under Java
+# split semantics; dedup keeps first occurrence; case folding; a long doc
+_SHINGLE_EDGE_ROWS = [
+    (0, "The quick brown fox jumps over the lazy dog"),
+    (1, None),
+    (2, ""),
+    (3, "one two"),
+    (4, "  padded   with  spaces   "),
+    (5, "tab\tand\nnewline\tseparated words here"),
+    (6, "\ntrailing newline keeps empty token\n"),
+    (7, "repeat repeat repeat repeat repeat"),
+    (8, "MiXeD CaSe TeXt MiXeD CaSe TeXt"),
+    (9, "x " * 2000),
+]
 
+
+def _catalyst_halves(s):
+    """md5 halves of one shingle string, in Catalyst: (h1, h2, hs)."""
+    from chronominer_spark.operators.dedup import MINHASH_PRIME
+
+    d = F.md5(s)
+    hs = F.conv(F.substring(d, 1, 15), 16, 10).cast("long")
+    h2 = F.conv(F.substring(d, 17, 15), 16, 10).cast("long")
+    return F.struct(F.pmod(hs, F.lit(MINHASH_PRIME)).alias("h1"),
+                    F.pmod(h2, F.lit(MINHASH_PRIME)).alias("h2"),
+                    hs.alias("hs"))
+
+
+def _catalyst_minhash(halves_col, num_hashes):
+    """The Kirsch–Mitzenmacher permutation-min as a Catalyst fold."""
+    from chronominer_spark.operators.dedup import MINHASH_PRIME
+
+    init = F.array(*[F.lit(MINHASH_PRIME).cast("long")] * num_hashes)
+    return F.aggregate(
+        halves_col, init,
+        lambda acc, p: F.zip_with(
+            acc, F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+            lambda a, i: F.least(
+                a, F.pmod(p["h1"] + i * p["h2"], F.lit(MINHASH_PRIME)))))
+
+
+def test_shingle_kernel_matches_catalyst(spark):
+    """The one tokenizer / shingle hash / MinHash fold reproduces the
+    Catalyst reference — ``word_shingles`` plus the md5-half fold —
+    exactly on the edge rows at k=2 and k=3: the shingle strings
+    (decontamination's contract), the fused ``__h1``/``__h2``/``__hs``
+    arrays (order and dedup preserved), and the signatures of both the
+    raw-text and the ``hash_df`` path. The halves UDF keeps its array
+    edges: an empty array folds to all-PRIME, a NULL array to NULL."""
     from chronominer_spark.operators.dedup import (
         MINHASH_PRIME,
-        _np_minhash_udf,
-        _np_shingles_udf,
+        _np_minhash_from_halves_udf,
+        minhash_signatures,
+        shingle_docs,
+        shingle_hash_docs,
+        word_shingles,
+    )
+
+    df = spark.createDataFrame(_SHINGLE_EDGE_ROWS, "doc_id long, text string")
+    for k in (2, 3):
+        ref = df.select(
+            "doc_id", word_shingles("text", k).alias("sh")).select(
+            "doc_id", "sh",
+            F.transform("sh", _catalyst_halves).alias("hh"))
+        ref_sh = {r["doc_id"]: r["sh"] for r in ref.collect()}
+        got_sh = {r["doc_id"]: r["shingles"]
+                  for r in shingle_docs(df, "doc_id", "text", k).collect()}
+        assert got_sh == ref_sh, f"k={k}"
+
+        ref_h = {r["doc_id"]: (r["h1"], r["h2"], r["hs"]) for r in ref.select(
+            "doc_id", F.col("hh.h1").alias("h1"), F.col("hh.h2").alias("h2"),
+            F.col("hh.hs").alias("hs")).collect()}
+        fh = shingle_hash_docs(df, "doc_id", "text", k)
+        got_h = {r["doc_id"]: (r["__h1"], r["__h2"], r["__hs"])
+                 for r in fh.collect()}
+        assert got_h == ref_h, f"k={k}"
+
+        for num_hashes in (4, 16):
+            ref_sig = {r["doc_id"]: r["sig"] for r in ref.select(
+                "doc_id", _catalyst_minhash("hh", num_hashes).alias("sig"))
+                .collect()}
+            for kw in ({}, {"hash_df": fh}):
+                got_sig = {r["doc_id"]: r["signature"]
+                           for r in minhash_signatures(
+                               df, "doc_id", "text", k=k,
+                               num_hashes=num_hashes, **kw).collect()}
+                assert got_sig == ref_sig, (k, num_hashes, sorted(kw))
+
+    edge = spark.createDataFrame(
+        [(100, [], []), (101, None, None), (102, [5, 7], [11, 13])],
+        "doc_id long, h1 array<long>, h2 array<long>")
+    got = {r["doc_id"]: r["sig"] for r in edge.select(
+        "doc_id", _np_minhash_from_halves_udf(4)("h1", "h2").alias("sig"))
+        .collect()}
+    P = MINHASH_PRIME
+    assert got == {100: [P] * 4, 101: None,
+                   102: [min((5 + i * 11) % P, (7 + i * 13) % P)
+                         for i in range(4)]}
+
+
+def test_raw_text_minhash_plans_one_arrow_eval(docs):
+    """Raw-text signatures tokenize, hash and fold in ONE Python stage:
+    exactly one ``ArrowEvalPython`` in the physical plan (the per-batch
+    signature plan of the streaming near-dup twin)."""
+    sigs = minhash_signatures(docs, "doc_id", "text", k=3, num_hashes=16)
+    plan = sigs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_jaccard_verify_matches_catalyst(spark):
+    """``ngram_jaccard_pairs`` on raw text and on a precomputed
+    ``hash_df`` returns the exact rows of a Catalyst reference (string
+    ``array_intersect`` over ``word_shingles``) for the candidate pairs
+    MinHash-LSH finds — with and without the ``min_jaccard`` size
+    prefilter — on a fixture with near-dups, an exact dup and the
+    NULL / empty / short edge docs."""
+    from chronominer_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        shingle_hash_docs,
         word_shingles,
     )
 
     rows = [
-        (0, "The quick brown fox jumps over the lazy dog"),
-        (1, None),
-        (2, ""),
-        (3, "one two"),
-        (4, "  padded   with  spaces   "),
-        (5, "tab\tand\nnewline\tseparated words here"),
-        (6, "\ntrailing newline keeps empty token\n"),
-        (7, "repeat repeat repeat repeat repeat"),
-        (8, "MiXeD CaSe TeXt MiXeD CaSe TeXt"),
-        (9, "x " * 2000),            # long doc
+        (0, "the quick brown fox jumps over the lazy dog"),
+        (1, "the quick brown fox jumps over the lazy cat"),
+        (2, "completely different text with other words entirely here"),
+        (3, None),
+        (4, ""),
+        (5, "one two"),
+        (6, "repeat repeat repeat repeat repeat"),
+        (7, "the quick brown fox jumps over the lazy dog"),  # exact dup
+        (8, "the quick brown fox jumps over a lazy dog today"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    fh = shingle_hash_docs(df, "doc_id", "text", k=3)
+    sigs = minhash_signatures(df, "doc_id", "text", k=3, num_hashes=16,
+                              hash_df=fh)
+    pairs = lsh_candidate_pairs(sigs, "doc_id", bands=8, num_hashes=16)
 
-    for k in (2, 3):
-        ref = {r["doc_id"]: r["s"] for r in df.select(
-            "doc_id", word_shingles("text", k).alias("s")).collect()}
-        got = {r["doc_id"]: r["s"] for r in df.select(
-            "doc_id", _np_shingles_udf(k)(F.col("text")).alias("s")).collect()}
-        assert got == ref, f"k={k}"
-
-    # minhash twin over the Catalyst-shingled arrays + edge arrays
     sh = df.select("doc_id", word_shingles("text", 3).alias("sh"))
-    edge = spark.createDataFrame(
-        [(100, []), (101, None), (102, ["a b c"])],
-        "doc_id long, sh array<string>")
-    sh = sh.unionByName(edge)
-
-    def catalyst_sig(col, num_hashes):
-        d = F.md5(col)
-        h1 = F.pmod(F.conv(F.substring(d, 1, 15), 16, 10).cast("long"),
-                    F.lit(MINHASH_PRIME))
-        h2 = F.pmod(F.conv(F.substring(d, 17, 15), 16, 10).cast("long"),
-                    F.lit(MINHASH_PRIME))
-        return F.struct(h1.alias("h1"), h2.alias("h2"))
-
-    for num_hashes in (4, 16):
-        hashed = sh.select(
-            "doc_id",
-            F.transform("sh", lambda s: catalyst_sig(s, num_hashes))
-            .alias("hh"))
-        init = F.array(*[F.lit(MINHASH_PRIME).cast("long")] * num_hashes)
-        fold = F.aggregate(
-            "hh", init,
-            lambda acc, p: F.zip_with(
-                acc, F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda a, i: F.least(
-                    a, F.pmod(p["h1"] + i * p["h2"],
-                              F.lit(MINHASH_PRIME)))))
-        ref = {r["doc_id"]: r["sig"] for r in hashed.select(
-            "doc_id", fold.alias("sig")).collect()}
-        got = {r["doc_id"]: r["sig"] for r in sh.select(
-            "doc_id", _np_minhash_udf(num_hashes)(F.col("sh")).alias("sig"))
-            .collect()}
-        assert got == ref, f"num_hashes={num_hashes}"
+    ref = (
+        pairs
+        .join(sh.select(F.col("doc_id").alias("id_a"),
+                        F.col("sh").alias("sa")), "id_a")
+        .join(sh.select(F.col("doc_id").alias("id_b"),
+                        F.col("sh").alias("sb")), "id_b")
+        .select("id_a", "id_b",
+                F.size(F.array_intersect("sa", "sb")).alias("inter"),
+                F.size("sa").alias("na"), F.size("sb").alias("nb"))
+        .withColumn("jaccard",
+                    F.col("inter") / (F.col("na") + F.col("nb")
+                                      - F.col("inter")))
+    )
+    cols = ["id_a", "id_b", "inter", "na", "nb", "jaccard"]
+    for t in (None, 0.2):
+        exp = ref if t is None else ref.where(
+            F.least("na", "nb") >= t * F.greatest("na", "nb"))
+        exp = sorted(map(tuple, exp.select(cols).collect()))
+        assert exp and any(r[-1] < 1.0 for r in exp)
+        for kw in ({}, {"hash_df": fh}):
+            got = sorted(map(tuple, ngram_jaccard_pairs(
+                df, "doc_id", "text", pairs, k=3, min_jaccard=t, **kw)
+                .select(cols).collect()))
+            assert got == exp, (t, sorted(kw))
 
 
 def test_fused_shingle_hash_matches_string_path(spark):
-    """Round-7 optimization guard for the fused shingle+hash pass
-    (shingle_hash_docs): signatures built from its h1/h2 arrays must be
-    bit-identical to the string-path signatures, its hs arrays must be
-    the md5-half images of the string-path shingles (order and dedup
-    preserved), and ngram_jaccard_pairs(hash_df=...) must return the
-    exact rows of the shingles_df path on a fixture with known
-    near-dups (same sizes, intersections and jaccard values)."""
+    """The fused shingle+hash pass (``shingle_hash_docs``) agrees with
+    the string path (``shingle_docs`` strings hashed by ``hashlib``):
+    its ``__hs`` arrays are the first-60-bit md5 halves of the shingle
+    strings, order and dedup preserved; signatures from it equal the
+    raw-text signatures; and ``ngram_jaccard_pairs(hash_df=...,
+    pairs_materialized=True)`` returns the raw-text path's rows."""
     import hashlib
 
-    from pyspark.sql import functions as F
-
     from chronominer_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        ngram_jaccard_pairs,
         shingle_docs,
         shingle_hash_docs,
     )
@@ -999,7 +1106,6 @@ def test_fused_shingle_hash_matches_string_path(spark):
     sh = shingle_docs(df, "doc_id", "text", k=3)
     fh = shingle_hash_docs(df, "doc_id", "text", k=3)
 
-    # hs arrays = first-60-bit md5 halves of the string shingles, in order
     exp_hs = {
         r["doc_id"]: [int(hashlib.md5(s.encode()).hexdigest()[0:15], 16)
                       for s in r["shingles"]]
@@ -1008,20 +1114,18 @@ def test_fused_shingle_hash_matches_string_path(spark):
     got_hs = {r["doc_id"]: list(r["__hs"]) for r in fh.collect()}
     assert got_hs == exp_hs
 
-    # signatures: kh_df path bit-identical to shingles_df path
     ref_sig = {r["doc_id"]: r["signature"] for r in minhash_signatures(
-        df, "doc_id", "text", k=3, num_hashes=16, shingles_df=sh).collect()}
+        df, "doc_id", "text", k=3, num_hashes=16).collect()}
     got_sig = {r["doc_id"]: r["signature"] for r in minhash_signatures(
-        df, "doc_id", "text", k=3, num_hashes=16, kh_df=fh).collect()}
+        df, "doc_id", "text", k=3, num_hashes=16, hash_df=fh).collect()}
     assert got_sig == ref_sig
 
-    # verify stage: identical rows through either frame
     sigs = minhash_signatures(df, "doc_id", "text", k=3, num_hashes=16,
-                              kh_df=fh)
+                              hash_df=fh)
     pairs = lsh_candidate_pairs(sigs, "doc_id", bands=8, num_hashes=16)
     cols = ["id_a", "id_b", "inter", "na", "nb", "jaccard"]
     ref_v = sorted(map(tuple, ngram_jaccard_pairs(
-        df, "doc_id", "text", pairs, k=3, shingles_df=sh,
+        df, "doc_id", "text", pairs, k=3,
         min_jaccard=0.2).select(cols).collect()))
     got_v = sorted(map(tuple, ngram_jaccard_pairs(
         df, "doc_id", "text", pairs, k=3, hash_df=fh,
