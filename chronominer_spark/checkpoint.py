@@ -161,7 +161,13 @@ class RefAggCache:
 
     This is resume/rerun state in the deployment's own output root —
     the same class of artifact as the checkpoint manifest. One-shot
-    evaluations (no runner) never see it."""
+    evaluations (no runner) never see it.
+
+    Contract: one runner per output root at a time; the cache takes no
+    lock. If a directory still vanishes between :meth:`load`'s
+    ``_SUCCESS`` check and its read (a second runner's prune, or an
+    operator's), ``load`` reports a miss and :meth:`get_or_build`
+    rebuilds."""
 
     def __init__(self, spark, root: str):
         self.spark = spark
@@ -176,10 +182,17 @@ class RefAggCache:
         return os.path.join(self.root, self._slug(key))
 
     def load(self, key: str):
+        from pyspark.errors import AnalysisException
+
         d = self._dir(key)
-        if os.path.exists(os.path.join(d, "_SUCCESS")):
+        if not os.path.exists(os.path.join(d, "_SUCCESS")):
+            return None
+        try:
             return self.spark.read.parquet(d)
-        return None
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return None
 
     def save(self, key: str, df):
         """Materialize ``df`` under ``key`` and return the read-back

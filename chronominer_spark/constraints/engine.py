@@ -37,7 +37,7 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -62,12 +62,149 @@ ROW_LEVEL_KINDS = {
     "in_range", "matches", "cross_field_null", "expr_check",
 }
 
-# constraint kinds that compare the current frame against a reference
-# snapshot — evaluate() refuses to run them with ref_df=None
-REF_REQUIRING_KINDS = {
-    "text_equality", "drift_psi", "drift_ks",
-    "drift_quantile", "drift_categorical", "row_count_drift",
-}
+
+def _result_rows(
+    frame: DataFrame,
+    constraint_id: str | Column,
+    observed: Column,
+    threshold: float | None | Column,
+    rows_checked: str | Column = "rows_checked",
+    violation_count: str | Column = "violation_count",
+    passed: Column | None = None,
+) -> DataFrame:
+    """The per-partition results frame every family emits:
+    ``(partition_id, constraint_id, observed, threshold, rows_checked,
+    violation_count, passed)`` from a frame keyed by ``_pid``.
+
+    ``passed`` is a boolean over the output columns; the default rule is
+    ``observed <= threshold``. Families that must certify pass
+    :func:`_certify_or_fail`, which fails a null ``observed``."""
+    def col(x):
+        return x if isinstance(x, Column) else F.col(x)
+
+    def lit(x):
+        return x if isinstance(x, Column) else F.lit(x)
+
+    return frame.select(
+        F.col("_pid").alias("partition_id"),
+        lit(constraint_id).alias("constraint_id"),
+        observed.cast("double").alias("observed"),
+        lit(threshold).cast("double").alias("threshold"),
+        col(rows_checked).cast("long").alias("rows_checked"),
+        col(violation_count).cast("long").alias("violation_count"),
+    ).withColumn(
+        "passed",
+        F.col("observed") <= F.col("threshold") if passed is None else passed,
+    )
+
+
+def _certify_or_fail() -> Column:
+    """``passed`` rule of the cross-snapshot families: a null observed
+    (a partition on only one side, an uncertifiable statistic) fails."""
+    return F.coalesce(F.col("observed") <= F.col("threshold"), F.lit(False))
+
+
+def _rate_rows(
+    totals: DataFrame, bad_counts: DataFrame, constraint_id: str,
+    threshold: float, passed: Column | None = None,
+) -> DataFrame:
+    """Results of a violating-row family: ``totals`` holds each
+    partition's ``rows_checked``, ``bad_counts`` its ``violation_count``
+    (a partition without violations is absent: 0), observed is their
+    ratio."""
+    return _result_rows(
+        totals.join(bad_counts, "_pid", "left")
+        .withColumn("violation_count",
+                    F.coalesce("violation_count", F.lit(0))),
+        constraint_id, F.col("violation_count") / F.col("rows_checked"),
+        threshold, passed=passed,
+    )
+
+
+def _group_rows(
+    groups: DataFrame, bad_pred: Column, rows: str, c: Constraint,
+) -> DataFrame:
+    """Results of a per-group verdict family: ``groups`` holds one row
+    per (``_pid``, group), ``bad_pred`` is true for a violating group,
+    ``rows`` sums to ``rows_checked``; observed is the violating share of
+    the partition's groups, against ``max_rate``."""
+    base = groups.groupBy("_pid").agg(
+        F.count(F.lit(1)).alias("n_groups"),
+        F.sum(rows).alias("rows_checked"),
+        F.sum(bad_pred.cast("long")).alias("violation_count"),
+    )
+    return _result_rows(
+        base, c.constraint_id, F.col("violation_count") / F.col("n_groups"),
+        c.params.get("max_rate", 0.0),
+    )
+
+
+def psi_term(p: Column, q: Column, eps: float | None = None) -> Column:
+    """One cell's population-stability term ``(p - q) · ln(p / q)``.
+    ``eps`` is added to both probabilities inside the log, the binned
+    drift plans' guard against empty bins; the categorical family
+    Laplace-smooths its counts instead and passes none."""
+    num, den = (p, q) if eps is None else (p + eps, q + eps)
+    return (p - q) * F.log(num / den)
+
+
+def categorical_psi(
+    cur_counts: DataFrame, ref_counts: DataFrame, part_col: str,
+    smooth: float,
+) -> DataFrame:
+    """Laplace-smoothed category-frequency PSI per partition, the plan
+    of the ``drift_categorical`` family, its streaming twin and q58.
+
+    Each counts frame is ``(part_col, category, count)`` in that order.
+    The two sides are full-outer aligned on (partition, category), a
+    missing cell counts 0, ``smooth`` is added to every aligned cell and
+    k is the aligned category count. Returns ``(part_col, psi,
+    cur_total, ref_total, n_categories)``; :func:`certified_psi` nulls
+    the PSI of a partition that cannot be certified."""
+    cat = cur_counts.columns[1]
+    cn, rn = cur_counts.columns[2], ref_counts.columns[2]
+    w = W.partitionBy(part_col)
+    j = (
+        cur_counts.join(ref_counts, [part_col, cat], "full_outer")
+        .select(part_col,
+                F.coalesce(cn, F.lit(0)).alias("_cn"),
+                F.coalesce(rn, F.lit(0)).alias("_rn"))
+        .withColumn("_ctot", F.sum("_cn").over(w))
+        .withColumn("_rtot", F.sum("_rn").over(w))
+        .withColumn("_k", F.count(F.lit(1)).over(w))
+    )
+    pc = (F.col("_cn") + smooth) / (F.col("_ctot") + smooth * F.col("_k"))
+    pr = (F.col("_rn") + smooth) / (F.col("_rtot") + smooth * F.col("_k"))
+    return j.groupBy(part_col).agg(
+        F.sum(psi_term(pc, pr)).alias("psi"),
+        F.first("_ctot").alias("cur_total"),
+        F.first("_rtot").alias("ref_total"),
+        F.first("_k").alias("n_categories"),
+    )
+
+
+def certified_psi(max_categories: int) -> Column:
+    """The ``psi`` of a :func:`categorical_psi` row, or null when it
+    cannot be certified: a side without rows, or more aligned categories
+    than ``max_categories``."""
+    certifiable = (
+        (F.col("cur_total") > 0) & (F.col("ref_total") > 0)
+        & (F.col("n_categories") <= F.lit(int(max_categories)))
+    )
+    return F.when(certifiable, F.col("psi"))
+
+
+def out_of_bounds(value: Column, lo: float | None, hi: float | None) -> Column:
+    """The ``group_agg_check`` verdict for one group's aggregate: true
+    outside ``[lo, hi]`` (a None bound is open) and true for a null
+    value, which cannot certify the bound (the expr_check null
+    discipline)."""
+    ok = F.lit(True)
+    if lo is not None:
+        ok = ok & (value >= F.lit(lo))
+    if hi is not None:
+        ok = ok & (value <= F.lit(hi))
+    return ~F.coalesce(ok, F.lit(False))
 
 
 def schema_diff(
@@ -171,10 +308,9 @@ class SuiteEvaluator:
         # the families that compare snapshots — the same "cannot be
         # certified" discipline these families apply per partition
         # (round-4 ADVICE; previously each kind was `continue`d).
-        ref_needing = [
-            c.constraint_id for c in self.suite.constraints
-            if c.kind in REF_REQUIRING_KINDS
-        ]
+        cons = list(self.suite.constraints)
+        ref_needing = [c.constraint_id for c in cons
+                       if c.kind in REF_REQUIRING_KINDS]
         if ref_needing and ref_df is None:
             raise ValueError(
                 f"suite {self.suite.name!r} contains cross-snapshot "
@@ -182,24 +318,28 @@ class SuiteEvaluator:
                 "evaluate() was called with ref_df=None — pass the "
                 "reference snapshot or drop these constraints"
             )
+        # a typo'd or future kind fails here, before any family plans
+        # (some run eager jobs): a silently-skipped constraint reads as
+        # all-pass, the same hazard as the missing ref_df above
+        unknown = [f"{c.kind!r} ({c.constraint_id})" for c in cons
+                   if c.kind not in FAMILIES]
+        if unknown:
+            raise ValueError(
+                f"unknown constraint kind {', '.join(unknown)}")
         part = self._partition_id_col(df)
         df = df.withColumn("_pid", part)
 
         results: list[DataFrame] = []
         violations: list[DataFrame] = []
 
-        row_checks = [
-            self._row_check(c) for c in self.suite.constraints
-            if c.kind in ROW_LEVEL_KINDS and self._fusable(c)
-        ]
-        stats_cs = [c for c in self.suite.constraints if c.kind == "column_stats"]
-        quant_cs = [c for c in self.suite.constraints if c.kind == "quantiles"]
+        row_checks = [self._row_check(c) for c in cons if self._fusable(c)]
+        stats_cs = [c for c in cons if c.kind == "column_stats"]
+        quant_cs = [c for c in cons if c.kind == "quantiles"]
         if row_checks or stats_cs or quant_cs:
             results.append(self._fused_agg(df, row_checks, stats_cs, quant_cs))
             if with_violations and row_checks:
                 violations.append(self._row_violations(df, row_checks))
 
-        cons = list(self.suite.constraints)
         ref = (ref_df.withColumn("_pid", self._partition_id_col(ref_df))
                if ref_df is not None else None)
 
@@ -208,15 +348,14 @@ class SuiteEvaluator:
         # set derives its group sizes from that constraint's stage-2 key
         # counts: the counts frame is materialized once and feeds
         # uniqueness stats, duplicate violations, rows_checked totals
-        # AND group sizes.
-        shared_counts: dict[int, DataFrame] = {}   # unique idx -> counts
-        shared_sizes: dict[int, DataFrame] = {}    # group_stats idx -> sizes
+        # AND group sizes. shared[i] is the frame constraint i reuses.
+        shared: dict[int, DataFrame] = {}
         for i, c in enumerate(cons):
             if c.kind != "unique":
                 continue
             reusers = [
                 j for j, g in enumerate(cons)
-                if g.kind == "group_stats" and j not in shared_sizes
+                if g.kind == "group_stats" and j not in shared
                 and g.params["group_col"] in c.params["cols"]
             ]
             if not reusers:
@@ -225,91 +364,26 @@ class SuiteEvaluator:
                 self._key_counts(df, list(c.params["cols"]),
                                  c.params.get("salted", True))
             )
-            shared_counts[i] = counts
+            shared[i] = counts
             for j in reusers:
                 g = cons[j]
-                shared_sizes[j] = counts.groupBy(
+                shared[j] = counts.groupBy(
                     "_pid", g.params["group_col"]
                 ).agg(F.sum("dup_count").alias("group_rows"))
 
         for i, c in enumerate(cons):
-            if c.kind in ROW_LEVEL_KINDS and not self._fusable(c):
-                r, v = self._referential_join(df, c)
-                results.append(r)
-                if with_violations and v is not None:
-                    violations.append(v)
-            elif c.kind == "unique":
-                r, v = self._unique(df, c, counts=shared_counts.get(i))
-                results.append(r)
-                if with_violations:
-                    violations.append(v)
-            elif c.kind == "text_equality":
-                r, v = self._text_equality(df, ref, c)
-                results.append(r)
-                if with_violations:
-                    violations.append(v)
-            elif c.kind == "group_stats":
-                r, v = self._group_stats(df, c, sizes=shared_sizes.get(i))
-                results.append(r)
-                if with_violations and v is not None:
-                    violations.append(v)
-            elif c.kind == "monotone":
-                r, v = self._monotone(df, c)
-                results.append(r)
-                if with_violations:
-                    violations.append(v)
-            elif c.kind == "contiguous":
-                r, v = self._contiguous(df, c)
-                results.append(r)
-                if with_violations:
-                    violations.append(v)
-            elif c.kind == "functional_dependency":
-                r, v = self._functional_dependency(df, c)
-                results.append(r)
-                if with_violations:
-                    violations.append(v)
-            elif c.kind == "group_agg_check":
-                r, v = self._group_agg_check(df, c)
-                results.append(r)
-                if with_violations:
-                    violations.append(v)
-            elif c.kind == "conversation_shape":
-                r, v = self._conversation_shape(df, c)
-                results.append(r)
-                if with_violations:
-                    violations.append(v)
-            elif c.kind == "drift_quantile":
-                results.append(self._drift_quantile(df, ref, c))
-            elif c.kind == "drift_categorical":
-                results.append(self._drift_categorical(df, ref, c))
-            elif c.kind == "freshness":
-                results.append(self._freshness(df, c))
-            elif c.kind == "schema_match":
-                results.append(self._schema_match(df, c))
-            elif c.kind == "row_count_drift":
-                results.append(self._row_count_drift(df, ref, c))
-            elif not (c.kind in ("column_stats", "quantiles",
-                                 "drift_psi", "drift_ks")
-                      or (c.kind in ROW_LEVEL_KINDS and self._fusable(c))):
-                # those four + fusable row checks are evaluated by the
-                # fused pre-loop scans; anything else is a typo'd or
-                # future kind and must FAIL LOUDLY — a silently-skipped
-                # constraint reads as all-pass (same hazard class as
-                # the round-4 ref_df ADVICE)
-                raise ValueError(
-                    f"unknown constraint kind {c.kind!r} "
-                    f"({c.constraint_id})")
+            family, _ = FAMILIES[c.kind]
+            if family is None or self._fusable(c):
+                continue
+            r, v = family(self, df, ref, c, shared.get(i))
+            results.append(r)
+            if with_violations and v is not None:
+                violations.append(v)
 
         drift_cs = [c for c in cons if c.kind in ("drift_psi", "drift_ks")]
         if drift_cs:
             results.extend(self._drift_family(df, ref, drift_cs))
 
-        if not results:
-            raise ValueError(
-                "no evaluable constraints: the suite contains only "
-                "constraints that need ref_df (text_equality / drift) but "
-                "evaluate() was called with ref_df=None"
-            )
         res = results[0]
         for r in results[1:]:
             res = res.unionByName(r, allowMissingColumns=False)
@@ -339,10 +413,11 @@ class SuiteEvaluator:
             self.suite.partition_fmt, F.col(self.suite.partition_col)
         )
 
-    def _fusable(self, c: Constraint) -> bool:
-        """RI declared via a named dim DataFrame uses the broadcast
-        left-anti plan; everything else row-level fuses into one scan."""
-        return not (c.kind == "referential" and c.params.get("vocab_name"))
+    @staticmethod
+    def _fusable(c: Constraint) -> bool:
+        """Row-level kinds fuse into one scan, except RI declared via a
+        named dim DataFrame, which uses the broadcast left-anti plan."""
+        return c.kind in ROW_LEVEL_KINDS and not c.params.get("vocab_name")
 
     # -- row-level family ---------------------------------------------------
     def _row_check(self, c: Constraint) -> _RowCheck:
@@ -419,6 +494,24 @@ class SuiteEvaluator:
     def _sval(col: F.Column) -> F.Column:
         return F.substring(col.cast("string"), 1, _VALUE_TRUNC)
 
+    def _violation_rows(
+        self, frame: DataFrame, c: Constraint, column: str, value: Column,
+        detail: Column, keys: list[str] | None = None,
+    ) -> DataFrame:
+        """The violations frame of one constraint, ``(partition_id,
+        constraint_id, *key_cols, column, value, detail)``, from a frame
+        keyed by ``_pid``. ``keys`` names the suite key columns the frame
+        carries (default: all of them); the others are null."""
+        return frame.select(
+            F.col("_pid").alias("partition_id"),
+            F.lit(c.constraint_id).alias("constraint_id"),
+            *[(F.col(k) if keys is None or k in keys else F.lit(None)).alias(k)
+              for k in self.suite.key_cols],
+            F.lit(column).alias("column"),
+            value.alias("value"),
+            detail.alias("detail"),
+        )
+
     def _fused_agg(
         self,
         df: DataFrame,
@@ -481,23 +574,12 @@ class SuiteEvaluator:
                     .alias("obs"),
                     null_d.alias("thr"),
                 ))
-        return (
-            base.select(F.col("_pid").alias("partition_id"),
-                        F.col("__rows").alias("rows_checked"),
-                        F.explode(F.array(*entries)).alias("e"))
-            .select(
-                "partition_id",
-                F.col("e.cid").alias("constraint_id"),
-                F.col("e.obs").alias("observed"),
-                F.col("e.thr").alias("threshold"),
-                "rows_checked",
-                F.col("e.viol").alias("violation_count"),
-            )
-            .withColumn(
-                "passed",
-                F.when(F.col("threshold").isNull(), F.lit(True))
-                .otherwise(F.col("observed") <= F.col("threshold")),
-            )
+        return _result_rows(
+            base.select("_pid", "__rows", F.explode(F.array(*entries)).alias("e")),
+            F.col("e.cid"), F.col("e.obs"), F.col("e.thr"),
+            rows_checked="__rows", violation_count="e.viol",
+            passed=F.when(F.col("threshold").isNull(), F.lit(True))
+            .otherwise(F.col("observed") <= F.col("threshold")),
         )
 
     def _row_violations(self, df: DataFrame, checks: list[_RowCheck]) -> DataFrame:
@@ -530,8 +612,8 @@ class SuiteEvaluator:
 
     # -- referential via broadcast left-anti --------------------------------
     def _referential_join(
-        self, df: DataFrame, c: Constraint
-    ) -> tuple[DataFrame, DataFrame | None]:
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint, shared=None,
+    ) -> tuple[DataFrame, DataFrame]:
         """RI against a dim DataFrame — the J6 plan family.
 
         ``strategy='broadcast'`` (default): violations = left_anti
@@ -580,27 +662,11 @@ class SuiteEvaluator:
             bad = candidates.join(F.broadcast(dim), on=col, how="left_anti")
             bad_counts = bad.groupBy("_pid").agg(
                 F.count(F.lit(1)).alias("violation_count"))
-        res = (
-            totals.join(bad_counts, "_pid", "left")
-            .withColumn("violation_count", F.coalesce("violation_count", F.lit(0)))
-            .select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                (F.col("violation_count") / F.col("rows_checked"))
-                .cast("double").alias("observed"),
-                F.lit(p.get("max_rate", 0.0)).cast("double").alias("threshold"),
-                "rows_checked", "violation_count",
-            )
-            .withColumn("passed", F.col("observed") <= F.col("threshold"))
-        )
-        vio = bad.select(
-            F.col("_pid").alias("partition_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *self.suite.key_cols,
-            F.lit(col).alias("column"),
-            self._sval(F.col(col)).alias("value"),
-            F.lit(f"not in {p['vocab_name']} vocabulary").alias("detail"),
-        )
+        res = _rate_rows(totals, bad_counts, c.constraint_id,
+                         p.get("max_rate", 0.0))
+        vio = self._violation_rows(
+            bad, c, col, self._sval(F.col(col)),
+            F.lit(f"not in {p['vocab_name']} vocabulary"))
         return res, vio
 
     @staticmethod
@@ -635,7 +701,8 @@ class SuiteEvaluator:
         )
 
     def _unique(
-        self, df: DataFrame, c: Constraint, counts: DataFrame | None = None,
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint,
+        counts: DataFrame | None = None,
     ) -> tuple[DataFrame, DataFrame]:
         """Two-stage salted hash-aggregate (north rule). Stage 1 groups by
         (key, input-partition) so a hot key's rows combine locally before
@@ -662,37 +729,18 @@ class SuiteEvaluator:
         agg = dups.groupBy("_pid").agg(
             F.sum(F.col("dup_count") - 1).alias("violation_count")
         )
-        res = (
-            totals.join(agg, "_pid", "left")
-            .withColumn("violation_count",
-                        F.coalesce("violation_count", F.lit(0)).cast("long"))
-            .select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                (F.col("violation_count") / F.col("rows_checked"))
-                .cast("double").alias("observed"),
-                F.lit(0.0).alias("threshold"),
-                "rows_checked", "violation_count",
-            )
-            .withColumn("passed", F.col("violation_count") == 0)
-        )
-        key_cols = list(self.suite.key_cols)
-        vio = dups.select(
-            F.col("_pid").alias("partition_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *[
-                (F.col(k) if k in keys else F.lit(None)).alias(k)
-                for k in key_cols
-            ],
-            F.lit(",".join(keys)).alias("column"),
-            self._sval(F.concat_ws("|", *[F.col(k) for k in keys])).alias("value"),
-            F.format_string("duplicate_count=%d", F.col("dup_count")).alias("detail"),
-        )
+        res = _rate_rows(totals, agg, c.constraint_id, 0.0,
+                         passed=F.col("violation_count") == 0)
+        vio = self._violation_rows(
+            dups, c, ",".join(keys),
+            self._sval(F.concat_ws("|", *[F.col(k) for k in keys])),
+            F.format_string("duplicate_count=%d", F.col("dup_count")),
+            keys=keys)
         return res, vio
 
     # -- ordering monotonicity ------------------------------------------------
     def _monotone(
-        self, df: DataFrame, c: Constraint
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint, shared=None,
     ) -> tuple[DataFrame, DataFrame]:
         """Monotonicity along the per-group sorted sequence via
         :func:`~chronominer_spark.operators.ranges.out_of_order` — one
@@ -708,34 +756,17 @@ class SuiteEvaluator:
         totals = df.groupBy("_pid").agg(F.count(F.lit(1)).alias("rows_checked"))
         bad_counts = bad.groupBy("_pid").agg(
             F.count(F.lit(1)).alias("violation_count"))
-        res = (
-            totals.join(bad_counts, "_pid", "left")
-            .withColumn("violation_count",
-                        F.coalesce("violation_count", F.lit(0)))
-            .select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                (F.col("violation_count") / F.col("rows_checked"))
-                .cast("double").alias("observed"),
-                F.lit(p.get("max_rate", 0.0)).cast("double").alias("threshold"),
-                "rows_checked", "violation_count",
-            )
-            .withColumn("passed", F.col("observed") <= F.col("threshold"))
-        )
-        vio = bad.select(
-            F.col("_pid").alias("partition_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *self.suite.key_cols,
-            F.lit(col).alias("column"),
-            self._sval(F.col(col)).alias("value"),
-            F.concat(F.lit("decreased from "),
-                     self._sval(F.col("__prev"))).alias("detail"),
-        )
+        res = _rate_rows(totals, bad_counts, c.constraint_id,
+                         p.get("max_rate", 0.0))
+        vio = self._violation_rows(
+            bad, c, col, self._sval(F.col(col)),
+            F.concat(F.lit("decreased from "), self._sval(F.col("__prev"))))
         return res, vio
 
     # -- per-group (per-conversation) stats -----------------------------------
     def _group_stats(
-        self, df: DataFrame, c: Constraint, sizes: DataFrame | None = None,
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint,
+        sizes: DataFrame | None = None,
     ) -> tuple[DataFrame, DataFrame | None]:
         """Per-group size statistics with explicit two-stage salted
         aggregation — the north rule's skew case: a single hot conv_id
@@ -788,52 +819,27 @@ class SuiteEvaluator:
             F.struct(F.lit("n_groups").alias("stat"),
                      F.col("n_groups").cast("double").alias("obs")),
         ])
-        res = (
-            base.select(
-                F.col("_pid").alias("partition_id"),
-                "rows_checked", "violation_count",
-                F.explode(entries).alias("e"),
-            )
-            .select(
-                "partition_id",
-                F.concat(F.lit(c.constraint_id + "#"), F.col("e.stat"))
-                .alias("constraint_id"),
-                F.col("e.obs").alias("observed"),
-                F.lit(float(max_rows) if max_rows is not None else None)
-                .cast("double").alias("threshold"),
-                "rows_checked",
-                F.col("violation_count").cast("long").alias("violation_count"),
-            )
-            .withColumn(
-                "passed",
-                F.when(F.col("threshold").isNull(), F.lit(True))
-                .otherwise(F.col("violation_count") == 0),
-            )
+        res = _result_rows(
+            base.select("_pid", "rows_checked", "violation_count",
+                        F.explode(entries).alias("e")),
+            F.concat(F.lit(c.constraint_id + "#"), F.col("e.stat")),
+            F.col("e.obs"),
+            float(max_rows) if max_rows is not None else None,
+            passed=F.when(F.col("threshold").isNull(), F.lit(True))
+            .otherwise(F.col("violation_count") == 0),
         )
         vio = None
         if max_rows is not None:
-            key_cols = list(self.suite.key_cols)
-            vio = (
-                sizes.where(F.col("group_rows") > max_rows)
-                .select(
-                    F.col("_pid").alias("partition_id"),
-                    F.lit(c.constraint_id).alias("constraint_id"),
-                    *[
-                        (F.col(group_col) if k == group_col else F.lit(None))
-                        .alias(k)
-                        for k in key_cols
-                    ],
-                    F.lit(group_col).alias("column"),
-                    self._sval(F.col(group_col)).alias("value"),
-                    F.format_string("group_rows=%d", F.col("group_rows"))
-                    .alias("detail"),
-                )
-            )
+            vio = self._violation_rows(
+                sizes.where(F.col("group_rows") > max_rows), c, group_col,
+                self._sval(F.col(group_col)),
+                F.format_string("group_rows=%d", F.col("group_rows")),
+                keys=[group_col])
         return res, vio
 
     # -- per-group index contiguity -------------------------------------------
     def _contiguous(
-        self, df: DataFrame, c: Constraint
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint, shared=None,
     ) -> tuple[DataFrame, DataFrame]:
         """Per-group contiguity of distinct ``idx_col`` values (exactly
         ``start..start+n-1``; spec rationale at
@@ -867,54 +873,24 @@ class SuiteEvaluator:
             (F.col("__lo") != start_col) | (
                 F.col("__hi") != F.col("__n") + start_col - F.lit(1)),
             F.lit(True))
-        base = groups.groupBy("_pid").agg(
-            F.count(F.lit(1)).alias("n_groups"),
-            F.sum("__n").alias("rows_checked"),
-            F.sum(bad_pred.cast("long")).alias("violation_count"),
-        )
-        res = (
-            base.select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                (F.col("violation_count") / F.col("n_groups"))
-                .cast("double").alias("observed"),
-                F.lit(p.get("max_rate", 0.0)).cast("double")
-                .alias("threshold"),
-                "rows_checked",
-                F.col("violation_count").cast("long")
-                .alias("violation_count"),
-            )
-            .withColumn("passed", F.col("observed") <= F.col("threshold"))
-        )
-        key_cols = list(self.suite.key_cols)
-        vio = (
-            groups.where(bad_pred)
-            .select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                *[
-                    (F.col(over) if k == over else F.lit(None)).alias(k)
-                    for k in key_cols
-                ],
-                F.lit(idx_col).alias("column"),
-                self._sval(F.col(over)).alias("value"),
-                F.format_string(
-                    "distinct=%s min=%s max=%s expected=%s..%s",
-                    F.col("__n").cast("string"),
-                    F.coalesce(F.col("__lo").cast("string"), F.lit("null")),
-                    F.coalesce(F.col("__hi").cast("string"), F.lit("null")),
-                    F.coalesce(start_col.cast("string"), F.lit("null")),
-                    F.coalesce(
-                        (F.col("__n") + start_col - F.lit(1)).cast("string"),
-                        F.lit("null")),
-                ).alias("detail"),
-            )
-        )
-        return res, vio
+        vio = self._violation_rows(
+            groups.where(bad_pred), c, idx_col, self._sval(F.col(over)),
+            F.format_string(
+                "distinct=%s min=%s max=%s expected=%s..%s",
+                F.col("__n").cast("string"),
+                F.coalesce(F.col("__lo").cast("string"), F.lit("null")),
+                F.coalesce(F.col("__hi").cast("string"), F.lit("null")),
+                F.coalesce(start_col.cast("string"), F.lit("null")),
+                F.coalesce(
+                    (F.col("__n") + start_col - F.lit(1)).cast("string"),
+                    F.lit("null")),
+            ),
+            keys=[over])
+        return _group_rows(groups, bad_pred, "__n", c), vio
 
     # -- per-group aggregate bound ---------------------------------------------
     def _group_agg_check(
-        self, df: DataFrame, c: Constraint
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint, shared=None,
     ) -> tuple[DataFrame, DataFrame]:
         """Per-group aggregate bound (spec rationale at
         :func:`~chronominer_spark.constraints.spec.group_agg_check`).
@@ -930,58 +906,22 @@ class SuiteEvaluator:
             F.expr(p["agg_expr"]).alias("__v"),
             F.count(F.lit(1)).alias("__n"),
         )
-        ok = F.lit(True)
-        if lo is not None:
-            ok = ok & (F.col("__v") >= F.lit(lo))
-        if hi is not None:
-            ok = ok & (F.col("__v") <= F.lit(hi))
-        bad_pred = ~F.coalesce(ok, F.lit(False))
-        base = g.groupBy("_pid").agg(
-            F.count(F.lit(1)).alias("n_groups"),
-            F.sum("__n").alias("rows_checked"),
-            F.sum(bad_pred.cast("long")).alias("violation_count"),
-        )
-        res = (
-            base.select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                (F.col("violation_count") / F.col("n_groups"))
-                .cast("double").alias("observed"),
-                F.lit(p.get("max_rate", 0.0)).cast("double")
-                .alias("threshold"),
-                "rows_checked",
-                F.col("violation_count").cast("long")
-                .alias("violation_count"),
-            )
-            .withColumn("passed", F.col("observed") <= F.col("threshold"))
-        )
-        key_cols = list(self.suite.key_cols)
-        vio = (
-            g.where(bad_pred)
-            .select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                *[
-                    (F.col(group_col) if k == group_col else F.lit(None))
-                    .alias(k)
-                    for k in key_cols
-                ],
-                F.lit(p["agg_expr"]).alias("column"),
-                self._sval(F.col(group_col)).alias("value"),
-                F.format_string(
-                    "agg=%s rows=%s bounds=[%s, %s]",
-                    F.coalesce(F.col("__v").cast("string"), F.lit("null")),
-                    F.col("__n").cast("string"),
-                    F.lit("-inf" if lo is None else repr(lo)),
-                    F.lit("inf" if hi is None else repr(hi)),
-                ).alias("detail"),
-            )
-        )
-        return res, vio
+        bad_pred = out_of_bounds(F.col("__v"), lo, hi)
+        vio = self._violation_rows(
+            g.where(bad_pred), c, p["agg_expr"], self._sval(F.col(group_col)),
+            F.format_string(
+                "agg=%s rows=%s bounds=[%s, %s]",
+                F.coalesce(F.col("__v").cast("string"), F.lit("null")),
+                F.col("__n").cast("string"),
+                F.lit("-inf" if lo is None else repr(lo)),
+                F.lit("inf" if hi is None else repr(hi)),
+            ),
+            keys=[group_col])
+        return _group_rows(g, bad_pred, "__n", c), vio
 
     # -- functional dependency -------------------------------------------------
     def _functional_dependency(
-        self, df: DataFrame, c: Constraint
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint, shared=None,
     ) -> tuple[DataFrame, DataFrame]:
         """``determinant -> dependent`` consistency (spec rationale at
         :func:`~chronominer_spark.constraints.spec.functional_dependency`).
@@ -1009,54 +949,24 @@ class SuiteEvaluator:
             F.max(F.col("__dep").isNull()).alias("__has_null"),
         )
         bad_pred = F.col("__n_dep") > 1
-        base = groups.groupBy("_pid").agg(
-            F.count(F.lit(1)).alias("n_groups"),
-            F.sum("__n_dep").alias("rows_checked"),
-            F.sum(bad_pred.cast("long")).alias("violation_count"),
-        )
-        res = (
-            base.select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                (F.col("violation_count") / F.col("n_groups"))
-                .cast("double").alias("observed"),
-                F.lit(p.get("max_rate", 0.0)).cast("double")
-                .alias("threshold"),
-                "rows_checked",
-                F.col("violation_count").cast("long")
-                .alias("violation_count"),
-            )
-            .withColumn("passed", F.col("observed") <= F.col("threshold"))
-        )
-        key_cols = list(self.suite.key_cols)
-        vio = (
-            groups.where(bad_pred)
-            .select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                *[
-                    (F.col(k) if k in det else F.lit(None)).alias(k)
-                    for k in key_cols
-                ],
-                F.lit(dep).alias("column"),
-                self._sval(F.concat_ws(",", *[F.col(d) for d in det]))
-                .alias("value"),
-                F.format_string(
-                    "n_dependents=%s eg=%s..%s%s",
-                    F.col("__n_dep").cast("string"),
-                    F.coalesce(F.col("__lo"), F.lit("null")),
-                    F.coalesce(F.col("__hi"), F.lit("null")),
-                    F.when(F.col("__has_null")
-                           & F.col("__lo").isNotNull(), F.lit("+null"))
-                    .otherwise(F.lit("")),
-                ).alias("detail"),
-            )
-        )
-        return res, vio
+        vio = self._violation_rows(
+            groups.where(bad_pred), c, dep,
+            self._sval(F.concat_ws(",", *[F.col(d) for d in det])),
+            F.format_string(
+                "n_dependents=%s eg=%s..%s%s",
+                F.col("__n_dep").cast("string"),
+                F.coalesce(F.col("__lo"), F.lit("null")),
+                F.coalesce(F.col("__hi"), F.lit("null")),
+                F.when(F.col("__has_null")
+                       & F.col("__lo").isNotNull(), F.lit("+null"))
+                .otherwise(F.lit("")),
+            ),
+            keys=det)
+        return _group_rows(groups, bad_pred, "__n_dep", c), vio
 
     # -- conversation role-sequence shape --------------------------------------
     def _conversation_shape(
-        self, df: DataFrame, c: Constraint
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint, shared=None,
     ) -> tuple[DataFrame, DataFrame]:
         """Role-sequence validity per conversation (spec rationale at
         :func:`~chronominer_spark.constraints.spec.conversation_shape`).
@@ -1121,31 +1031,10 @@ class SuiteEvaluator:
             F.count(F.lit(1)).alias("rows_checked"))
         bad_counts = bad.groupBy("_pid").agg(
             F.count(F.lit(1)).alias("violation_count"))
-        res = (
-            totals.join(bad_counts, "_pid", "left")
-            .withColumn("violation_count",
-                        F.coalesce("violation_count", F.lit(0)))
-            .select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                (F.col("violation_count") / F.col("rows_checked"))
-                .cast("double").alias("observed"),
-                F.lit(p.get("max_rate", 0.0)).cast("double")
-                .alias("threshold"),
-                "rows_checked",
-                F.col("violation_count").cast("long")
-                .alias("violation_count"),
-            )
-            .withColumn("passed", F.col("observed") <= F.col("threshold"))
-        )
-        vio = bad.select(
-            F.col("_pid").alias("partition_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            *self.suite.key_cols,
-            F.lit(role).alias("column"),
-            self._sval(F.col(role)).alias("value"),
-            F.array_join("__fails", "; ").alias("detail"),
-        )
+        res = _rate_rows(totals, bad_counts, c.constraint_id,
+                         p.get("max_rate", 0.0))
+        vio = self._violation_rows(bad, c, role, self._sval(F.col(role)),
+                                   F.array_join("__fails", "; "))
         return res, vio
 
     # -- text equality vs reference snapshot ----------------------------------
@@ -1252,7 +1141,7 @@ class SuiteEvaluator:
         return choice
 
     def _text_equality(
-        self, df: DataFrame, ref: DataFrame, c: Constraint,
+        self, df: DataFrame, ref: DataFrame, c: Constraint, shared=None,
     ) -> tuple[DataFrame, DataFrame]:
         """Per-turn text equality vs the reference snapshot.
 
@@ -1484,32 +1373,17 @@ class SuiteEvaluator:
             )).alias("__w"))
             .select(*keys, F.col("__w.val").alias("_cur_val"))
         )
-        vio = (
-            bad_keys.join(cur_vals, on=keys, how="left")
-            .select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                *keys,
-                F.lit(col).alias("column"),
-                F.col("_cur_val").alias("value"),
-                F.col("_status").alias("detail"),
-            )
-        )
+        vio = self._violation_rows(
+            bad_keys.join(cur_vals, on=keys, how="left"), c, col,
+            F.col("_cur_val"), F.col("_status"))
         return counts, vio
 
-    def _eq_finalize(self, counts: DataFrame, c: Constraint) -> DataFrame:
-        return (
-            counts.select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                (F.col("violation_count") / F.col("rows_checked"))
-                .cast("double").alias("observed"),
-                F.lit(c.params.get("max_mismatch_rate", 0.0)).cast("double")
-                .alias("threshold"),
-                "rows_checked",
-                F.col("violation_count").cast("long").alias("violation_count"),
-            )
-            .withColumn("passed", F.col("observed") <= F.col("threshold"))
+    @staticmethod
+    def _eq_finalize(counts: DataFrame, c: Constraint) -> DataFrame:
+        return _result_rows(
+            counts, c.constraint_id,
+            F.col("violation_count") / F.col("rows_checked"),
+            c.params.get("max_mismatch_rate", 0.0),
         )
 
     def _ref_agg(self, key: str, build):
@@ -1541,7 +1415,9 @@ class SuiteEvaluator:
             F.count(F.lit(1)).alias(cnt_name)
         )
 
-    def _schema_match(self, df: DataFrame, c: Constraint) -> DataFrame:
+    def _schema_match(
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint, shared=None,
+    ) -> tuple[DataFrame, None]:
         """Metadata-only: diff the frame's schema against the declared
         one on the driver (no Spark job) and emit a single table-level
         result row — partition lineage does not apply to a property of
@@ -1557,11 +1433,11 @@ class SuiteEvaluator:
             "partition_id string, constraint_id string, observed double, "
             "threshold double, rows_checked long, violation_count long, "
             "passed boolean",
-        )
+        ), None
 
     def _row_count_drift(
-        self, df: DataFrame, ref: DataFrame, c: Constraint
-    ) -> DataFrame:
+        self, df: DataFrame, ref: DataFrame, c: Constraint, shared=None,
+    ) -> tuple[DataFrame, None]:
         """Per-partition |cur/ref − 1| ≤ max_rel_change; a partition on
         only one side is uncertifiable (null observed, failed). Two
         count aggregates — the cheapest cross-snapshot check there is."""
@@ -1574,26 +1450,17 @@ class SuiteEvaluator:
         joined = cur_n.join(ref_n, "_pid", "full_outer")
         both = F.col("__cn").isNotNull() & F.col("__rn").isNotNull()
         observed = F.when(both, F.abs(F.col("__cn") / F.col("__rn") - 1.0))
-        return (
-            joined.select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                observed.cast("double").alias("observed"),
-                F.lit(thr).cast("double").alias("threshold"),
-                F.coalesce("__cn", F.lit(0)).alias("rows_checked"),
-                F.abs(F.coalesce("__cn", F.lit(0))
-                      - F.coalesce("__rn", F.lit(0))).cast("long")
-                .alias("violation_count"),
-            )
-            .withColumn(
-                "passed",
-                F.coalesce(F.col("observed") <= F.col("threshold"),
-                           F.lit(False)))
-        )
+        return _result_rows(
+            joined, c.constraint_id, observed, thr,
+            rows_checked=F.coalesce("__cn", F.lit(0)),
+            violation_count=F.abs(F.coalesce("__cn", F.lit(0))
+                                  - F.coalesce("__rn", F.lit(0))),
+            passed=_certify_or_fail(),
+        ), None
 
     def _drift_quantile(
-        self, df: DataFrame, ref: DataFrame, c: Constraint
-    ) -> DataFrame:
+        self, df: DataFrame, ref: DataFrame, c: Constraint, shared=None,
+    ) -> tuple[DataFrame, None]:
         """Largest per-quantile absolute difference between the two
         snapshots, per partition. One sketch aggregate per side (only
         ≤accuracy-sized sketches shuffle — the quantiles-family
@@ -1619,23 +1486,15 @@ class SuiteEvaluator:
         both = F.col("__qc").isNotNull() & F.col("__qr").isNotNull()
         observed = F.when(both, F.array_max(
             F.zip_with("__qc", "__qr", lambda a, b: F.abs(a - b))))
-        return (
-            joined.select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                observed.cast("double").alias("observed"),
-                F.lit(p.get("max_abs_diff", 0.0)).cast("double")
-                .alias("threshold"),
-                F.coalesce("rows_checked", F.lit(0)).alias("rows_checked"),
-                F.lit(0).cast("long").alias("violation_count"),
-            )
-            .withColumn(
-                "passed",
-                F.coalesce(F.col("observed") <= F.col("threshold"),
-                           F.lit(False)))
-        )
+        return _result_rows(
+            joined, c.constraint_id, observed, p.get("max_abs_diff", 0.0),
+            rows_checked=F.coalesce("rows_checked", F.lit(0)),
+            violation_count=F.lit(0), passed=_certify_or_fail(),
+        ), None
 
-    def _freshness(self, df: DataFrame, c: Constraint) -> DataFrame:
+    def _freshness(
+        self, df: DataFrame, ref: DataFrame | None, c: Constraint, shared=None,
+    ) -> tuple[DataFrame, None]:
         """Partition age vs an explicit ``as_of`` instant (spec
         rationale at :func:`~chronominer_spark.constraints.spec.
         freshness`). One max() per partition — map-side combined, a
@@ -1648,84 +1507,37 @@ class SuiteEvaluator:
         )
         age = (as_of.cast("double")
                - F.col("__newest").cast("double"))
-        return (
-            agg.select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                age.cast("double").alias("observed"),
-                F.lit(p["max_age_seconds"]).cast("double")
-                .alias("threshold"),
-                "rows_checked",
-                F.lit(0).cast("long").alias("violation_count"),
-            )
-            .withColumn(
-                "passed",
-                F.coalesce(F.col("observed") <= F.col("threshold"),
-                           F.lit(False)))
-        )
+        return _result_rows(
+            agg, c.constraint_id, age, p["max_age_seconds"],
+            violation_count=F.lit(0), passed=_certify_or_fail(),
+        ), None
 
     def _drift_categorical(
-        self, df: DataFrame, ref: DataFrame, c: Constraint
-    ) -> DataFrame:
+        self, df: DataFrame, ref: DataFrame, c: Constraint, shared=None,
+    ) -> tuple[DataFrame, None]:
         """Category-frequency PSI per partition (spec rationale at
         :func:`~chronominer_spark.constraints.spec.drift_categorical`).
         Each side collapses to distinct (partition, category) count
         rows before anything shuffles — map-side combined, so a hot
         category costs one partial row per map split, never a hot
-        reducer. The full-outer category join and the PSI fold then run
-        over at most (partitions × union-cardinality) rows. A partition
-        missing from either side, or whose union cardinality exceeds
-        ``max_categories``, cannot be certified: null observed,
-        failed."""
+        reducer. The full-outer category join and the PSI fold
+        (:func:`categorical_psi`) then run over at most (partitions ×
+        union-cardinality) rows. A partition missing from either side,
+        or whose union cardinality exceeds ``max_categories``, cannot be
+        certified: null observed, failed."""
         p = c.params
-        col, smooth = p["col"], float(p["smooth"])
+        col = p["col"]
         cur_c = df.groupBy("_pid", col).agg(F.count(F.lit(1)).alias("_cn"))
         ref_c = self._ref_agg(
             f"catdrift|{c.constraint_id}",
             lambda: ref.groupBy("_pid", col).agg(
                 F.count(F.lit(1)).alias("_rn")))
-        j = (
-            cur_c.join(ref_c, ["_pid", col], "full_outer")
-            .select(
-                "_pid",
-                F.coalesce("_cn", F.lit(0)).alias("_cn"),
-                F.coalesce("_rn", F.lit(0)).alias("_rn"),
-            )
-        )
-        w = W.partitionBy("_pid")
-        j = (
-            j.withColumn("_ctot", F.sum("_cn").over(w))
-            .withColumn("_rtot", F.sum("_rn").over(w))
-            .withColumn("_k", F.count(F.lit(1)).over(w))
-        )
-        pc = (F.col("_cn") + smooth) / (F.col("_ctot") + smooth * F.col("_k"))
-        pr = (F.col("_rn") + smooth) / (F.col("_rtot") + smooth * F.col("_k"))
-        term = (pc - pr) * F.log(pc / pr)
-        agg = j.groupBy("_pid").agg(
-            F.sum(term).alias("_psi"),
-            F.first("_ctot").alias("_ctot"),
-            F.first("_rtot").alias("_rtot"),
-            F.first("_k").alias("_k"),
-        )
-        certifiable = (
-            (F.col("_ctot") > 0) & (F.col("_rtot") > 0)
-            & (F.col("_k") <= p["max_categories"])
-        )
-        return (
-            agg.select(
-                F.col("_pid").alias("partition_id"),
-                F.lit(c.constraint_id).alias("constraint_id"),
-                F.when(certifiable, F.col("_psi"))
-                .cast("double").alias("observed"),
-                F.lit(float(p["max_psi"])).cast("double").alias("threshold"),
-                F.col("_ctot").cast("long").alias("rows_checked"),
-                F.lit(0).cast("long").alias("violation_count"),
-            )
-            .withColumn(
-                "passed",
-                F.coalesce(F.col("observed") <= F.col("threshold"),
-                           F.lit(False)))
-        )
+        return _result_rows(
+            categorical_psi(cur_c, ref_c, "_pid", float(p["smooth"])),
+            c.constraint_id, certified_psi(p["max_categories"]),
+            float(p["max_psi"]), rows_checked="cur_total",
+            violation_count=F.lit(0), passed=_certify_or_fail(),
+        ), None
 
     def _drift_family(
         self, df: DataFrame, ref: DataFrame, constraints: list[Constraint],
@@ -1818,13 +1630,10 @@ class SuiteEvaluator:
         return out
 
     def _drift_stat(self, probs: DataFrame, c: Constraint) -> DataFrame:
-        eps = 1e-9
         if c.kind == "drift_psi":
-            contrib = (F.col("p") - F.col("q")) * F.log(
-                (F.col("p") + eps) / (F.col("q") + eps)
-            )
             stat = probs.groupBy("_pid").agg(
-                F.sum(contrib).alias("observed"),
+                F.sum(psi_term(F.col("p"), F.col("q"), eps=1e-9))
+                .alias("observed"),
                 F.sum("n_cur").alias("rows_checked"),
             )
         else:  # drift_ks: max |CDF_cur - CDF_ref| over ordered bins
@@ -1837,12 +1646,40 @@ class SuiteEvaluator:
                 F.sum("n_cur").alias("rows_checked"),
             )
 
-        thr = c.params["threshold"]
-        return stat.select(
-            F.col("_pid").alias("partition_id"),
-            F.lit(c.constraint_id).alias("constraint_id"),
-            F.col("observed").cast("double").alias("observed"),
-            F.lit(thr).cast("double").alias("threshold"),
-            F.col("rows_checked").cast("long").alias("rows_checked"),
-            F.lit(0).cast("long").alias("violation_count"),
-        ).withColumn("passed", F.col("observed") <= F.col("threshold"))
+        return _result_rows(stat, c.constraint_id, F.col("observed"),
+                            c.params["threshold"], violation_count=F.lit(0))
+
+
+# kind -> (family method, needs_ref). Every method is called as
+# method(evaluator, df, ref, c, shared) and returns (results,
+# violations | None); ``shared`` is the stage-2 frame evaluate() shares
+# between a unique constraint and the group_stats it covers. A None
+# method marks a kind evaluated by a suite-wide pass instead: the fused
+# scan for row-level checks, column_stats and quantiles, and the shared
+# histograms of _drift_family for drift_psi/drift_ks. The inline-vocab
+# referential form is row-level and fuses; the dim-frame form is joined.
+FAMILIES = {
+    **{kind: (None, False) for kind in ROW_LEVEL_KINDS},
+    "referential": (SuiteEvaluator._referential_join, False),
+    "column_stats": (None, False),
+    "quantiles": (None, False),
+    "drift_psi": (None, True),
+    "drift_ks": (None, True),
+    "unique": (SuiteEvaluator._unique, False),
+    "group_stats": (SuiteEvaluator._group_stats, False),
+    "monotone": (SuiteEvaluator._monotone, False),
+    "contiguous": (SuiteEvaluator._contiguous, False),
+    "functional_dependency": (SuiteEvaluator._functional_dependency, False),
+    "group_agg_check": (SuiteEvaluator._group_agg_check, False),
+    "conversation_shape": (SuiteEvaluator._conversation_shape, False),
+    "freshness": (SuiteEvaluator._freshness, False),
+    "schema_match": (SuiteEvaluator._schema_match, False),
+    "text_equality": (SuiteEvaluator._text_equality, True),
+    "drift_quantile": (SuiteEvaluator._drift_quantile, True),
+    "drift_categorical": (SuiteEvaluator._drift_categorical, True),
+    "row_count_drift": (SuiteEvaluator._row_count_drift, True),
+}
+
+# constraint kinds that compare the current frame against a reference
+# snapshot — evaluate() refuses to run them with ref_df=None
+REF_REQUIRING_KINDS = {k for k, (_, needs_ref) in FAMILIES.items() if needs_ref}

@@ -18,6 +18,11 @@ compress subtracts a cut whose running total is ≤ n/(k+1)) and the
 two-level partial/final merge (pointwise sum, then subtract the
 (k+1)-th largest and drop non-positives).
 
+One merge serves batch and stream: :func:`mg_merge` is both the final
+merge of :func:`heavy_hitters` and the state fold of the streaming twin
+(``streaming/dedup_stream.py:IncrementalHeavyHitters``), which merges
+its stored summary with each micro-batch's ``heavy_hitters`` summary.
+
 Plan shape (round-5 rewrite, was groupBy(_split).applyInPandas): the
 per-split pass is ``mapInPandas`` — it fuses into the SCAN stage, so
 NO exchange ever touches the stream and no split is materialized as a
@@ -38,7 +43,7 @@ from pyspark.sql import functions as F
 def _mg_compress(counts: dict, k: int) -> dict:
     """Shrink a counter to ≤ k entries, MG-style: subtract the
     (k+1)-th largest count from every entry and drop non-positives.
-    Dict form — used by the streaming twin's tiny final merges."""
+    Dict form — used by :func:`mg_merge`'s tiny final merge."""
     if len(counts) <= k:
         return counts
     cut = sorted(counts.values(), reverse=True)[k]
@@ -69,8 +74,8 @@ def heavy_hitters(
     Two-stage plan: one MG fold per input partition (``mapInPandas``
     over Arrow batches — fused into the scan, no exchange of the
     stream, O(k + chunk_rows) task memory, pandas-rate counting), then
-    one merge of the ≤ k·partitions partial rows (pointwise sum + MG
-    compress).
+    :func:`mg_merge` of the ≤ k·partitions partial rows (pointwise sum
+    + MG compress).
 
     ``with_total=True`` additionally emits one ``(NULL, n)`` row
     carrying the EXACT non-null item count, folded through the same
@@ -112,8 +117,18 @@ def heavy_hitters(
             yield pd.DataFrame({"item": out_items,
                                 "cnt": pd.array(out_cnts, dtype="int64")})
 
-    partials = vals.mapInPandas(partial, "item string, cnt long")
+    return mg_merge(vals.mapInPandas(partial, "item string, cnt long"),
+                    k, with_total).withColumnRenamed("cnt", "est_count")
 
+
+def mg_merge(partials: DataFrame, k: int, with_total: bool) -> DataFrame:
+    """Merge Misra–Gries summaries ``(item, cnt)`` into one ≤ k-row
+    summary ``(item, cnt)``: pointwise sum per item, then one MG
+    compress, in one task behind a single-group exchange of the tiny
+    partial rows. ``with_total`` also sums the ``(NULL, n)`` total rows
+    into one exact total row. This is the final merge of
+    :func:`heavy_hitters` and the state fold of the streaming twin
+    (``IncrementalHeavyHitters``: state ∪ batch summary)."""
     def final(pdf: pd.DataFrame) -> pd.DataFrame:
         null_mask = pdf["item"].isna()
         counts = _mg_compress(
@@ -124,10 +139,10 @@ def heavy_hitters(
             items.append(None)
             cnts.append(int(pdf[null_mask]["cnt"].sum()))
         return pd.DataFrame(
-            {"item": items, "est_count": pd.array(cnts, dtype="int64")})
+            {"item": items, "cnt": pd.array(cnts, dtype="int64")})
 
     return (
         partials.withColumn("_one", F.lit(1))
         .groupBy("_one")
-        .applyInPandas(final, "item string, est_count long")
+        .applyInPandas(final, "item string, cnt long")
     )

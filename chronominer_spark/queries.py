@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from chronominer_spark.constraints.engine import categorical_psi, psi_term
 from chronominer_spark.functions.text import normalize_text
 from chronominer_spark.operators.assembly import (
     full_outer_align,
@@ -452,8 +453,7 @@ def q14_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt = W.partitionBy("event_type")
     probs = j.withColumn("p", F.col("n_cur") / F.sum("n_cur").over(wt)) \
              .withColumn("q", F.col("n_ref") / F.sum("n_ref").over(wt))
-    eps = 1e-9
-    contrib = (F.col("p") - F.col("q")) * F.log((F.col("p") + eps) / (F.col("q") + eps))
+    contrib = psi_term(F.col("p"), F.col("q"), eps=1e-9)
     return probs.groupBy("event_type").agg(F.round(F.sum(contrib), 6).alias("psi"))
 
 
@@ -3060,21 +3060,10 @@ def q58_categorical_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     pg = (F.col("user_id") % 4).cast("long").alias("pgroup")
     cur_c = cur.groupBy(pg, "event_type").agg(F.count(F.lit(1)).alias("cn"))
     ref_c = ref.groupBy(pg, "event_type").agg(F.count(F.lit(1)).alias("rn"))
-    j = cur_c.join(ref_c, ["pgroup", "event_type"], "full_outer").select(
+    return categorical_psi(cur_c, ref_c, "pgroup", 0.5).select(
         "pgroup",
-        F.coalesce("cn", F.lit(0)).alias("cn"),
-        F.coalesce("rn", F.lit(0)).alias("rn"))
-    w = W.partitionBy("pgroup")
-    s = 0.5
-    j = (j.withColumn("ct", F.sum("cn").over(w))
-          .withColumn("rt", F.sum("rn").over(w))
-          .withColumn("k", F.count(F.lit(1)).over(w)))
-    pc = (F.col("cn") + s) / (F.col("ct") + s * F.col("k"))
-    pr = (F.col("rn") + s) / (F.col("rt") + s * F.col("k"))
-    term = (pc - pr) * F.log(pc / pr)
-    return j.groupBy("pgroup").agg(
-        F.max("k").cast("long").alias("n_categories"),
-        F.round(F.sum(term), 6).alias("psi"))
+        F.col("n_categories").cast("long").alias("n_categories"),
+        F.round("psi", 6).alias("psi"))
 
 
 _Q58_SQL = """

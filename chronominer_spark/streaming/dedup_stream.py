@@ -3,6 +3,27 @@ exact dedup, near-dup LSH, heavy hitters, FD audit, group-agg audit,
 categorical drift, t-digest quantiles — built on one shared
 fold-commit harness (:class:`MergeableStateFold`).
 
+Each twin folds the batch family's own pieces rather than a restated
+copy (mergeable summaries, Agarwal et al. 2012: any merge tree of the
+same merge gives a sound summary):
+
+- exact dedup: the ``min(struct)`` + ``count`` partial of
+  ``operators/dedup.py:exact_dedup``, keyed by its ``content_key``;
+- near-dup LSH: ``minhash_signatures`` + ``band_buckets``, so bucket
+  collisions are bit-identical to ``lsh_candidate_pairs``;
+- heavy hitters: ``operators/sketches.py`` — the batch's
+  ``heavy_hitters`` summary is the per-batch partial and ``mg_merge``
+  (the batch's own final merge) folds it into the state;
+- group-agg audit: ``constraints/engine.py:out_of_bounds``, the batch
+  family's bound predicate;
+- categorical drift: ``constraints/engine.py:categorical_psi`` +
+  ``certified_psi``, the batch family's PSI plan;
+- t-digest quantiles: ``constraints/tdigest.py`` ``partial`` / ``fold``
+  / ``quantiles``;
+- FD audit: its own mergeable ``(min, max, has_null)`` witness. The
+  batch family reports the distinct-dependent count, which that witness
+  cannot produce, so there is no batch piece to share.
+
 A curation pipeline does not ingest its corpus in one batch: documents
 arrive continuously, and every invariant ("keep the first copy of each
 distinct content", "determinant → one dependent", "budget per group")
@@ -49,14 +70,30 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql import Column
 
 from chronominer_spark.constraints import tdigest
+from chronominer_spark.constraints.engine import (
+    categorical_psi,
+    certified_psi,
+    out_of_bounds,
+)
 from chronominer_spark.operators.dedup import (
     band_buckets,
     content_key,
     minhash_signatures,
 )
+from chronominer_spark.operators.sketches import heavy_hitters, mg_merge
 from chronominer_spark.tables import AppendLog, SnapshotTable
 
 logger = logging.getLogger(__name__)
+
+
+def _batch_op(table: SnapshotTable, prefix: str, batch_id: int) -> str | None:
+    """The snapshot-log operation that commits ``batch_id``, or None
+    when a snapshot with it is already committed: the replay guard (ST6
+    idempotence under foreachBatch's at-least-once delivery)."""
+    op = f"{prefix}_batch={batch_id}"
+    if any(s.operation == op for s in table.snapshots()):
+        return None
+    return op
 
 
 class StreamFoldBase:
@@ -149,8 +186,8 @@ class MergeableStateFold(StreamFoldBase):
 
     # -- fold-commit skeleton -----------------------------------------------
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        op = f"{self.OP_PREFIX}_batch={batch_id}"
-        if any(s.operation == op for s in self.table.snapshots()):
+        op = _batch_op(self.table, self.OP_PREFIX, batch_id)
+        if op is None:
             return
         partial = (
             self._partial(batch_df)
@@ -412,7 +449,9 @@ class IncrementalNearDup(StreamFoldBase):
 class IncrementalHeavyHitters(StreamFoldBase):
     """Streaming twin of
     :func:`chronominer_spark.operators.sketches.heavy_hitters`: a
-    Misra–Gries summary folded across micro-batches.
+    Misra–Gries summary folded across micro-batches by the batch
+    sketch's own final merge,
+    :func:`~chronominer_spark.operators.sketches.mg_merge`.
 
     Mergeable-summaries theory (Agarwal et al. 2012) makes the fold
     sound for ANY merge tree, including this left-deep sequential one:
@@ -431,15 +470,8 @@ class IncrementalHeavyHitters(StreamFoldBase):
         self.k = k
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import pandas as pd
-
-        from chronominer_spark.operators.sketches import (
-            _mg_compress,
-            heavy_hitters,
-        )
-
-        op = f"hh_batch={batch_id}"
-        if any(s.operation == op for s in self.table.snapshots()):
+        op = _batch_op(self.table, "hh", batch_id)
+        if op is None:
             return
         # with_total folds the exact non-null item count into the SAME
         # single scan as the MG partials (the previous separate count()
@@ -449,28 +481,9 @@ class IncrementalHeavyHitters(StreamFoldBase):
                                 with_total=True) \
             .withColumnRenamed("est_count", "cnt")
         if self.table.exists():
-            state = self.table.read()
-            k = self.k
-
-            def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-                null_mask = pdf["item"].isna()
-                counts = _mg_compress(
-                    pdf[~null_mask].groupby("item")["cnt"].sum().to_dict(),
-                    k)
-                items = list(counts)
-                cnts = list(counts.values())
-                # running total: prior state's NULL row + batch's
-                items.append(None)
-                cnts.append(int(pdf[null_mask]["cnt"].sum()))
-                return pd.DataFrame(
-                    {"item": items, "cnt": pd.array(cnts, dtype="int64")})
-
-            merged = (
-                state.unionByName(partial)
-                .withColumn("_one", F.lit(1))
-                .groupBy("_one")
-                .applyInPandas(merge, "item string, cnt long")
-            )
+            # the running total folds as the NULL rows: state's + batch's
+            merged = mg_merge(self.table.read().unionByName(partial),
+                              self.k, with_total=True)
         else:
             merged = partial
         self.table.write_snapshot(merged, operation=op)
@@ -616,14 +629,9 @@ class IncrementalGroupAggAudit(MergeableStateFold):
             "avg": F.when(F.col("vcnt") > 0,
                           F.col("vsum") / F.col("vcnt")),
         }[self.agg]
-        ok = F.lit(True)
-        if self.lo is not None:
-            ok = ok & (agg_val >= F.lit(self.lo))
-        if self.hi is not None:
-            ok = ok & (agg_val <= F.lit(self.hi))
         return s.select(
             self.group_col, "n_rows", agg_val.alias("agg_value"),
-            (~F.coalesce(ok, F.lit(False))).alias("violating"),
+            out_of_bounds(agg_val, self.lo, self.hi).alias("violating"),
         )
 
 
@@ -674,47 +682,22 @@ class IncrementalCategoricalDrift(MergeableStateFold):
                max_psi: float = 0.25,
                max_categories: int = 10_000) -> DataFrame:
         """Per-partition Laplace-smoothed PSI of the ingested counts vs
-        ``ref_df`` — the identical formula as the batch family
-        (full-outer category alignment, ``smooth`` added to every
-        aligned cell, k = aligned category count), so the folded verdict
-        equals the batch verdict over the concatenated input
-        (fixed-point pytest). Columns: partition value, ``n_categories``,
+        ``ref_df`` — the batch family's own plan
+        (:func:`~chronominer_spark.constraints.engine.categorical_psi`:
+        full-outer category alignment, ``smooth`` added to every aligned
+        cell, k = aligned category count), so the folded verdict equals
+        the batch verdict over the concatenated input (fixed-point
+        pytest). Columns: partition value, ``n_categories``,
         ``psi`` (null when uncertifiable: an empty side or a category
         blow-up past ``max_categories``), ``cur_total``, ``ref_total``,
         ``passed``.
         """
-        from pyspark.sql import Window as W
-
         pcol, ccol = self.partition_col, self.category_col
-        cur_c = self.counts()
         ref_c = ref_df.groupBy(pcol, ccol).agg(F.count(F.lit(1)).alias("rn"))
-        j = (
-            cur_c.join(ref_c, [pcol, ccol], "full_outer")
-            .select(pcol,
-                    F.coalesce("cn", F.lit(0)).alias("cn"),
-                    F.coalesce("rn", F.lit(0)).alias("rn"))
-        )
-        w = W.partitionBy(pcol)
-        j = (j.withColumn("ct", F.sum("cn").over(w))
-              .withColumn("rt", F.sum("rn").over(w))
-              .withColumn("k", F.count(F.lit(1)).over(w)))
-        pc = (F.col("cn") + smooth) / (F.col("ct") + smooth * F.col("k"))
-        pr = (F.col("rn") + smooth) / (F.col("rt") + smooth * F.col("k"))
-        term = (pc - pr) * F.log(pc / pr)
-        agg = j.groupBy(pcol).agg(
-            F.sum(term).alias("_psi"),
-            F.first("ct").alias("cur_total"),
-            F.first("rt").alias("ref_total"),
-            F.first("k").alias("n_categories"),
-        )
-        certifiable = (
-            (F.col("cur_total") > 0) & (F.col("ref_total") > 0)
-            & (F.col("n_categories") <= F.lit(int(max_categories)))
-        )
-        return agg.select(
+        return categorical_psi(self.counts(), ref_c, pcol, smooth).select(
             pcol,
             F.col("n_categories").cast("long").alias("n_categories"),
-            F.when(certifiable, F.col("_psi")).cast("double").alias("psi"),
+            certified_psi(max_categories).cast("double").alias("psi"),
             F.col("cur_total").cast("long").alias("cur_total"),
             F.col("ref_total").cast("long").alias("ref_total"),
         ).withColumn(

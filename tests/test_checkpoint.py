@@ -146,3 +146,44 @@ def test_run_disarms_ref_agg_cache(runner, transcripts, ref_snapshot,
     with pytest.raises(RuntimeError, match="injected crash"):
         runner.run(transcripts, ref_snapshot, snapshot_id=2)
     assert runner.evaluator.ref_agg_cache is None
+
+
+def test_ref_agg_cache_rebuilds_when_dir_vanishes_after_check(
+        spark, tmp_path, monkeypatch):
+    """A cache directory that vanishes between ``load``'s ``_SUCCESS``
+    check and its parquet read is a miss, not a ``PATH_NOT_FOUND``
+    crash: ``get_or_build`` rebuilds and returns the fresh rows."""
+    import os
+    import shutil
+
+    from chronominer_spark import checkpoint
+    from chronominer_spark.checkpoint import RefAggCache
+
+    cache = RefAggCache(spark, str(tmp_path / "refagg"))
+    first = spark.createDataFrame([("p1", 3)], "_pid string, n long")
+    cache.save("k", first)
+
+    real_exists = os.path.exists
+
+    def exists_then_vanish(path):
+        found = real_exists(path)
+        if found and str(path).endswith("_SUCCESS"):
+            shutil.rmtree(os.path.dirname(path))
+        return found
+
+    monkeypatch.setattr(checkpoint.os.path, "exists", exists_then_vanish)
+    assert cache.load("k") is None
+    monkeypatch.setattr(checkpoint.os.path, "exists", real_exists)
+
+    cache.save("k", first)
+    monkeypatch.setattr(checkpoint.os.path, "exists", exists_then_vanish)
+    built = []
+
+    def build():
+        built.append(1)
+        return spark.createDataFrame([("p1", 4)], "_pid string, n long")
+
+    got = cache.get_or_build("k", build)
+    monkeypatch.setattr(checkpoint.os.path, "exists", real_exists)
+    assert built == [1]
+    assert [tuple(r) for r in got.collect()] == [("p1", 4)]

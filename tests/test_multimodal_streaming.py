@@ -493,6 +493,41 @@ def test_incremental_heavy_hitters_contract_across_batches(spark, tmp_path):
     assert inc.table.current_snapshot_id() == before
 
 
+def test_incremental_heavy_hitters_folds_through_batch_merge(spark, tmp_path):
+    """The twin's state is the batch sketch's own pieces, exactly: after
+    one batch it equals ``heavy_hitters(with_total=True)`` in items,
+    counts and total, and after a second batch it equals ``mg_merge``
+    of that state with the second batch's sketch."""
+    from chronominer_spark.operators.sketches import heavy_hitters, mg_merge
+    from chronominer_spark.streaming.dedup_stream import IncrementalHeavyHitters
+
+    rows = [(i, ["hot", "hot", "warm", "c%02d" % (i % 37)][i % 4])
+            for i in range(2000)]
+    full = spark.createDataFrame(rows, "rid long, item string")
+    b0 = full.where(F.col("rid") < 1200).select("item")
+    b1 = full.where(F.col("rid") >= 1200).select("item")
+    k = 4
+
+    def as_dict(df, cnt):
+        return {r["item"]: r[cnt] for r in df.collect()}
+
+    inc = IncrementalHeavyHitters(spark, str(tmp_path / "hh"), "item", k=k)
+    inc.process_batch(b0, 0)
+    want = as_dict(heavy_hitters(b0, "item", k, with_total=True), "est_count")
+    summary, total = inc.result()
+    assert as_dict(summary, "est_count") == {
+        i: c for i, c in want.items() if i is not None}
+    assert total == want[None] == 1200
+
+    state0 = inc.table.read()
+    inc.process_batch(b1, 1)
+    fold = mg_merge(state0.unionByName(
+        heavy_hitters(b1, "item", k, with_total=True)
+        .withColumnRenamed("est_count", "cnt")), k, with_total=True)
+    assert as_dict(inc.table.read(), "cnt") == as_dict(fold, "cnt")
+    assert inc.result()[1] == 2000
+
+
 def test_incremental_fd_audit_matches_batch_family(spark, tmp_path):
     """Streaming twin of the functional_dependency family: the same
     frame split into 3 micro-batches and folded through the mergeable
@@ -673,6 +708,56 @@ def test_incremental_categorical_drift_matches_batch_family(spark, tmp_path):
     before = inc.table.current_snapshot_id()
     inc.process_batch(cur_full.drop("b").limit(3), 0)
     assert inc.table.current_snapshot_id() == before
+
+
+def test_categorical_psi_is_one_plan_for_family_twin_and_q58(spark, tmp_path):
+    """The engine's ``drift_categorical``, its streaming twin and a
+    q58-shaped ``categorical_psi`` call give the SAME PSI (``==``) on
+    the same counts, and both certifying callers null-and-fail the two
+    uncertifiable edges: a partition on only one side, and more aligned
+    categories than ``max_categories``."""
+    from chronominer_spark.constraints.engine import (
+        SuiteEvaluator, categorical_psi)
+    from chronominer_spark.constraints.spec import (
+        ConstraintSuite, drift_categorical)
+    from chronominer_spark.streaming.dedup_stream import (
+        IncrementalCategoricalDrift)
+
+    # p1: 2 categories, shifted; p2: 3 aligned categories (> cap 2);
+    # p3: current side only
+    ref_rows = [(1, "a")] * 7 + [(1, "b")] * 3 \
+        + [(2, "x")] * 4 + [(2, "y")] * 4 + [(2, "z")] * 2
+    cur_rows = [(1, "a")] * 2 + [(1, "b")] * 5 \
+        + [(2, "x")] * 6 + [(2, "y")] * 3 + [(3, "q")] * 4
+    ref = spark.createDataFrame(ref_rows, "pbucket int, cat string")
+    cur = spark.createDataFrame(cur_rows, "pbucket int, cat string")
+
+    suite = ConstraintSuite(name="cd_psi", constraints=(
+        drift_categorical("cat", max_psi=10.0, max_categories=2),))
+    res, _ = SuiteEvaluator(spark, suite).evaluate(cur, ref, snapshot_id=1)
+    eng = {int(r["partition_id"].split("=")[1]): r for r in res.collect()}
+
+    inc = IncrementalCategoricalDrift(
+        spark, str(tmp_path / "cd"), "pbucket", "cat")
+    inc.process_batch(cur, 0)
+    twin = {r["pbucket"]: r for r in
+            inc.result(ref, max_psi=10.0, max_categories=2).collect()}
+
+    def counts(df, name):
+        return df.groupBy("pbucket", "cat").agg(F.count(F.lit(1)).alias(name))
+
+    raw = {r["pbucket"]: r for r in categorical_psi(
+        counts(cur, "cn"), counts(ref, "rn"), "pbucket", 0.5).collect()}
+
+    assert eng[1]["observed"] == twin[1]["psi"] == raw[1]["psi"] > 0
+    assert eng[1]["passed"] and twin[1]["passed"]
+    for p in (2, 3):
+        assert raw[p]["psi"] is not None
+        assert eng[p]["observed"] is None and not eng[p]["passed"]
+        assert twin[p]["psi"] is None and not twin[p]["passed"]
+    assert raw[2]["n_categories"] == twin[2]["n_categories"] == 3
+    assert (raw[3]["cur_total"], raw[3]["ref_total"]) == (4, 0)
+    assert eng[3]["rows_checked"] == twin[3]["cur_total"] == 4
 
 
 def test_incremental_tdigest_matches_batch_within_envelope(spark, tmp_path):

@@ -1017,9 +1017,39 @@ def test_group_agg_check_bounds_and_null_discipline(spark):
     assert {v["value"] for v in vio_lo.collect()} == {"c1", "c3"}
 
 
-def test_unknown_constraint_kind_raises(spark, transcripts):
+def test_family_table_covers_every_spec_kind():
+    """Every kind a public ``spec.py`` constructor emits has a row in
+    the engine's kind -> family table, and the kinds that refuse
+    ``ref_df=None`` are exactly the table's ref-needing rows."""
+    import ast
+    import pathlib
+
+    from chronominer_spark.constraints import spec
+    from chronominer_spark.constraints.engine import (
+        FAMILIES, REF_REQUIRING_KINDS, ROW_LEVEL_KINDS)
+
+    tree = ast.parse(pathlib.Path(spec.__file__).read_text())
+    kinds = {
+        node.args[1].value for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "Constraint"
+        and len(node.args) > 1 and isinstance(node.args[1], ast.Constant)
+    }
+    assert len(kinds) == 25
+    assert kinds <= set(FAMILIES), kinds - set(FAMILIES)
+    assert ROW_LEVEL_KINDS <= set(FAMILIES)
+    assert REF_REQUIRING_KINDS == {
+        k for k, (_, needs_ref) in FAMILIES.items() if needs_ref}
+    assert REF_REQUIRING_KINDS == {
+        "text_equality", "drift_psi", "drift_ks", "drift_quantile",
+        "drift_categorical", "row_count_drift"}
+
+
+def test_unknown_constraint_kind_raises(spark, transcripts, ref_snapshot):
     """A typo'd or future constraint kind must fail loudly — falling
-    through the dispatch silently would read as all-pass."""
+    through the dispatch silently would read as all-pass — and before
+    any Spark job: a ``digest="auto"`` equality ahead of the typo must
+    not get to run its sampling probe."""
     from chronominer_spark.constraints.engine import SuiteEvaluator
     from chronominer_spark.constraints.spec import (
         Constraint, ConstraintSuite, not_null)
@@ -1030,3 +1060,17 @@ def test_unknown_constraint_kind_raises(spark, transcripts):
                      Constraint("bogus:x", "not_nul", {"col": "x"})))
     with pytest.raises(ValueError, match="unknown constraint kind"):
         SuiteEvaluator(spark, suite).evaluate(transcripts)
+
+    probed = ConstraintSuite(
+        name="typo_after_probe",
+        constraints=(text_equality("text", digest="auto"),
+                     Constraint("bogus:x", "not_nul", {"col": "x"})))
+    sc = spark.sparkContext
+    sc.setJobGroup("unknown-kind", "no job may run before the kind check")
+    try:
+        with pytest.raises(ValueError, match="unknown constraint kind"):
+            SuiteEvaluator(spark, probed).evaluate(transcripts, ref_snapshot)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("unknown-kind") == []

@@ -5,7 +5,13 @@ there and has no ``main``), and every ``chronominer_spark`` name it
 uses must still exist — names imported at module level or lazily
 inside a function, and ``<alias>.<name>`` attributes read off an
 imported ``chronominer_spark`` module — so removing engine code a kept
-script depends on fails here rather than at the script's next use."""
+script depends on fails here rather than at the script's next use.
+
+The benchmark's ``perfbench/*.py`` files are only read, never imported
+(they are a frozen instrument with their own entry point): the same
+name check runs over their source, plus every ``wrap(<engine class>,
+"<attr>", ...)`` span target of ``perfbench/tracing.py``, so a refactor
+that breaks the benchmark fails here."""
 
 from __future__ import annotations
 
@@ -21,11 +27,15 @@ TOOLS = sorted(
     p for p in (REPO / "tools").glob("*.py") if p.name != "__init__.py"
 )
 SCRIPTS = TOOLS + [REPO / "bench_extra.py"]
+PERFBENCH = sorted((REPO / "perfbench").glob("*.py"))
 
 
-def _check_engine_names(path: pathlib.Path) -> None:
+def _check_engine_names(path: pathlib.Path) -> set[tuple[str, str]]:
+    """Assert every ``chronominer_spark`` name ``path`` uses exists;
+    return the ``(class, attr)`` targets of its ``wrap`` calls."""
     tree = ast.parse(path.read_text())
     modules: dict[str, types.ModuleType] = {}   # local alias -> module
+    imported: dict[str, object] = {}            # local name -> object
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom) and node.module \
                 and node.module.startswith("chronominer_spark"):
@@ -34,6 +44,7 @@ def _check_engine_names(path: pathlib.Path) -> None:
                 assert hasattr(target, alias.name), (
                     f"{path.name}: {node.module}.{alias.name} is gone")
                 obj = getattr(target, alias.name)
+                imported[alias.asname or alias.name] = obj
                 if isinstance(obj, types.ModuleType):
                     modules[alias.asname or alias.name] = obj
         elif isinstance(node, ast.Import):
@@ -47,6 +58,19 @@ def _check_engine_names(path: pathlib.Path) -> None:
             mod = modules[node.value.id]
             assert hasattr(mod, node.attr), (
                 f"{path.name}: {mod.__name__}.{node.attr} is gone")
+    wrapped = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) \
+                and getattr(node.func, "id", None) == "wrap" \
+                and len(node.args) > 1 \
+                and isinstance(node.args[0], ast.Name) \
+                and node.args[0].id in imported \
+                and isinstance(node.args[1], ast.Constant):
+            cls, attr = node.args[0].id, node.args[1].value
+            assert hasattr(imported[cls], attr), (
+                f"{path.name}: wrap target {cls}.{attr} is gone")
+            wrapped.add((cls, attr))
+    return wrapped
 
 
 @pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: p.stem)
@@ -58,3 +82,11 @@ def test_tool_imports(path):
     else:
         importlib.import_module(path.stem)
     _check_engine_names(path)
+
+
+@pytest.mark.parametrize("path", PERFBENCH, ids=lambda p: f"perfbench-{p.stem}")
+def test_perfbench_engine_names(path):
+    wrapped = _check_engine_names(path)
+    if path.name == "tracing.py":
+        assert {("RefAggCache", "load"), ("RefAggCache", "save"),
+                ("SnapshotTable", "snapshots")} <= wrapped, wrapped
