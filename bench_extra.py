@@ -53,6 +53,14 @@ def _timed(spark, label: str, fn) -> float:
     return dt
 
 
+def _timed_value(spark, times: dict, key: str, label: str, fn):
+    """:func:`_timed` for a step whose result the next step reads: the
+    time goes to ``times[key]``, the result is returned."""
+    box: list = []
+    times[key] = _timed(spark, label, lambda: box.append(fn()))
+    return box[0]
+
+
 def cmd_noop(names: list[str]) -> None:
     from chronominer_spark.queries import QUERIES
     spark = _session()
@@ -77,33 +85,21 @@ def cmd_phases() -> None:
 
     from chronominer_spark.operators import dedup as D
     from chronominer_spark.operators import similarity as S
-    from chronominer_spark.queries import QUERIES
+    from chronominer_spark.queries import QUERIES, _plant_jittered
 
     spark = _session()
     for tbl in ("documents", "embeddings"):
         spark.read.parquet(f"{SF_DIR}/{tbl}.parquet").count()
     res: dict[str, dict[str, float]] = {}
 
-    # ---- q35 phases ----------------------------------------------------
+    # ---- q35 phases: the stages lsh_topk runs for embedding_near_dups --
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     base = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
-    planted = (
-        base.where(F.col("vec_id") % 10 == 0)
-        .select(F.col("vec_id").alias("orig_id"), "embedding")
-        .select(
-            (F.col("orig_id") + 1_000_000).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x, d: x + F.lit(0.001)
-                * (F.pmod(F.col("orig_id") * 31 + d.cast("long"), F.lit(7)) - 3)
-                .cast("double"),
-            ).alias("embedding"),
-        )
-    )
-    corpus = base.unionByName(planted)
+    corpus = base.unionByName(
+        _plant_jittered(base, 1_000_000, 31, 7, 3, 0.001))
     p = res["q35"] = {}
     n = corpus.count()
     print(f"  q35 corpus rows: {n}", file=sys.stderr)
@@ -111,18 +107,18 @@ def cmd_phases() -> None:
         [S._hyperplane(7, t, b, 64, "rademacher_md5") for b in range(10)]
         for t in range(6)
     ]
-    wp = S._broadcast_nested(
-        corpus.select(F.col("vec_id").alias("id"),
-                      F.col("embedding").alias("__v")),
-        "__planes", planes, depth=3)
-    buck = wp.select(
-        "id", F.explode(S._sketch_buckets("__v", "__planes")).alias("bucket"))
+    sketch = S._np_sketch_udf(planes)
+    buck = corpus.select(F.col("vec_id").alias("id"),
+                         F.explode(sketch(F.col("embedding"))).alias("bucket"))
     p["bucketize_noop"] = _timed(spark, "q35:bucketize", lambda: _noop(buck))
     cb = buck.persist(StorageLevel.MEMORY_AND_DISK)
     p["bucketize_persist"] = _timed(spark, "q35:persist", lambda: cb.count())
+    kept = _timed_value(
+        spark, p, "hot_bucket_guard", "q35:guard",
+        lambda: D.drop_hot_buckets(cb, ["bucket"], 10_000, "q35:guard")[0])
     cand = (
         cb.select(F.col("id").alias("query_id"), "bucket")
-        .join(cb.select(F.col("id").alias("neighbor_id"), "bucket"),
+        .join(kept.select(F.col("id").alias("neighbor_id"), "bucket"),
               on="bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id").distinct()
@@ -130,22 +126,25 @@ def cmd_phases() -> None:
     )
     p["cand_pairs"] = _timed(spark, "q35:cand", lambda: cand.count())
     print(f"  q35 candidate pairs: {cand.count()}", file=sys.stderr)
-    cv = corpus.persist(StorageLevel.MEMORY_AND_DISK)
-    cv.count()
-    attached = (
-        cand.join(cv.select(F.col("vec_id").alias("query_id"),
-                            F.col("embedding").alias("__qv")), "query_id")
-        .join(cv.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("embedding").alias("__nv")), "neighbor_id")
-        .withColumn("cosine", F.round(
-            S.cosine_similarity(F.col("__qv"), F.col("__nv")), 6))
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    p["verify_cosine"] = _timed(spark, "q35:verify", lambda: _noop(attached))
+    vecs = corpus.select("vec_id", "embedding")
+    cos = _timed_value(
+        spark, p, "vector_broadcast", "q35:broadcast",
+        lambda: S._np_cosine_lookup_udf(
+            spark, (vecs, vecs), S.BROADCAST_VECTOR_BYTES // (8 * 64)))
+    if cos is None:
+        print("  q35: vectors over the broadcast cap; verify not timed",
+              file=sys.stderr)
+    else:
+        scored = cand.select(
+            "query_id", "neighbor_id",
+            F.round(cos(F.col("query_id"), F.col("neighbor_id")), 6)
+            .alias("cosine"))
+        p["verify_cosine"] = _timed(spark, "q35:verify",
+                                    lambda: _noop(scored))
     p["full_query"] = _timed(
         spark, "q35:full",
         lambda: QUERIES["q35_embedding_near_dups"](spark, SF_DIR).count())
-    cb.unpersist(); cand.unpersist(); cv.unpersist()
+    cb.unpersist(); cand.unpersist()
 
     # ---- q26 phases ----------------------------------------------------
     p = res["q26"] = {}
@@ -153,12 +152,10 @@ def cmd_phases() -> None:
         [S._hyperplane(42, t, b, 64, "rademacher_md5") for b in range(4)]
         for t in range(8)
     ]
-    wp26 = S._broadcast_nested(
-        emb.select(F.col("vec_id").alias("id"),
-                   F.col("embedding").alias("__v")),
-        "__planes", planes26, depth=3)
-    buck26 = wp26.select(
-        "id", F.explode(S._sketch_buckets("__v", "__planes")).alias("bucket"))
+    sketch26 = S._np_sketch_udf(planes26)
+    buck26 = emb.select(
+        F.col("vec_id").alias("id"),
+        F.explode(sketch26(F.col("embedding"))).alias("bucket"))
     p["bucketize_noop"] = _timed(spark, "q26:bucketize",
                                  lambda: _noop(buck26))
     p["full_query"] = _timed(

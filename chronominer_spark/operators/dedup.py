@@ -13,6 +13,8 @@ comparing all pairs:
   computable in DuckDB for the correctness oracle)
 - :func:`lsh_candidate_pairs`  banded LSH over the signature -> candidate
   pairs via bucket self-join (never O(n^2))
+- :func:`drop_hot_buckets`     the hot-bucket guard shared by every LSH
+  self-join (MinHash bands, hyperplane sketches, streaming compaction)
 - :func:`ngram_jaccard_pairs`  exact Jaccard on shingle-hash sets for a
   given candidate pair set (verification step after LSH)
 - :func:`prefix_jaccard_pairs` exact all-pairs Jaccard join by prefix
@@ -395,6 +397,51 @@ def band_buckets(
     ).select("id", "bb.band", "bb.bucket")
 
 
+def drop_hot_buckets(
+    frame: DataFrame, keys: list[str], max_bucket_size: int, who: str,
+) -> tuple[DataFrame, int, int]:
+    """The hot-bucket guard of both LSH families (MinHash bands here,
+    hyperplane sketches in :func:`~chronominer_spark.operators.similarity.lsh_topk`,
+    and the streaming state compaction): one degenerate bucket (e.g.
+    thousands of boilerplate docs or all-zero vectors) would reintroduce
+    O(B²) pairs in a bucket self-join, so every ``keys`` group holding
+    more than ``max_bucket_size`` rows of ``frame`` is EXCLUDED, and the
+    drop is logged as ``<who>: dropping N hot bucket(s)`` with bucket and
+    row counts — never a silent cap. Members of a dropped bucket can
+    still pair through their other buckets.
+
+    The HOT set is materialized once (eager ``localCheckpoint``: one
+    aggregate over ``frame``; tiny by construction — each entry is an
+    entire dropped bucket), then applied as ONE broadcast anti-join.
+    anti(hot) ≡ semi(ok): the sizes partition every group into ≤cap /
+    >cap, so the output equals the shuffled left-semi against the ≤cap
+    list, whose aggregate subtree was re-planned under both sides of
+    the caller's self-join (guide §2.4, §3.1).
+
+    Returns ``(kept, n_buckets, n_rows)``: ``frame`` minus the hot
+    groups, and the number of groups and rows dropped."""
+    hot = (
+        frame.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__bsz"))
+        .where(F.col("__bsz") > max_bucket_size)
+        .localCheckpoint(eager=True)
+    )
+    dropped = hot.agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.coalesce(F.sum("__bsz"), F.lit(0)).alias("n_rows"),
+    ).collect()[0]
+    n_buckets, n_rows = int(dropped["n_buckets"]), int(dropped["n_rows"])
+    if n_buckets:
+        logger.warning(
+            "%s: dropping %d hot bucket(s) covering %d rows (> "
+            "max_bucket_size=%d); members may still pair via other buckets",
+            who, n_buckets, n_rows, max_bucket_size,
+        )
+    kept = frame.join(F.broadcast(hot.select(*keys)), on=list(keys),
+                      how="left_anti")
+    return kept, n_buckets, n_rows
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame, id_col: str, bands: int = 4,
     num_hashes: int | None = None,
@@ -410,51 +457,17 @@ def lsh_candidate_pairs(
     excluded from banding; the same check runs row-level in the plan so
     a mismatched signature fails loudly instead of losing recall.
 
-    ``max_bucket_size`` is the hot-bucket guard: one degenerate bucket
-    (e.g. thousands of empty/boilerplate docs) would reintroduce O(B²)
-    pairs in the self-join. Buckets above the cap are EXCLUDED from
-    candidate generation and the drop is logged with bucket counts —
-    never a silent cap. Docs in a dropped bucket can still pair through
-    their other bands. Pass ``None`` to disable (exact small-scale
-    runs)."""
+    ``max_bucket_size`` arms the hot-bucket guard,
+    :func:`drop_hot_buckets`, over the (band, bucket) groups. Pass
+    ``None`` to disable (exact small-scale runs)."""
     banded = band_buckets(signatures, id_col, bands, num_hashes)
 
     cached = None
     if max_bucket_size is not None:
         from pyspark import StorageLevel
         cached = banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-        # materialize the HOT bucket set once (eager checkpoint: one agg
-        # over the cached band table; the set is tiny by construction —
-        # each entry is an entire dropped bucket). The guard then runs
-        # as ONE broadcast anti-join instead of a shuffled left-semi
-        # against the full ≤cap bucket list whose aggregate subtree was
-        # re-planned under BOTH sides of the self-join (guide §2.4:
-        # duplicated exchanges removed; §3.1: broadcast the small side).
-        # anti(hot) ≡ semi(ok): sizes partitions every (band, bucket)
-        # of `banded` into ≤cap / >cap, so the two filters are
-        # complementary — output identical.
-        hot = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-            .where(F.col("__bsz") > max_bucket_size)
-            .localCheckpoint(eager=True)
-        )
-        dropped = (
-            hot.agg(F.count(F.lit(1)).alias("n_buckets"),
-                    F.sum("__bsz").alias("n_rows"))
-            .collect()[0]
-        )
-        if dropped["n_buckets"]:
-            logger.warning(
-                "lsh_candidate_pairs: dropping %d hot bucket(s) covering %d "
-                "doc-band rows (> max_bucket_size=%d); docs may still pair "
-                "via other bands",
-                dropped["n_buckets"], dropped["n_rows"], max_bucket_size,
-            )
-        banded = banded.join(
-            F.broadcast(hot.select("band", "bucket")),
-            on=["band", "bucket"], how="left_anti",
-        )
+        banded, _, _ = drop_hot_buckets(banded, ["band", "bucket"],
+                                        max_bucket_size, "lsh_candidate_pairs")
 
     a = banded.alias("a")
     b = banded.alias("b")

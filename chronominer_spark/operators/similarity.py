@@ -1,7 +1,5 @@
 """Similarity search over embedding columns (array<float>).
 
-- :func:`cosine_similarity`  pure-expression dot/norm via ``zip_with`` +
-  ``aggregate`` (JVM-side; no UDF)
 - :func:`brute_force_topk`   exact top-k: broadcast the (small) query set
   against the corpus, window-rank per query. The baseline and the
   verifier for the approximate path.
@@ -10,19 +8,31 @@
   of several sketch tables; verify with exact cosine inside buckets.
   Scale path: shuffle is (docs × tables) bucket keys, never the cross
   product. Hot buckets are capped (logged, never silent).
+- :func:`embedding_near_dups` cosine ≥ threshold pairs through the
+  :func:`lsh_topk` self-join.
 - :func:`ivf_train` / :func:`ivf_build_index` / :func:`ivf_search`
   IVF (inverted-file) ANN with the index build and the search as
   SEPARATE jobs: the cell-assignment index is an ordinary DataFrame the
   caller can persist as a table and reuse across query batches.
   :func:`ivf_topk` is the one-shot convenience wrapper.
 
+The vector family owns ONE cosine (:func:`_cosine_rows` for a batch of
+row pairs, :func:`_cosine_pair` for one pair), ONE ranker
+(:func:`_top_k`) and shares the LSH hot-bucket guard
+(:func:`~chronominer_spark.operators.dedup.drop_hot_buckets`) with the
+MinHash family; every scoring path calls them through the two Arrow
+UDFs :func:`_np_cosine_udf` (vectors as columns) and
+:func:`_np_cosine_lookup_udf` (vectors from broadcast matrices).
+:func:`cosine_similarity` and :func:`_sketch_buckets` are the Catalyst
+forms of the cosine and the sign sketch, kept as the reference the
+kernels are pytest-asserted against; no engine path calls them.
+
 Hyperplanes and centroids are NOT folded into the query plan as
 literals: they ride in a one-row broadcast DataFrame as a nested array
-column (``crossJoin(broadcast(...))``), so plan size stays O(1) in
-(tables × bits × dim) / (centroids × dim). With plan literals a
-768-dim × 256-centroid index used to blow past codegen limits — the
-broadcast relation is the physically correct home for index constants
-at scale.
+column (``crossJoin(broadcast(...))``) or in the sketch UDF's closure,
+so plan size stays O(1) in (tables × bits × dim) / (centroids × dim).
+With plan literals a 768-dim × 256-centroid index used to blow past
+codegen limits.
 
 Hyperplanes are generated deterministically (seeded md5), so results
 are reproducible at any parallelism.
@@ -38,6 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from chronominer_spark.operators.dedup import drop_hot_buckets
 
 logger = logging.getLogger(__name__)
 
@@ -63,6 +75,23 @@ def cosine_similarity(a, b) -> F.Column:
     return F.when(d == 0, F.lit(0.0)).otherwise(dot(ca, cb) / d)
 
 
+def _top_k(pairs: DataFrame, cosine: F.Column, k: int) -> DataFrame:
+    """The one ranker of the vector family: score each (query_id,
+    neighbor_id) pair with ``round(cosine, 6)`` and keep each query's
+    top ``k`` by that ROUNDED cosine desc, ties broken by neighbor_id —
+    a total order, so float noise below the 6th decimal can never flip
+    an ordering across engines or parallelism levels."""
+    w = W.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        pairs.withColumn("cosine", F.round(cosine, 6))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def brute_force_topk(
     queries: DataFrame, corpus: DataFrame,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -77,26 +106,8 @@ def brute_force_topk(
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).alias("__cv"))
-    # Arrow/numpy cosine (guide §4.2): one einsum per batch instead of
-    # ~3·dim interpreted lambda evals per (query, corpus) pair; the
-    # surrounding F.round keeps Spark's HALF_UP rounding byte-identical
-    cos = _np_cosine_udf()
-    scored = (
-        q.crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(cos(F.col("__qv"), F.col("__cv")), 6),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    pairs = q.crossJoin(c).where(F.col("query_id") != F.col("neighbor_id"))
+    return _top_k(pairs, _np_cosine_udf()(F.col("__qv"), F.col("__cv")), k)
 
 
 # --------------------------------------------------------------------------
@@ -148,10 +159,10 @@ def _broadcast_nested(
 def _sketch_buckets(vec_col, planes_col: str) -> F.Column:
     """array<string> of per-table bucket keys ('t<i>:<bits>') for a
     vector, computed against the broadcast plane tensor
-    (tables × bits × dim). Reference (pure-Catalyst) formulation; the
-    hot path uses :func:`_np_sketch_udf`, whose semantics mirror this
-    expression bit for bit — kept for the A/B harness and as the
-    executable spec."""
+    (tables × bits × dim). Reference (pure-Catalyst) formulation: every
+    engine path uses :func:`_np_sketch_udf`, whose semantics mirror this
+    expression bit for bit; this one is kept as the executable spec the
+    tests compare that kernel against."""
     v = F.transform(
         F.col(vec_col) if isinstance(vec_col, str) else vec_col,
         lambda x: x.cast("double"),
@@ -229,54 +240,71 @@ def _np_sketch_udf(planes: list[list[list[float]]]):
     return sketch
 
 
+def _cosine_pair(a, b) -> float | None:
+    """Cosine of ONE vector pair under :func:`cosine_similarity`'s
+    rules: NULL on either side → NULL; ``|a|·|b| == 0`` → 0.0
+    (zero-length arrays included); otherwise a length mismatch → NULL
+    (the fold's zip_with null-padding makes the dot NULL); NaN elements
+    propagate. Inputs are widened to float64 first, like the fold's
+    element-wise cast."""
+    if a is None or b is None:
+        return None
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    d = float(np.sqrt((a * a).sum()) * np.sqrt((b * b).sum()))
+    if d == 0.0:
+        return 0.0
+    if a.shape[0] != b.shape[0]:
+        return None
+    return float(a @ b) / d
+
+
+def _cosine_rows(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two float64 matrices (row i of ``x`` against
+    row i of ``y``): one einsum per product instead of ~3·dim
+    interpreted lambda evaluations per row (guide §4.2 — the q35 verify
+    stage over 3.7M candidate pairs spent ~30 s in the Catalyst fold).
+    Zero norm → 0.0 and NaN propagates, as in :func:`_cosine_pair`. When
+    the two sides differ in width, every row goes through
+    :func:`_cosine_pair` (NULL, carried as NaN, unless a norm is 0)."""
+    if x.shape[1] != y.shape[1]:
+        return np.array([_cosine_pair(a, b) for a, b in zip(x, y)],
+                        dtype=np.float64)
+    dots = np.einsum("ij,ij->i", x, y)
+    d = np.sqrt(np.einsum("ij,ij->i", x, x)) \
+        * np.sqrt(np.einsum("ij,ij->i", y, y))
+    out = np.zeros(len(x), dtype=np.float64)
+    np.divide(dots, d, out=out, where=d != 0)
+    return out
+
+
+def _stack(vs: pd.Series) -> np.ndarray | None:
+    """A batch of vectors as one (n × dim) float64 matrix, or None when
+    a NULL or ragged row (or an empty batch) prevents stacking."""
+    try:
+        m = np.stack(vs.values).astype(np.float64, copy=False)
+    except (ValueError, TypeError):
+        return None
+    return m if m.ndim == 2 else None
+
+
 def _np_cosine_udf():
-    """Vectorized (Arrow + numpy) twin of :func:`cosine_similarity`,
-    returning the RAW double (callers keep their own ``F.round`` on
-    top, preserving Spark's HALF_UP rounding). One einsum per Arrow
-    batch instead of ~3·dim interpreted lambda evaluations per row
-    (guide §4.2 — the q35 verify stage over 3.7M candidate pairs spent
-    ~30 s in the fold).
-
-    Semantics mirror the expression exactly:
-    - float32 widened to float64 before any product (the fold casts
-      element-wise);
-    - ``d = |a|·|b| == 0`` → 0.0 (zero-length arrays included);
-    - NULL on either side → NULL;
-    - length mismatch → the fold's zip_with null-padding makes the dot
-      NULL, so: 0.0 if d == 0 else NULL;
-    - NaN elements propagate to a NaN cosine (d is NaN, ``NaN == 0``
-      is false, NaN/NaN = NaN), identical to the fold.
-    """
-    def _one(va, vb):
-        if va is None or vb is None:
-            return None
-        a = np.asarray(va, dtype=np.float64)
-        b = np.asarray(vb, dtype=np.float64)
-        d = float(np.sqrt((a * a).sum()) * np.sqrt((b * b).sum()))
-        if d == 0.0:
-            return 0.0
-        if a.shape[0] != b.shape[0]:
-            return None                      # zip_with null-padded dot
-        return float(a @ b) / d
-
+    """Vectorized (Arrow + numpy) twin of :func:`cosine_similarity`
+    over two vector columns, returning the RAW double (callers round
+    through :func:`_top_k`, preserving Spark's HALF_UP rounding). A
+    batch that stacks into two matrices is scored by
+    :func:`_cosine_rows`; a batch holding a NULL or ragged vector
+    falls back to :func:`_cosine_pair` per row (never hit by fixed-dim
+    embedding tables). A NaN cosine (a NaN element) reaches Spark as
+    NULL, because the Arrow conversion masks NaN; the Catalyst fold
+    returns NaN there."""
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        try:
-            x = np.stack(a.values).astype(np.float64, copy=False)
-            y = np.stack(b.values).astype(np.float64, copy=False)
-        except (ValueError, TypeError):
-            # ragged lengths or NULL rows in this batch: exact per-row
-            # fallback (never hit by fixed-dim embedding tables)
-            return pd.Series([_one(va, vb) for va, vb in zip(a, b)],
+        x, y = _stack(a), _stack(b)
+        if x is None or y is None:
+            return pd.Series([_cosine_pair(va, vb) for va, vb in zip(a, b)],
                              dtype="float64")
-        dots = np.einsum("ij,ij->i", x, y)
-        d = np.sqrt(np.einsum("ij,ij->i", x, x)) \
-            * np.sqrt(np.einsum("ij,ij->i", y, y))
-        nz = d != 0
-        out = np.zeros(len(a), dtype=np.float64)
-        np.divide(dots, d, out=out, where=nz)
-        out[~nz] = 0.0
-        return pd.Series(out)
+        return pd.Series(_cosine_rows(x, y))
 
     return cos
 
@@ -305,13 +333,12 @@ def _np_cosine_lookup_udf(spark, side_frames, cap: int):
     performs internally, minus shipping it per pair afterwards.
 
     Semantics are exactly :func:`_np_cosine_udf` on the same float64
-    values (Arrow driver collection is bit-lossless): NULL vector →
-    NULL cosine, zero norm → 0.0, ragged lengths fall back to the
-    per-pair scalar path. ``side_frames`` is (query_df, neighbor_df)
+    values (Arrow driver collection is bit-lossless): pairs of matrix
+    rows are scored by :func:`_cosine_rows`, NULL vectors and vectors
+    whose length differs from their side's first go through
+    :func:`_cosine_pair`. ``side_frames`` is (query_df, neighbor_df)
     of (id, vec) columns; pass the same object twice for a self-join
     (one collection, one broadcast)."""
-    import pandas as pd
-
     def _collect(df):
         pdf = df.limit(cap + 1).toPandas()
         if len(pdf) > cap:
@@ -345,16 +372,6 @@ def _np_cosine_lookup_udf(spark, side_frames, cap: int):
         return None
     bc = spark.sparkContext.broadcast((q_side, n_side))
 
-    def _one(a, b):
-        if a is None or b is None:
-            return None
-        d = float(np.sqrt((a * a).sum()) * np.sqrt((b * b).sum()))
-        if d == 0.0:
-            return 0.0
-        if a.shape[0] != b.shape[0]:
-            return None
-        return float(a @ b) / d
-
     @F.pandas_udf("double")
     def cos(qs: pd.Series, ns: pd.Series) -> pd.Series:
         (qidx, qmat, qodd), (nidx, nmat, nodd) = bc.value
@@ -362,22 +379,14 @@ def _np_cosine_lookup_udf(spark, side_frames, cap: int):
         ni = ns.map(nidx).to_numpy(dtype=np.float64, na_value=np.nan)
         ok = ~(np.isnan(qi) | np.isnan(ni))
         out = np.empty(len(qs), dtype=object)
-        if ok.any():
-            x = qmat[qi[ok].astype(np.int64)]
-            y = nmat[ni[ok].astype(np.int64)]
-            dots = np.einsum("ij,ij->i", x, y)
-            d = np.sqrt(np.einsum("ij,ij->i", x, x)) \
-                * np.sqrt(np.einsum("ij,ij->i", y, y))
-            nz = d != 0
-            c = np.zeros(ok.sum(), dtype=np.float64)
-            np.divide(dots, d, out=c, where=nz)
-            out[np.flatnonzero(ok)] = c
+        out[np.flatnonzero(ok)] = _cosine_rows(
+            qmat[qi[ok].astype(np.int64)], nmat[ni[ok].astype(np.int64)])
         for j in np.flatnonzero(~ok):
             a = qodd.get(int(qs.iloc[j])) if np.isnan(qi[j]) \
                 else qmat[int(qi[j])]
             b = nodd.get(int(ns.iloc[j])) if np.isnan(ni[j]) \
                 else nmat[int(ni[j])]
-            out[j] = _one(a, b)
+            out[j] = _cosine_pair(a, b)
         return pd.Series(out, dtype="float64")
 
     return cos
@@ -397,8 +406,9 @@ def lsh_topk(
 
     ``max_bucket_size`` guards against degenerate buckets on the corpus
     side (e.g. the all-zeros region): larger buckets are excluded from
-    candidate generation with a logged drop — the affected vectors can
-    still be found through their other tables.
+    candidate generation with a logged drop
+    (:func:`~chronominer_spark.operators.dedup.drop_hot_buckets`) — the
+    affected vectors can still be found through their other tables.
 
     Shuffle discipline: the bucket self-join, the candidate ``distinct``
     and the (eager) lineage-truncating checkpoint all carry ONLY
@@ -451,24 +461,8 @@ def lsh_topk(
         if self_join else bucketize(queries, "query_id")
     )
     if max_bucket_size is not None:
-        sizes = cb.groupBy("bucket").agg(F.count(F.lit(1)).alias("__bsz"))
-        dropped = (
-            sizes.where(F.col("__bsz") > max_bucket_size)
-            .agg(F.count(F.lit(1)).alias("n_buckets"),
-                 F.sum("__bsz").alias("n_rows"))
-            .collect()[0]
-        )
-        if dropped["n_buckets"]:
-            logger.warning(
-                "lsh_topk: dropping %d hot bucket(s) covering %d corpus-table "
-                "rows (> max_bucket_size=%d); vectors may still match via "
-                "other tables", dropped["n_buckets"], dropped["n_rows"],
-                max_bucket_size,
-            )
-        cb = cb.join(
-            sizes.where(F.col("__bsz") <= max_bucket_size).select("bucket"),
-            on="bucket", how="left_semi",
-        )
+        cb, _, _ = drop_hot_buckets(cb, ["bucket"], max_bucket_size,
+                                    "lsh_topk")
 
     cand = (
         qb.join(cb, on="bucket")
@@ -489,43 +483,25 @@ def lsh_topk(
     # Spark-driver budget (only the id pair crosses the Arrow boundary,
     # guide §8), otherwise by shuffled re-attach joins on id — still linear
     # in candidates, never in the corpus cross product.
-    # rank on ROUNDED cosine (ties broken by neighbor_id) so float noise
-    # below the 6th decimal can never flip an ordering across engines or
-    # parallelism levels
     qvec = queries.select(F.col(id_col), F.col(vec_col))
     nvec = qvec if self_join else corpus.select(F.col(id_col), F.col(vec_col))
     cap = BROADCAST_VECTOR_BYTES // (8 * dim)
     cos = _np_cosine_lookup_udf(queries.sparkSession, (qvec, nvec), cap)
     if cos is not None:
-        scored = cand.withColumn(
-            "cosine",
-            F.round(cos(F.col("query_id"), F.col("neighbor_id")), 6),
-        )
-    else:
-        logger.warning(
-            "lsh_topk: an id→vector side exceeds %d vectors (%d B at "
-            "dim=%d); verifying through the shuffled re-attach",
-            cap, BROADCAST_VECTOR_BYTES, dim,
-        )
-        qv = qvec.select(F.col(id_col).alias("query_id"),
-                         F.col(vec_col).alias("__query_id_v"))
-        nv = nvec.select(F.col(id_col).alias("neighbor_id"),
-                         F.col(vec_col).alias("__neighbor_id_v"))
-        cand = cand.join(qv, on="query_id").join(nv, on="neighbor_id")
-        cos = _np_cosine_udf()
-        scored = cand.withColumn(
-            "cosine",
-            F.round(cos(F.col("__query_id_v"),
-                        F.col("__neighbor_id_v")), 6),
-        )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+        return _top_k(cand, cos(F.col("query_id"), F.col("neighbor_id")), k)
+    logger.warning(
+        "lsh_topk: an id→vector side exceeds %d vectors (%d B at "
+        "dim=%d); verifying through the shuffled re-attach",
+        cap, BROADCAST_VECTOR_BYTES, dim,
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    qv = qvec.select(F.col(id_col).alias("query_id"),
+                     F.col(vec_col).alias("__query_id_v"))
+    nv = nvec.select(F.col(id_col).alias("neighbor_id"),
+                     F.col(vec_col).alias("__neighbor_id_v"))
+    cand = cand.join(qv, on="query_id").join(nv, on="neighbor_id")
+    cos = _np_cosine_udf()
+    return _top_k(cand, cos(F.col("__query_id_v"), F.col("__neighbor_id_v")),
+                  k)
 
 
 def embedding_near_dups(
@@ -564,8 +540,6 @@ def ivf_train(
     hard-capped driver-sized (≤20k vectors), so Lloyd iterations run in
     driver numpy — training is the one deliberately driver-side step;
     assignment and search stay distributed."""
-    import numpy as np
-
     sample_rows = (
         corpus.select(vec_col)
         .sample(fraction=sample_fraction, seed=seed)
@@ -586,35 +560,6 @@ def ivf_train(
             if len(members):
                 cent[ci] = members.mean(axis=0)
     return [[float(v) for v in c] for c in cent]
-
-
-def ivf_train_distributed(
-    corpus: DataFrame, vec_col: str = "embedding",
-    n_centroids: int = 16, seed: int = 42, iters: int = 20,
-) -> list[list[float]]:
-    """Distributed k-means via Spark MLlib (k-means|| init + Lloyd
-    iterations on executors) — trains on the FULL corpus with no
-    driver-side sample cap, the 100-TB path where :func:`ivf_train`'s
-    deliberate ≤20k driver sample would under-represent the space.
-    Features are L2-NORMALIZED before ``KMeans.fit`` so MLlib's
-    Euclidean objective coincides with the cosine/dot-product metric
-    the IVF assignment uses (on the unit sphere,
-    ‖a−b‖² = 2 − 2·cos(a,b) — minimizing one maximizes the other);
-    recall is asserted in tests for both trainers. Returns plain
-    ``list[list[float]]`` so the index build/search path is identical
-    for either trainer."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nrm = F.greatest(norm(v), F.lit(1e-12))
-    feats = corpus.select(
-        array_to_vector(
-            F.transform(v, lambda x: x / nrm)
-        ).alias("features")
-    )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=iters).fit(feats)
-    return [[float(v) for v in c] for c in model.clusterCenters()]
 
 
 def _nearest_cells(
@@ -673,9 +618,8 @@ def ivf_search(
 ) -> DataFrame:
     """Probe each query's ``n_probe`` nearest cells of a prebuilt index
     and rank exact cosine within those cells — cost ~ corpus/centroids ×
-    n_probe per query instead of the full corpus. Ranking is on
-    ROUNDED cosine (ties broken by neighbor_id), the same
-    float-noise-proof total order :func:`lsh_topk` uses."""
+    n_probe per query instead of the full corpus. Scoring and ranking
+    are the family's own :func:`_np_cosine_udf` and :func:`_top_k`."""
     probed = _broadcast_nested(
         queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("__qv")),
@@ -687,23 +631,12 @@ def ivf_search(
                         lambda s: s["cell"])
         ).alias("cell"),
     )
-    scored = (
+    pairs = (
         probed.join(index, on="cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(cosine_similarity(F.col("__qv"), F.col("__cv")), 6),
-        )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-        .distinct()
-    )
+    cos = _np_cosine_udf()
+    return _top_k(pairs, cos(F.col("__qv"), F.col("__cv")), k).distinct()
 
 
 def ivf_topk(
@@ -711,16 +644,9 @@ def ivf_topk(
     id_col: str = "vec_id", vec_col: str = "embedding",
     k: int = 5, n_centroids: int = 16, n_probe: int = 3,
     sample_fraction: float = 0.2, seed: int = 42, iters: int = 3,
-    distributed_train: bool = False,
 ) -> DataFrame:
-    """One-shot IVF ANN: train + build + search in a single call.
-    ``distributed_train=True`` swaps the bounded driver-sample trainer
-    for MLlib's full-corpus distributed k-means (the scale path)."""
-    if distributed_train:
-        centroids = ivf_train_distributed(corpus, vec_col, n_centroids,
-                                          seed=seed)
-    else:
-        centroids = ivf_train(corpus, vec_col, n_centroids,
-                              sample_fraction, seed, iters)
+    """One-shot IVF ANN: train + build + search in a single call."""
+    centroids = ivf_train(corpus, vec_col, n_centroids,
+                          sample_fraction, seed, iters)
     index = ivf_build_index(corpus, centroids, id_col, vec_col)
     return ivf_search(queries, index, centroids, id_col, vec_col, k, n_probe)

@@ -727,30 +727,7 @@ def q21_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (the ANN baseline): rank on rounded
     cosine so cross-engine float noise cannot flip ties."""
     emb = t(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 8)
-    scored = (
-        F.broadcast(q.select(F.col("vec_id").alias("query_id"),
-                             F.col("embedding").alias("qv")))
-        .crossJoin(emb.select(F.col("vec_id").alias("neighbor_id"),
-                              F.col("embedding").alias("cv")))
-        .where(F.col("query_id") != F.col("neighbor_id"))
-    )
-    # Arrow/numpy cosine (guide §4.2) — same math as cosine_similarity,
-    # one einsum per batch instead of ~3·dim interpreted lambda evals
-    # per pair; F.round on top keeps Spark's HALF_UP rounding
-    from chronominer_spark.operators.similarity import _np_cosine_udf
-    cos = _np_cosine_udf()
-    scored = scored.withColumn(
-        "cosine", F.round(cos(F.col("qv"), F.col("cv")), 6)
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return brute_force_topk(emb.where(F.col("vec_id") < 8), emb, k=3)
 
 
 _Q21_SQL = """
@@ -1186,10 +1163,10 @@ def q31_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbors over a PINNED deterministic
     centroid set: the build (cell assignment), probe and ranked search
     are all DuckDB-mirrorable, so the driver oracle verifies the full
-    assignment+search path exactly. The trainers (driver Lloyd and
-    MLlib k-means||) remain covered by recall-vs-brute-force pytest —
-    their float-summation order is legitimately engine-specific, but the
-    index/search machinery they feed is not, and this query proves it.
+    assignment+search path exactly. The trainer (driver Lloyd) remains
+    covered by recall-vs-brute-force pytest — its float-summation order
+    is legitimately engine-specific, but the
+    index/search machinery it feeds is not, and this query proves it.
     ``sim_round=6`` makes the cell argmax float-noise-proof across
     engines (the same discipline as the rounded-cosine ranking)."""
     from chronominer_spark.operators.similarity import (ivf_build_index,
@@ -1398,6 +1375,30 @@ FROM anchors a LEFT JOIN (SELECT doc, line_no FROM ranked WHERE rn = 1) r
 """
 
 
+def _plant_jittered(base: DataFrame, offset: int, mult: int, mod: int,
+                    shift: int, scale: float) -> DataFrame:
+    """A jittered near-copy of every 10th vector of ``base``: id
+    ``vec_id + offset``, element d shifted by ``scale · (pmod(vec_id ·
+    mult + d, mod) − shift)`` — the planted near-dups of q35 and q39."""
+    # NOTE: the jitter must use the ORIGINAL id. With `(vec_id + offset)
+    # .alias("vec_id")` in the same select, Spark's lateral-column-alias
+    # resolution (3.4+) binds the lambda's `vec_id` to the NEW alias —
+    # silently jittering with the remapped id. Rename first.
+    return (
+        base.where(F.col("vec_id") % 10 == 0)
+        .select(F.col("vec_id").alias("orig_id"), "embedding")
+        .select(
+            (F.col("orig_id") + offset).alias("vec_id"),
+            F.transform(
+                "embedding",
+                lambda x, d: x + F.lit(scale)
+                * (F.pmod(F.col("orig_id") * mult + d.cast("long"),
+                          F.lit(mod)) - shift).cast("double"),
+            ).alias("embedding"),
+        )
+    )
+
+
 def q35_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via hyperplane LSH + exact
     verify. The synthetic embeddings are random (max pairwise cosine
@@ -1412,23 +1413,7 @@ def q35_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
-    # NOTE: the jitter must use the ORIGINAL id. With `(vec_id + 1e6)
-    # .alias("vec_id")` in the same select, Spark's lateral-column-alias
-    # resolution (3.4+) binds the lambda's `vec_id` to the NEW alias —
-    # silently jittering with the remapped id. Rename first.
-    planted = (
-        base.where(F.col("vec_id") % 10 == 0)
-        .select(F.col("vec_id").alias("orig_id"), "embedding")
-        .select(
-            (F.col("orig_id") + 1_000_000).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x, d: x + F.lit(0.001)
-                * (F.pmod(F.col("orig_id") * 31 + d.cast("long"), F.lit(7)) - 3)
-                .cast("double"),
-            ).alias("embedding"),
-        )
-    )
+    planted = _plant_jittered(base, 1_000_000, 31, 7, 3, 0.001)
     corpus = base.unionByName(planted)
     return embedding_near_dups(
         corpus, threshold=0.99, dim=64, n_tables=6, n_bits=10, seed=7,
@@ -1680,24 +1665,9 @@ def q39_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
 
-    def plant(offset: int, mult: int, mod: int, shift: int, scale: float):
-        # rename BEFORE remapping the id (lateral-alias capture, see q35)
-        return (
-            base.where(F.col("vec_id") % 10 == 0)
-            .select(F.col("vec_id").alias("orig_id"), "embedding")
-            .select(
-                (F.col("orig_id") + offset).alias("vec_id"),
-                F.transform(
-                    "embedding",
-                    lambda x, d: x + F.lit(scale)
-                    * (F.pmod(F.col("orig_id") * mult + d.cast("long"),
-                              F.lit(mod)) - shift).cast("double"),
-                ).alias("embedding"),
-            )
-        )
-
-    corpus = base.unionByName(plant(1_000_000, 31, 7, 3, 0.001)) \
-                 .unionByName(plant(2_000_000, 37, 5, 2, 0.002))
+    corpus = base.unionByName(
+        _plant_jittered(base, 1_000_000, 31, 7, 3, 0.001)
+    ).unionByName(_plant_jittered(base, 2_000_000, 37, 5, 2, 0.002))
     pairs = embedding_near_dups(
         corpus, threshold=0.99, dim=64, n_tables=6, n_bits=10, seed=7,
         plane_scheme="rademacher_md5",
@@ -4497,9 +4467,9 @@ ORACLES: dict[str, str] = {
     "q73_incremental_heavy_hitters": _Q53_SQL,
     # the folded digest obeys the batch sketch's bounded-error contract
     "q74_incremental_tdigest_quantiles": _Q29_SQL,
-    # Every catalog query is oracle-backed. q31's TRAINERS (driver Lloyd
-    # and MLlib k-means||) remain pytest-covered (recall vs brute force):
-    # their float-summation order is legitimately engine-specific — but
+    # Every catalog query is oracle-backed. q31's TRAINER (driver Lloyd)
+    # remains pytest-covered (recall vs brute force): its
+    # float-summation order is legitimately engine-specific — but
     # since round 4 the query itself runs the assignment+search path on
     # pinned md5-derived centroids, which IS exactly mirrorable. q29's
     # sketch VALUE is unmirrorable, but its bounded-error verdict against

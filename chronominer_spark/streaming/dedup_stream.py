@@ -10,7 +10,8 @@ same merge gives a sound summary):
 - exact dedup: the ``min(struct)`` + ``count`` partial of
   ``operators/dedup.py:exact_dedup``, keyed by its ``content_key``;
 - near-dup LSH: ``minhash_signatures`` + ``band_buckets``, so bucket
-  collisions are bit-identical to ``lsh_candidate_pairs``;
+  collisions are bit-identical to ``lsh_candidate_pairs``, and
+  compaction drops hot buckets through its ``drop_hot_buckets`` guard;
 - heavy hitters: ``operators/sketches.py`` — the batch's
   ``heavy_hitters`` summary is the per-batch partial and ``mg_merge``
   (the batch's own final merge) folds it into the state;
@@ -61,8 +62,6 @@ snapshots stay readable.
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -78,12 +77,11 @@ from chronominer_spark.constraints.engine import (
 from chronominer_spark.operators.dedup import (
     band_buckets,
     content_key,
+    drop_hot_buckets,
     minhash_signatures,
 )
 from chronominer_spark.operators.sketches import heavy_hitters, mg_merge
 from chronominer_spark.tables import AppendLog, SnapshotTable
-
-logger = logging.getLogger(__name__)
 
 
 def _batch_op(table: SnapshotTable, prefix: str, batch_id: int) -> str | None:
@@ -402,8 +400,9 @@ class IncrementalNearDup(StreamFoldBase):
         :meth:`~chronominer_spark.tables.AppendLog.rewrite`; replay
         guards survive via absorbed-segment labels) with every
         (band, bucket) group whose TOTAL row count exceeds
-        ``max_bucket_size`` EXCLUDED — loudly, with bucket and row
-        counts logged, exactly like the batch path's hot-bucket guard.
+        ``max_bucket_size`` EXCLUDED by the batch path's own hot-bucket
+        guard, :func:`~chronominer_spark.operators.dedup.drop_hot_buckets`
+        (logged with bucket and row counts).
         Docs in a dropped bucket can still pair through their other
         bands; pairs already emitted are never retracted. After
         compaction, per-batch new×state emission through any surviving
@@ -416,33 +415,12 @@ class IncrementalNearDup(StreamFoldBase):
         state = self.buckets.read()
         if state is None:
             return {"n_buckets": 0, "n_rows": 0, "kept_rows": 0}
-        sizes = (
-            state.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("__bsz"))
-        )
-        hot = (
-            sizes.where(F.col("__bsz") > max_bucket_size)
-            .localCheckpoint(eager=True)
-        )
-        dropped = hot.agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.coalesce(F.sum("__bsz"), F.lit(0)).alias("n_rows"),
-        ).collect()[0]
-        if dropped["n_buckets"]:
-            logger.warning(
-                "IncrementalNearDup.compact: dropping %d hot bucket(s) "
-                "covering %d state rows (> max_bucket_size=%d); docs may "
-                "still pair via other bands",
-                dropped["n_buckets"], dropped["n_rows"], max_bucket_size,
-            )
-        kept = state.join(
-            F.broadcast(hot.select("band", "bucket")),
-            on=["band", "bucket"], how="left_anti",
-        )
+        kept, n_buckets, n_rows = drop_hot_buckets(
+            state, ["band", "bucket"], max_bucket_size,
+            "IncrementalNearDup.compact")
         self.buckets.rewrite(kept, label="compact")
         kept_rows = self.buckets.read().count()
-        return {"n_buckets": int(dropped["n_buckets"]),
-                "n_rows": int(dropped["n_rows"]),
+        return {"n_buckets": n_buckets, "n_rows": n_rows,
                 "kept_rows": int(kept_rows)}
 
 

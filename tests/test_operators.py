@@ -236,6 +236,55 @@ def test_lsh_topk_broadcast_vectors_identical(vectors, spark, monkeypatch,
     assert sorted(map(tuple, ref.collect())) \
         == sorted(map(tuple, got.collect()))
 
+    # side-wise dim mismatch: every query vector 2-dim, every neighbor
+    # 3-dim, so each side stacks into its own matrix — NULL cosine, or
+    # 0.0 where a norm is zero, like the Catalyst fold
+    q2 = spark.createDataFrame([(1, [1.0, 2.0]), (2, [0.0, 0.0])],
+                               "vec_id long, embedding array<double>")
+    n3 = spark.createDataFrame([(7, [1.0, 2.0, 3.0]), (8, [4.0, 5.0, 6.0])],
+                               "vec_id long, embedding array<double>")
+    mixed = spark.createDataFrame([(1, 7), (1, 8), (2, 7)],
+                                  "query_id long, neighbor_id long")
+    mixed_cos = _np_cosine_lookup_udf(spark, (q2, n3), 5)
+    got = mixed.select(
+        "query_id", "neighbor_id",
+        F.round(mixed_cos("query_id", "neighbor_id"), 6).alias("cosine"))
+    assert sorted(map(tuple, got.collect())) \
+        == [(1, 7, None), (1, 8, None), (2, 7, 0.0)]
+
+
+def test_lsh_topk_hot_bucket_guard(vectors, spark, caplog):
+    """lsh_topk's hot-bucket guard: 30 identical copies of one vector
+    share every sketch bucket, so a cap below 30 drops those buckets
+    with a logged warning and the copies stop pairing with each other;
+    a cap above every bucket returns exactly the unguarded rows."""
+    import logging
+
+    v0 = vectors.where(F.col("vec_id") == 0).first()["embedding"]
+    copies = spark.createDataFrame(
+        [(1000 + i, v0) for i in range(30)],
+        "vec_id long, embedding array<double>")
+    corpus = vectors.unionByName(copies)
+
+    def run(cap):
+        caplog.clear()
+        with caplog.at_level(logging.WARNING):
+            rows = sorted(map(tuple, lsh_topk(
+                corpus, corpus, k=3, dim=8, n_bits=4, n_tables=4,
+                max_bucket_size=cap).collect()))
+        return rows, [r.getMessage() for r in caplog.records
+                      if "hot bucket" in r.getMessage()]
+
+    unguarded, warned = run(None)
+    assert not warned
+    assert any(q >= 1000 and n >= 1000 for q, n, _, _ in unguarded)
+    guarded, warned = run(20)
+    assert warned and warned[0].startswith("lsh_topk: dropping")
+    assert guarded and not any(n >= 1000 for _, n, _, _ in guarded)
+    roomy, warned = run(corpus.count())
+    assert not warned
+    assert roomy == unguarded
+
 
 def test_field_metrics_hand_example(spark):
     hyp = spark.createDataFrame(
@@ -894,6 +943,27 @@ def test_np_sketch_and_cosine_match_catalyst_fold(spark):
     ref_m = {(r["ia"], r["ib"]): r["c"] for r in ref.collect()}
     got_m = {(r["ia"], r["ib"]): r["c"] for r in got.collect()}
     assert got_m == ref_m
+
+    # side-wise dim mismatch: one batch whose left column is all 2-dim
+    # and right column all 3-dim stacks cleanly on each side
+    mixed = spark.createDataFrame(
+        [(0, [1.0, 2.0], [1.0, 2.0, 3.0]), (1, [0.0, 0.0], [4.0, 5.0, 6.0]),
+         (2, [3.0, -1.0], [0.0, 0.0, 0.0])],
+        "i long, va array<double>, vb array<double>").coalesce(1)
+    ref = mixed.select("i", F.round(
+        cosine_similarity(F.col("va"), F.col("vb")), 6).alias("c"))
+    got = mixed.select("i", F.round(
+        _np_cosine_udf()(F.col("va"), F.col("vb")), 6).alias("c"))
+    assert sorted(map(tuple, got.collect())) \
+        == sorted(map(tuple, ref.collect())) \
+        == [(0, None), (1, 0.0), (2, 0.0)]
+    # a batch whose left column is NULL in every row: NULL cosine
+    all_null = mixed.select("i", F.lit(None).cast("array<double>")
+                            .alias("va"), "vb")
+    got = all_null.select("i", F.round(
+        _np_cosine_udf()(F.col("va"), F.col("vb")), 6).alias("c"))
+    assert sorted(map(tuple, got.collect())) == [(0, None), (1, None),
+                                                 (2, None)]
 
     # float32 inputs: widened to double before the product, like the
     # fold's element-wise cast

@@ -215,17 +215,44 @@ def test_plan_shape_equality_exchange_value_free(spark):
     ev.unpersist_all()
 
 
-def test_ivf_distributed_trainer_recall(vectors):
-    """MLlib full-corpus k-means as the IVF trainer (the path without
-    the ≤20k driver-sample cap) must reach the same recall bar as the
-    driver trainer on clustered vectors."""
-    from chronominer_spark.operators.similarity import brute_force_topk, ivf_topk
+def test_ivf_search_scores_edge_vectors_like_catalyst(vectors, spark,
+                                                     monkeypatch):
+    """ivf_search scores with the family's numpy cosine UDF. On an index
+    holding zero, ragged and (in a second pass) float32 vectors it must
+    return the rows of the same probe scored with the Catalyst
+    ``cosine_similarity`` reference: zero norm -> 0.0, ragged length
+    -> NULL, float32 widened before the product."""
+    from chronominer_spark.operators import similarity as S
 
-    bf = brute_force_topk(vectors, vectors, k=3)
-    ann = ivf_topk(vectors, vectors, k=3, n_centroids=3, n_probe=2,
-                   distributed_train=True)
-    hits = ann.join(bf, ["query_id", "neighbor_id"]).count()
-    assert hits / bf.count() >= 0.9
+    edge = spark.createDataFrame(
+        [(100, [0.0] * 8),                            # zero vector
+         (101, [0.5, -1.0, 2.0]),                     # ragged (short)
+         (102, [0.25] * 12),                          # ragged (long)
+         (103, [float(d % 3) - 1.0 for d in range(8)])],
+        "vec_id long, embedding array<double>")
+    corpus = vectors.unionByName(edge)
+    cents = [[1.0 if (c + d) % 3 else -1.0 for d in range(8)]
+             for c in range(3)]
+
+    def rows(df):
+        index = S.ivf_build_index(df, cents)
+        q = df.where((F.col("vec_id") % 4 == 0) | (F.col("vec_id") >= 100))
+        return sorted(map(tuple, S.ivf_search(q, index, cents, k=4,
+                                              n_probe=2).collect()),
+                      key=repr)
+
+    for frame in (corpus, corpus.select(
+            "vec_id", F.col("embedding").cast("array<float>")
+            .alias("embedding"))):
+        got = rows(frame)
+        with monkeypatch.context() as m:
+            m.setattr(S, "_np_cosine_udf", lambda: S.cosine_similarity)
+            ref = rows(frame)
+        assert got == ref
+        by_pair = {(r[0], r[1]): r[2] for r in got}
+        assert any(q == 100 and c == 0.0 for (q, _), c in by_pair.items())
+        assert any(q in (101, 102) and c is None
+                   for (q, _), c in by_pair.items())
 
 
 def test_plan_shape_lsh_topk_candidates_carry_no_vectors(spark):
