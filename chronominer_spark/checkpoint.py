@@ -23,10 +23,11 @@ avoids).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import asdict, dataclass
+
+from chronominer_spark.tables import _commit_json, _load_json
 
 STATUS_COMPLETED = "completed"
 STATUS_FAILED = "failed"
@@ -51,17 +52,11 @@ class CheckpointManifest:
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
 
     def entries(self) -> list[ManifestEntry]:
-        if not os.path.exists(self.path):
-            return []
-        with open(self.path, encoding="utf-8") as f:
-            return [ManifestEntry(**row) for row in json.load(f)]
+        return [ManifestEntry(**row) for row in _load_json(self.path, [])]
 
     def append(self, new_entries: list[ManifestEntry]) -> None:
         rows = [asdict(e) for e in self.entries()] + [asdict(e) for e in new_entries]
-        tmp = self.path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(rows, f)
-        os.replace(tmp, self.path)
+        _commit_json(self.path, rows)
 
     def mark_completed(
         self, partition_ids: list[str], snapshot_id: int, suite_hash: str, run_id: str
@@ -114,10 +109,7 @@ class CheckpointManifest:
     ) -> dict[str, bool]:
         """Cached strategy choices for this (snapshot, suite), keyed by
         constraint_id. Returns {} when none recorded."""
-        if not os.path.exists(self._decisions_path):
-            return {}
-        with open(self._decisions_path, encoding="utf-8") as f:
-            all_rows = json.load(f)
+        all_rows = _load_json(self._decisions_path, {})
         return dict(all_rows.get(f"{snapshot_id}:{suite_hash}", {}))
 
     def save_strategy_decisions(
@@ -126,18 +118,13 @@ class CheckpointManifest:
         """Atomically merge decisions under the (snapshot, suite) key."""
         if not decisions:
             return
-        all_rows: dict[str, dict[str, bool]] = {}
-        if os.path.exists(self._decisions_path):
-            with open(self._decisions_path, encoding="utf-8") as f:
-                all_rows = json.load(f)
+        all_rows: dict[str, dict[str, bool]] = _load_json(
+            self._decisions_path, {})
         key = f"{snapshot_id}:{suite_hash}"
         merged = dict(all_rows.get(key, {}))
         merged.update(decisions)
         all_rows[key] = merged
-        tmp = self._decisions_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(all_rows, f)
-        os.replace(tmp, self._decisions_path)
+        _commit_json(self._decisions_path, all_rows)
 
 
 class RefAggCache:

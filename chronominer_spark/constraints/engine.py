@@ -9,13 +9,15 @@ Scale design (SURVEY.md §4, §7):
   implements by hand in ``eval/metrics.py:622-674``). The violations pass
   is a second scan with a pushed-down OR-filter, so the common all-green
   partition reads parquet footers + filtered column chunks only.
-- **Uniqueness** is a two-stage aggregation: stage 1 counts keys within
-  each input partition (``spark_partition_id()`` as the salt), stage 2
-  merges — the salted hash-aggregate the north rule requires; a hot
-  conv_id therefore never concentrates raw rows onto one reducer. When a
+- **Uniqueness** and **group stats** share one per-key count plan
+  (:meth:`SuiteEvaluator._key_counts`): a ``partial_count`` below one
+  hash exchange. The map-side partial aggregate is the skew posture —
+  a hot conv_id combines to one row per input split before the shuffle,
+  so it never concentrates raw rows onto one reducer (an explicit salt
+  stage was measured slower and deleted, BENCH/BASELINE.md). When a
   ``group_stats`` constraint's group column is covered by the unique key
-  set, the stage-2 counts frame is persisted ONCE and feeds uniqueness
-  stats, duplicate violations, rows_checked totals and group sizes —
+  set, the counts frame is persisted ONCE and feeds uniqueness stats,
+  duplicate violations, rows_checked totals and group sizes —
   suite-level scan sharing.
 - **Vocabulary RI** dims are tiny by definition -> fused ``isin``
   (Catalyst InSet) in the shared scan when declared inline, or a
@@ -136,6 +138,29 @@ def _group_rows(
     return _result_rows(
         base, c.constraint_id, F.col("violation_count") / F.col("n_groups"),
         c.params.get("max_rate", 0.0),
+    )
+
+
+def _winner_order(col: str) -> list[Column]:
+    """Leading fields of every text-equality winner struct: ``max``
+    picks (ts desc, raw-text hash asc); a null ts maps to epoch 0 and
+    loses, and NOT reverses the hash without the -Long.MIN overflow."""
+    return [
+        F.coalesce(F.col("ts").cast("timestamp").cast("long"), F.lit(0))
+        .alias("__ts_o"),
+        F.xxhash64(F.col(col)).bitwiseXOR(F.lit(-1)).alias("__h_o"),
+    ]
+
+
+def _digests_agree() -> Column:
+    """A full-outer-joined ``_cur_*``/``_ref_*`` row of
+    :meth:`SuiteEvaluator._conv_digest` present and equal on both sides
+    (never null)."""
+    return (
+        F.col("_cur_n").isNotNull() & F.col("_ref_n").isNotNull()
+        & (F.col("_cur_n") == F.col("_ref_n"))
+        & (F.col("_cur_x") == F.col("_ref_x"))
+        & (F.col("_cur_s") == F.col("_ref_s"))
     )
 
 
@@ -343,9 +368,9 @@ class SuiteEvaluator:
         ref = (ref_df.withColumn("_pid", self._partition_id_col(ref_df))
                if ref_df is not None else None)
 
-        # ---- unique + group_stats stage-2 count sharing --------------
+        # ---- unique + group_stats count sharing ----------------------
         # A group_stats whose group column is covered by a unique key
-        # set derives its group sizes from that constraint's stage-2 key
+        # set derives its group sizes from that constraint's key
         # counts: the counts frame is materialized once and feeds
         # uniqueness stats, duplicate violations, rows_checked totals
         # AND group sizes. shared[i] is the frame constraint i reuses.
@@ -360,10 +385,7 @@ class SuiteEvaluator:
             ]
             if not reusers:
                 continue
-            counts = self._share(
-                self._key_counts(df, list(c.params["cols"]),
-                                 c.params.get("salted", True))
-            )
+            counts = self._share(self._key_counts(df, c.params["cols"]))
             shared[i] = counts
             for j in reusers:
                 g = cons[j]
@@ -678,24 +700,11 @@ class SuiteEvaluator:
         )
 
     # -- uniqueness ----------------------------------------------------------
-    def _key_counts(
-        self, df: DataFrame, keys: list[str], salted: bool
-    ) -> DataFrame:
-        """Stage-2 per-key counts: (_pid, *keys, dup_count). ``salted``
-        runs the explicit two-stage plan (stage 1 partial-counts per
-        input split so a hot key combines locally before the shuffle);
-        plain mode relies on Spark's map-side partial agg for the same
-        local combining with one fewer exchange (A/B in
-        BENCH/BASELINE.md)."""
-        if salted:
-            stage1 = (
-                df.groupBy("_pid", *keys, F.spark_partition_id().alias("_salt"))
-                .agg(F.count(F.lit(1)).alias("_partial"))
-            )
-            return (
-                stage1.groupBy("_pid", *keys)
-                .agg(F.sum("_partial").alias("dup_count"))
-            )
+    @staticmethod
+    def _key_counts(df: DataFrame, keys: list[str]) -> DataFrame:
+        """Per-key counts (_pid, *keys, dup_count): a ``partial_count``
+        below one hash exchange, so a hot key combines map-side to one
+        row per input split (the skew plan; BENCH/BASELINE.md)."""
         return df.groupBy("_pid", *keys).agg(
             F.count(F.lit(1)).alias("dup_count")
         )
@@ -704,13 +713,9 @@ class SuiteEvaluator:
         self, df: DataFrame, ref: DataFrame | None, c: Constraint,
         counts: DataFrame | None = None,
     ) -> tuple[DataFrame, DataFrame]:
-        """Two-stage salted hash-aggregate (north rule). Stage 1 groups by
-        (key, input-partition) so a hot key's rows combine locally before
-        the shuffle; stage 2 merges the partial counts. Physically this is
-        the partial/final split Spark's hash aggregate performs — made
-        explicit here so the skew posture is visible and testable.
+        """Duplicate keys from :meth:`_key_counts`.
 
-        ``counts``: an already-persisted stage-2 frame from
+        ``counts``: an already-persisted frame from
         :meth:`_key_counts` (suite-level scan sharing with group_stats);
         when supplied, rows_checked derives from it too — zero extra
         scans of the source."""
@@ -721,7 +726,7 @@ class SuiteEvaluator:
                 F.sum("dup_count").alias("rows_checked")
             )
         else:
-            counts = self._key_counts(df, keys, c.params.get("salted", True))
+            counts = self._key_counts(df, keys)
             dups = self._share(counts.where(F.col("dup_count") > 1))
             totals = df.groupBy("_pid").agg(
                 F.count(F.lit(1)).alias("rows_checked")
@@ -768,13 +773,12 @@ class SuiteEvaluator:
         self, df: DataFrame, ref: DataFrame | None, c: Constraint,
         sizes: DataFrame | None = None,
     ) -> tuple[DataFrame, DataFrame | None]:
-        """Per-group size statistics with explicit two-stage salted
-        aggregation — the north rule's skew case: a single hot conv_id
-        must never serialize a stage. Stage 1 counts rows per
-        (group, input-split) so the hot group's rows combine locally;
-        stage 2 merges the per-split partials (one row per group per
-        split — bounded by splits, not by the group's row count);
-        stage 3 reduces group sizes to per-partition stats (tiny).
+        """Per-group size statistics — the north rule's skew case: a
+        single hot conv_id must never serialize a stage. Group sizes come
+        from :meth:`_key_counts`, whose map-side partial count ships one
+        row per group per input split (bounded by splits, not by the
+        group's row count); a second aggregate reduces them to
+        per-partition stats (tiny).
 
         ``sizes``: a precomputed (_pid, group_col, group_rows) frame
         derived from a unique constraint's shared key counts (suite-level
@@ -787,19 +791,8 @@ class SuiteEvaluator:
         max_rows = p.get("max_group_rows")
 
         if sizes is None:
-            if p.get("salted", True):
-                stage1 = (
-                    df.groupBy("_pid", group_col,
-                               F.spark_partition_id().alias("_salt"))
-                    .agg(F.count(F.lit(1)).alias("_partial"))
-                )
-                sizes = stage1.groupBy("_pid", group_col).agg(
-                    F.sum("_partial").alias("group_rows")
-                )
-            else:
-                sizes = df.groupBy("_pid", group_col).agg(
-                    F.count(F.lit(1)).alias("group_rows")
-                )
+            sizes = self._key_counts(df, [group_col]).withColumnRenamed(
+                "dup_count", "group_rows")
         base = sizes.groupBy("_pid").agg(
             F.count(F.lit(1)).alias("n_groups"),
             F.min("group_rows").cast("double").alias("min"),
@@ -1040,10 +1033,9 @@ class SuiteEvaluator:
     # -- text equality vs reference snapshot ----------------------------------
     def _stable_winner(
         self, df: DataFrame, col: str, norm_opts: dict, out_prefix: str,
-        keep_value: bool = False,
     ) -> DataFrame:
         """Stable turn ordering + last-wins dedup (W1 + W3) as a single
-        hash aggregation: ``max_by(payload, (ts, -text_hash))`` picks one
+        hash aggregation: ``max(struct(*_winner_order, payload))`` picks one
         row per (conv_id, turn_idx) under the total order (ts desc,
         text-hash asc) — parallelism-invariant even with tied timestamps
         (risk register, SURVEY.md §7.4). A hash-agg partial-aggregates
@@ -1063,28 +1055,39 @@ class SuiteEvaluator:
         # max(struct(...)), a native declarative aggregate that stays
         # inside whole-stage codegen. (max_by is an ObjectHashAggregate
         # and was measured ~4x slower on this 8M-key agg.) Lexicographic
-        # struct max realizes the same (ts desc, text-hash) total order;
+        # struct max realizes the (ts desc, text-hash) total order;
         # payload fields participate only on full order-key ties, where
         # the tied text hash pins the same text and the remaining fields
         # make the pick deterministic (max_by left it arbitrary).
         fields = [
-            # nulls-last ts ordering: null ts -> epoch 0, always loses
-            F.coalesce(F.col("ts").cast("timestamp").cast("long"), F.lit(0))
-            .alias("__ts_o"),
-            # bitwise NOT reverses the order without the -Long.MIN overflow
-            F.xxhash64(F.col(col)).bitwiseXOR(F.lit(-1)).alias("__h_o"),
+            *_winner_order(col),
             norm_h.alias(f"{out_prefix}norm"),
             F.col("_pid").alias(f"{out_prefix}pid"),
         ]
-        if keep_value:
-            fields.append(self._sval(F.col(col)).alias(f"{out_prefix}val"))
-        out = [f"__w.{out_prefix}norm", f"__w.{out_prefix}pid"]
-        if keep_value:
-            out.append(f"__w.{out_prefix}val")
         return (
             df.groupBy(*keys)
             .agg(F.max(F.struct(*fields)).alias("__w"))
-            .select(*keys, *out)
+            .select(*keys, f"__w.{out_prefix}norm", f"__w.{out_prefix}pid")
+        )
+
+    def _conv_digest(
+        self, side: DataFrame, c: Constraint, pfx: str, group: list[Column],
+    ) -> DataFrame:
+        """Per-``group`` digest of ``side``'s stable turn winners: count
+        ``{pfx}n``, and the order-independent, overflow-free ``bit_xor``
+        ``{pfx}x`` and mod-2^31 sum ``{pfx}s`` of
+        ``xxhash64(turn keys, text hash)``."""
+        # LIGHT winners (no raw values): the digest agg is their only
+        # consumer, and they are deliberately NOT persisted — an 8M-row
+        # winners frame carrying text values costs more to cache than to
+        # recompute (measured: persisting winners made the digest path
+        # slower than the join it replaces)
+        w = self._stable_winner(side, c.params["col"], self._norm_opts(c), pfx)
+        th = F.xxhash64(*self.suite.key_cols[1:], F.col(f"{pfx}norm"))
+        return w.groupBy(*group).agg(
+            F.count(F.lit(1)).alias(f"{pfx}n"),
+            F.bit_xor(th).alias(f"{pfx}x"),
+            F.sum(F.pmod(th, F.lit(2 ** 31))).alias(f"{pfx}s"),
         )
 
     def _digest_auto_choice(
@@ -1096,36 +1099,20 @@ class SuiteEvaluator:
         is keyed on ``xxhash64(conv) % auto_sample_mod == 0`` so both
         sides sample the SAME conversations at any parallelism."""
         p = c.params
-        col = p["col"]
-        keys = list(self.suite.key_cols)
-        conv = keys[0]
-        turn_keys = keys[1:]
-        norm_opts = self._norm_opts(c)
+        conv = self.suite.key_cols[0]
         mod = int(p.get("auto_sample_mod", 20))
         threshold = float(p.get("auto_threshold", 0.05))
 
         def side(s: DataFrame, pfx: str) -> DataFrame:
             sampled = s.where(
                 F.pmod(F.xxhash64(F.col(conv)), F.lit(mod)) == 0)
-            w = self._stable_winner(sampled, col, norm_opts, pfx)
-            th = F.xxhash64(*turn_keys, F.col(f"{pfx}norm"))
-            return w.groupBy(conv).agg(
-                F.count(F.lit(1)).alias(f"{pfx}n"),
-                F.bit_xor(th).alias(f"{pfx}x"),
-                F.sum(F.pmod(th, F.lit(2 ** 31))).alias(f"{pfx}s"),
-            )
+            return self._conv_digest(sampled, c, pfx, [F.col(conv)])
 
         j = side(df, "_cur_").join(side(ref, "_ref_"), on=conv,
                                    how="full_outer")
-        ok = (
-            F.col("_cur_n").isNotNull() & F.col("_ref_n").isNotNull()
-            & (F.col("_cur_n") == F.col("_ref_n"))
-            & (F.col("_cur_x") == F.col("_ref_x"))
-            & (F.col("_cur_s") == F.col("_ref_s"))
-        )
         row = j.agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(~ok, 1).otherwise(0)).alias("bad"),
+            F.sum(F.when(~_digests_agree(), 1).otherwise(0)).alias("bad"),
         ).collect()[0]
         if not row["n"]:
             logger.info("text_equality[%s]: auto sample empty -> direct join",
@@ -1211,25 +1198,10 @@ class SuiteEvaluator:
             return self._eq_finalize(counts, c), vio
 
         conv = keys[0]
-        turn_keys = keys[1:]
-        # LIGHT winners (no raw values): the digest agg is their only
-        # consumer, and they are deliberately NOT persisted — an 8M-row
-        # winners frame carrying text values costs more to cache than to
-        # recompute (measured: persisting winners made the digest path
-        # slower than the join it replaces)
-        cur_l = self._stable_winner(df, col, norm_opts, "_cur_")
-        ref_l = self._stable_winner(ref, col, norm_opts, "_ref_")
 
-        def conv_digest(w: DataFrame, pfx: str) -> DataFrame:
-            th = F.xxhash64(*turn_keys, F.col(f"{pfx}norm"))
-            return (
-                w.groupBy(F.col(conv), F.col(f"{pfx}pid").alias("_pid"))
-                .agg(
-                    F.count(F.lit(1)).alias(f"{pfx}n"),
-                    F.bit_xor(th).alias(f"{pfx}x"),
-                    F.sum(F.pmod(th, F.lit(2 ** 31))).alias(f"{pfx}s"),
-                )
-            )
+        def conv_digest(s: DataFrame, pfx: str) -> DataFrame:
+            return self._conv_digest(
+                s, c, pfx, [F.col(conv), F.col(f"{pfx}pid").alias("_pid")])
 
         # the ref-side conv digest is immutable between snapshot
         # advances (O(convs) rows): routed through the runner's
@@ -1238,18 +1210,13 @@ class SuiteEvaluator:
         # rare digest-differing conversations
         ref_dig = self._ref_agg(
             f"eqdigest|{c.constraint_id}|{hash_backend_tag()}",
-            lambda: conv_digest(ref_l, "_ref_"))
+            lambda: conv_digest(ref, "_ref_"))
         conv_j = self._share(
-            conv_digest(cur_l, "_cur_").join(
+            conv_digest(df, "_cur_").join(
                 ref_dig, on=[conv, "_pid"], how="full_outer",
             )
         )
-        ok = (
-            F.col("_cur_n").isNotNull() & F.col("_ref_n").isNotNull()
-            & (F.col("_cur_n") == F.col("_ref_n"))
-            & (F.col("_cur_x") == F.col("_ref_x"))
-            & (F.col("_cur_s") == F.col("_ref_s"))
-        )
+        ok = _digests_agree()
         # every conversation owning a non-ok (conv, pid) group — digest
         # mismatch, one-sided, or a partition shift between sides —
         # drills down to the exact per-turn plan over ALL of that
@@ -1324,11 +1291,8 @@ class SuiteEvaluator:
         # read the projected column, so the UDF runs exactly once per row)
         tagged = tagged.withColumn(
             "__nh_eq", norm_hash64_arrow(F.col(col), **norm_opts))
-        w_ts = F.coalesce(F.col("ts").cast("timestamp").cast("long"),
-                          F.lit(0))
-        w_h = F.xxhash64(F.col(col)).bitwiseXOR(F.lit(-1))
-        winner = F.struct(w_ts.alias("__ts_o"), w_h.alias("__h_o"),
-                          F.col("__nh_eq").alias("norm"),
+        order = _winner_order(col)
+        winner = F.struct(*order, F.col("__nh_eq").alias("norm"),
                           F.col("_pid").alias("pid"))
         agg = tagged.groupBy(*keys).agg(
             F.max(F.when(F.col("_is_cur"), winner)).alias("_cw"),
@@ -1368,8 +1332,7 @@ class SuiteEvaluator:
             .join(bad_keys.select(*keys), on=keys, how="left_semi")
             .groupBy(*keys)
             .agg(F.max(F.struct(
-                w_ts.alias("__ts_o"), w_h.alias("__h_o"),
-                self._sval(F.col(col)).alias("val"),
+                *order, self._sval(F.col(col)).alias("val"),
             )).alias("__w"))
             .select(*keys, F.col("__w.val").alias("_cur_val"))
         )
@@ -1652,7 +1615,7 @@ class SuiteEvaluator:
 
 # kind -> (family method, needs_ref). Every method is called as
 # method(evaluator, df, ref, c, shared) and returns (results,
-# violations | None); ``shared`` is the stage-2 frame evaluate() shares
+# violations | None); ``shared`` is the key-count frame evaluate() shares
 # between a unique constraint and the group_stats it covers. A None
 # method marks a kind evaluated by a suite-wide pass instead: the fused
 # scan for row-level checks, column_stats and quantiles, and the shared

@@ -61,14 +61,13 @@ def not_empty(col: str, max_rate: float = 0.0) -> Constraint:
                       {"col": col, "max_rate": max_rate})
 
 
-def unique(*cols: str, salted: bool = True) -> Constraint:
-    """Uniqueness of the composite key. ``salted=True`` (default, the
-    north rule's explicit skew posture) runs the two-stage salted
-    aggregate; ``salted=False`` uses a plain group-count and relies on
-    Spark's map-side partial aggregation for the same local combining
-    with one fewer exchange (see BENCH/BASELINE.md for the A/B)."""
+def unique(*cols: str) -> Constraint:
+    """Uniqueness of the composite key: one group-count whose map-side
+    partial aggregate combines a hot key's rows before the single
+    exchange (the skew posture; an explicit salt stage measured slower,
+    BENCH/BASELINE.md)."""
     return Constraint(f"unique:{','.join(cols)}", "unique",
-                      {"cols": list(cols), "salted": salted})
+                      {"cols": list(cols)})
 
 
 def referential(
@@ -167,18 +166,14 @@ def monotone(
     )
 
 
-def group_stats(group_col: str, max_group_rows: int | None = None,
-                salted: bool = True) -> Constraint:
-    """Per-group (e.g. per-conversation) size profile via explicit
-    two-stage salted aggregation — skew-proof even for a single hot
-    group. ``max_group_rows`` turns it into a hot-group guard with
-    violation rows. ``salted=False`` -> plain group-count (one fewer
-    exchange; Spark's partial agg still combines the hot group's rows
-    map-side — see BENCH/BASELINE.md for the A/B)."""
+def group_stats(group_col: str, max_group_rows: int | None = None) -> Constraint:
+    """Per-group (e.g. per-conversation) size profile from the same
+    group-count plan as :func:`unique` — a single hot group combines
+    map-side before the one exchange. ``max_group_rows`` turns it into
+    a hot-group guard with violation rows."""
     return Constraint(
         f"gstats:{group_col}", "group_stats",
-        {"group_col": group_col, "max_group_rows": max_group_rows,
-         "salted": salted},
+        {"group_col": group_col, "max_group_rows": max_group_rows},
     )
 
 

@@ -21,7 +21,7 @@ known-positive targets:
 
 Conversation sizes are Zipf-ish (a few very hot conv_ids) so per-conv
 aggregations hit real skew — the north rule requires explicit skew
-handling (salted two-stage aggregation).
+handling (a map-side partial count before the one exchange).
 
 The vocabulary dims mirror the reference's closed-enum discipline
 (``/root/reference/schemas/bibliographic_schema.json:111-135``; nullable

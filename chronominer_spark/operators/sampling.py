@@ -78,7 +78,7 @@ def stratified_hash_sample(
     mapping = F.create_map(
         *[F.lit(x) for kv in sorted(rates.items()) for x in kv])
     thr = F.coalesce(
-        mapping.getItem(F.col(stratum_col)), F.lit(float(default_rate)))
+        mapping[F.col(stratum_col)], F.lit(float(default_rate)))
     return df.where(
         portable_bucket(key_col, buckets)
         < (thr * F.lit(buckets)).cast("long"))
@@ -90,7 +90,7 @@ def _budget_expr(
     mapping = F.create_map(
         *[F.lit(x) for kv in sorted(budgets.items()) for x in kv])
     return F.coalesce(
-        mapping.getItem(F.col(source_col)).cast("long"),
+        mapping[F.col(source_col)].cast("long"),
         F.lit(int(default_budget)).cast("long"))
 
 

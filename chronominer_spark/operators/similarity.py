@@ -67,6 +67,9 @@ def norm(a: F.Column) -> F.Column:
 
 
 def cosine_similarity(a, b) -> F.Column:
+    """Catalyst reference cosine the numpy kernels are tested against.
+    On a NaN element it returns NaN, unlike the engine's NULL contract
+    (:func:`_cosine_pair`)."""
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b
     ca = F.transform(ca, lambda x: x.cast("double"))
@@ -244,9 +247,10 @@ def _cosine_pair(a, b) -> float | None:
     """Cosine of ONE vector pair under :func:`cosine_similarity`'s
     rules: NULL on either side → NULL; ``|a|·|b| == 0`` → 0.0
     (zero-length arrays included); otherwise a length mismatch → NULL
-    (the fold's zip_with null-padding makes the dot NULL); NaN elements
-    propagate. Inputs are widened to float64 first, like the fold's
-    element-wise cast."""
+    (the fold's zip_with null-padding makes the dot NULL); a NaN element
+    gives NaN, which every engine path returns as NULL (Arrow masks NaN
+    in the UDF result), so :func:`_top_k` ranks it last. Inputs are
+    widened to float64 first, like the fold's element-wise cast."""
     if a is None or b is None:
         return None
     a = np.asarray(a, dtype=np.float64)
@@ -264,8 +268,8 @@ def _cosine_rows(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     row i of ``y``): one einsum per product instead of ~3·dim
     interpreted lambda evaluations per row (guide §4.2 — the q35 verify
     stage over 3.7M candidate pairs spent ~30 s in the Catalyst fold).
-    Zero norm → 0.0 and NaN propagates, as in :func:`_cosine_pair`. When
-    the two sides differ in width, every row goes through
+    Zero norm → 0.0 and NaN (NULL in Spark) as in :func:`_cosine_pair`.
+    When the two sides differ in width, every row goes through
     :func:`_cosine_pair` (NULL, carried as NaN, unless a norm is 0)."""
     if x.shape[1] != y.shape[1]:
         return np.array([_cosine_pair(a, b) for a, b in zip(x, y)],
@@ -295,9 +299,8 @@ def _np_cosine_udf():
     batch that stacks into two matrices is scored by
     :func:`_cosine_rows`; a batch holding a NULL or ragged vector
     falls back to :func:`_cosine_pair` per row (never hit by fixed-dim
-    embedding tables). A NaN cosine (a NaN element) reaches Spark as
-    NULL, because the Arrow conversion masks NaN; the Catalyst fold
-    returns NaN there."""
+    embedding tables). A NaN element gives NULL, the contract stated at
+    :func:`_cosine_pair`."""
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
         x, y = _stack(a), _stack(b)

@@ -122,15 +122,11 @@ FROM documents GROUP BY source
 
 
 def q03_unique_key_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uniqueness constraint (north-rule salted two-stage agg): stage 1
-    partial counts per input partition, stage 2 merge."""
+    """Uniqueness constraint: the engine's one per-key count plan (a
+    map-side partial count below one exchange), then a global roll-up."""
     li = t(spark, sf_dir, "lineitem")
-    stage1 = (
-        li.groupBy("l_orderkey", "l_linenumber",
-                   F.spark_partition_id().alias("_salt"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    counts = stage1.groupBy("l_orderkey", "l_linenumber").agg(F.sum("c").alias("c"))
+    counts = li.groupBy("l_orderkey", "l_linenumber").agg(
+        F.count(F.lit(1)).alias("c"))
     return counts.agg(
         F.sum("c").alias("rows_checked"),
         F.count(F.lit(1)).alias("distinct_keys"),
@@ -1228,15 +1224,12 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 3
 
 
 def q32_group_size_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-stage per-group aggregation (the skew-proof plan used
-    by the group_stats constraint), profiled per event_type."""
+    """Per-group size profile per event_type, with the group_stats
+    constraint's plan: one per-key count whose map-side partial
+    aggregate combines a hot group before the exchange."""
     e = t(spark, sf_dir, "events")
-    stage1 = (
-        e.groupBy("event_type", "user_id",
-                  F.spark_partition_id().alias("_salt"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    sizes = stage1.groupBy("event_type", "user_id").agg(F.sum("c").alias("n"))
+    sizes = e.groupBy("event_type", "user_id").agg(
+        F.count(F.lit(1)).alias("n"))
     return sizes.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_users"),
         F.min("n").alias("min_events"),
@@ -2629,7 +2622,7 @@ FROM exact, n WHERE exact_count * 9 > n
 def q54_suite_results(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The constraint ENGINE itself under the driver's oracle gate:
     SuiteEvaluator.evaluate() runs a seven-family suite (not_null,
-    in_range, inline-vocab RI, salted unique, monotone, declared-schema
+    in_range, inline-vocab RI, unique, monotone, declared-schema
     conformance, per-group contiguity) over orders
     partitioned by o_orderpriority, and the oracle recomputes every
     per-partition result row — partition lineage, observed rate,

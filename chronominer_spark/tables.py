@@ -29,6 +29,23 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _commit_json(path: str, obj) -> None:
+    """The one commit point of every persisted JSON state: write
+    ``path.tmp``, then ``os.replace`` it over ``path`` atomically."""
+    tmp = path + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _load_json(path: str, default):
+    """The JSON value at ``path``, or ``default`` if never committed."""
+    if not os.path.exists(path):
+        return default
+    with open(path, encoding="utf-8") as f:
+        return json.load(f)
+
+
 def use_iceberg(spark: SparkSession) -> bool:
     """True if an Iceberg catalog is actually loadable in this session."""
     try:
@@ -91,11 +108,8 @@ class SnapshotTable:
         return os.path.join(self.root, f"v{sid}")
 
     def snapshots(self) -> list[SnapshotInfo]:
-        meta = os.path.join(self.root, _META)
-        if not os.path.exists(meta):
-            return []
-        with open(meta, encoding="utf-8") as f:
-            return [SnapshotInfo(**row) for row in json.load(f)]
+        return [SnapshotInfo(**row) for row in
+                _load_json(os.path.join(self.root, _META), [])]
 
     def _commit_pointer(self, snapshot_id: int, operation: str) -> None:
         log = [s.__dict__ for s in self.snapshots()]
@@ -107,14 +121,9 @@ class SnapshotTable:
                 operation=operation,
             ).__dict__
         )
-        meta_tmp = os.path.join(self.root, _META + ".tmp")
-        with open(meta_tmp, "w", encoding="utf-8") as f:
-            json.dump(log, f)
-        os.replace(meta_tmp, os.path.join(self.root, _META))
-        ptr_tmp = self._pointer_path() + ".tmp"
-        with open(ptr_tmp, "w", encoding="utf-8") as f:
-            f.write(str(snapshot_id))
-        os.replace(ptr_tmp, self._pointer_path())
+        _commit_json(os.path.join(self.root, _META), log)
+        # the pointer holds the bare id: its JSON text is str(snapshot_id)
+        _commit_json(self._pointer_path(), snapshot_id)
 
     # -- write --------------------------------------------------------------
     def write_snapshot(
@@ -212,10 +221,7 @@ class AppendLog:
         self._committed = os.path.join(root, "_committed.json")
 
     def _segments(self) -> list[str]:
-        if not os.path.exists(self._committed):
-            return []
-        with open(self._committed, encoding="utf-8") as f:
-            return json.load(f)
+        return _load_json(self._committed, [])
 
     def append(self, df: DataFrame, label: str = "seg") -> str:
         segs = self._segments()
@@ -223,10 +229,7 @@ class AppendLog:
         path = os.path.join(self.root, name)
         df.write.mode("overwrite").parquet(path)
         segs.append(name)
-        tmp = self._committed + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(segs, f)
-        os.replace(tmp, self._committed)
+        _commit_json(self._committed, segs)
         return name
 
     def read(self) -> DataFrame | None:
@@ -241,10 +244,7 @@ class AppendLog:
         return os.path.join(self.root, "_absorbed.json")
 
     def _absorbed(self) -> list[str]:
-        if not os.path.exists(self._absorbed_path):
-            return []
-        with open(self._absorbed_path, encoding="utf-8") as f:
-            return json.load(f)
+        return _load_json(self._absorbed_path, [])
 
     def has_label(self, label: str) -> bool:
         """True if a segment with this label was ever committed —
@@ -273,15 +273,8 @@ class AppendLog:
         old = self._segments()
         name = f"{label}-{uuid.uuid4().hex[:12]}"
         df.write.mode("overwrite").parquet(os.path.join(self.root, name))
-        absorbed = self._absorbed() + old
-        tmp = self._absorbed_path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(absorbed, f)
-        os.replace(tmp, self._absorbed_path)
-        tmp = self._committed + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump([name], f)
-        os.replace(tmp, self._committed)
+        _commit_json(self._absorbed_path, self._absorbed() + old)
+        _commit_json(self._committed, [name])
         for s in old:
             shutil.rmtree(os.path.join(self.root, s), ignore_errors=True)
         return name

@@ -977,6 +977,38 @@ def test_np_sketch_and_cosine_match_catalyst_fold(spark):
         .alias("c"))
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in ref.collect()}
 
+    # a NaN element: both UDFs return NULL (the engine's contract; the
+    # Arrow conversion masks NaN) where the Catalyst reference gives
+    # NaN, so brute_force_topk ranks that neighbor last, not first
+    import math
+
+    from chronominer_spark.operators.similarity import (
+        _np_cosine_lookup_udf,
+        brute_force_topk,
+    )
+    nan_df = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (1, [float("nan"), 1.0]), (2, [2.0, 1.0]),
+         (3, [1.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    q = nan_df.where(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
+    nb = nan_df.select(F.col("vec_id").alias("ib"),
+                       F.col("embedding").alias("vb"))
+    lookup = _np_cosine_lookup_udf(spark, (nan_df, nan_df), 10)
+    nan_rows = {r["ib"]: r for r in q.crossJoin(nb).select(
+        "ib",
+        cosine_similarity(F.col("va"), F.col("vb")).alias("fold"),
+        _np_cosine_udf()(F.col("va"), F.col("vb")).alias("udf"),
+        lookup(F.col("ia"), F.col("ib")).alias("lookup")).collect()}
+    assert math.isnan(nan_rows[1]["fold"])
+    assert nan_rows[1]["udf"] is None and nan_rows[1]["lookup"] is None
+    assert nan_rows[2]["udf"] == nan_rows[2]["lookup"]
+    assert nan_rows[2]["udf"] == pytest.approx(nan_rows[2]["fold"])
+    top = brute_force_topk(nan_df.where(F.col("vec_id") == 0), nan_df, k=3)
+    assert sorted((r["rank"], r["neighbor_id"], r["cosine"])
+                  for r in top.collect()) \
+        == [(1, 3, 0.948683), (2, 2, 0.8), (3, 1, None)]
+
 
 # the edge rows the shingle kernel is checked on against Catalyst:
 # NULL text -> '' -> [''] single shingle; fewer than k words ->

@@ -5,6 +5,8 @@ stable under repartitioning, nested across rates, exact under the
 two-phase bucketed rewrite.
 """
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -46,9 +48,13 @@ def test_hash_sample_nested_rates(corpus):
 
 
 def test_stratified_rates_respected(corpus):
-    out = stratified_hash_sample(
-        corpus, "doc_id", "source",
-        rates={"src0": 1.0, "src1": 0.0}, default_rate=0.5)
+    # the rate lookup uses the supported map[Column] spelling, not the
+    # deprecated getItem(Column) that warns on every call
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = stratified_hash_sample(
+            corpus, "doc_id", "source",
+            rates={"src0": 1.0, "src1": 0.0}, default_rate=0.5)
     by_src = {r["source"]: r["n"] for r in
               out.groupBy("source").agg(F.count("*").alias("n")).collect()}
     assert by_src.get("src0") == 100          # rate 1.0 keeps all
@@ -93,10 +99,12 @@ def test_token_budget_mix_exact_prefix(spark):
     rows = [("s", 1, 50), ("s", 2, 40), ("s", 3, 30), ("s", 4, 5),
             ("t", 5, 100), ("t", 6, 1)]
     df = spark.createDataFrame(rows, "source string, doc_id long, n_tok long")
-    out = token_budget_mix(
-        df, "source", "n_tok", budgets={"s": 95}, default_budget=100,
-        order_cols=[F.col("n_tok").desc(), F.col("doc_id").asc()],
-        with_cum=True)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = token_budget_mix(
+            df, "source", "n_tok", budgets={"s": 95}, default_budget=100,
+            order_cols=[F.col("n_tok").desc(), F.col("doc_id").asc()],
+            with_cum=True)
     got = {(r["source"], r["doc_id"]): r["cum_tokens"] for r in out.collect()}
     # s: 50 (cum 50) + 40 (cum 90) fit; 30 would make 120 > 95; the later
     # 5-token doc must NOT sneak in (prefix, not knapsack)

@@ -1,5 +1,5 @@
-"""Tests for the scale-discipline features: salted per-group stats,
-plan inspection, stateful streaming EWMA, IVF ANN."""
+"""Tests for the scale-discipline features: per-group stats and their
+skew plan, plan inspection, stateful streaming EWMA, IVF ANN."""
 
 import pandas as pd
 import pytest
@@ -45,6 +45,69 @@ def test_group_stats_hot_group_guard(spark, transcripts):
     assert res.where(
         (F.col("constraint_id") == "gstats:conv_id#max") & ~F.col("passed")
     ).count() > 0
+
+
+def test_plan_shape_key_counts_partial_count_below_one_exchange(
+        spark, transcripts, monkeypatch):
+    """The skew posture of uniqueness and group stats is a plan
+    property, not an option: their shared per-key count frame is one
+    ``partial_count`` below one hash exchange (a hot key combines
+    map-side to one row per input split) with no salt stage. A planted
+    conversation holding 20% of the rows, every turn twice, must still
+    give exactly a plain Python count."""
+    from collections import Counter
+
+    from chronominer_spark.constraints.spec import unique
+    from chronominer_spark.plans.inspect import physical_plan
+
+    rows = [tuple(r) for r in
+            transcripts.select("pbucket", "conv_id", "turn_idx").collect()]
+    rows += [(0, "conv-hot", i % 2500) for i in range(len(rows) // 4)]
+    df = spark.createDataFrame(rows, "pbucket int, conv_id string, turn_idx int")
+
+    plans = []
+    real = SuiteEvaluator._key_counts
+
+    def spy(frame, keys):
+        out = real(frame, keys)
+        plans.append((physical_plan(out), count_exchanges(out)))
+        return out
+
+    monkeypatch.setattr(SuiteEvaluator, "_key_counts", staticmethod(spy))
+    suite = ConstraintSuite("skew", (unique("conv_id", "turn_idx"),
+                                     group_stats("conv_id")))
+    ev = SuiteEvaluator(spark, suite)
+    res, _ = ev.evaluate(df)
+    got = {(r["partition_id"], r["constraint_id"]):
+           (r["observed"], r["rows_checked"], r["violation_count"])
+           for r in res.collect()}
+    assert "spark_partition_id" not in physical_plan(res).lower()
+    ev.unpersist_all()
+
+    # one count frame, shared by both constraints
+    assert len(plans) == 1
+    plan, n_exchanges = plans[0]
+    assert n_exchanges == 1, plan
+    assert plan.count("partial_count") == 1, plan
+    assert plan.index("Exchange hashpartitioning") \
+        < plan.index("partial_count"), plan
+
+    keys = Counter(rows)
+    sizes = Counter((b, c) for b, c, _ in rows)
+    expect = {}
+    for b in {b for b, _, _ in rows}:
+        pid = f"conv_bucket={b}"
+        n = sum(v for (kb, _, _), v in keys.items() if kb == b)
+        dups = sum(v - 1 for (kb, _, _), v in keys.items() if kb == b)
+        g = [v for (gb, _), v in sizes.items() if gb == b]
+        expect[(pid, "unique:conv_id,turn_idx")] = (dups / n, n, dups)
+        for stat, obs in (("min", min(g)), ("max", max(g)),
+                          ("mean", sum(g) / len(g)), ("n_groups", len(g))):
+            expect[(pid, f"gstats:conv_id#{stat}")] = (obs, n, 0)
+    assert got.keys() == expect.keys()
+    for k, v in expect.items():
+        assert got[k] == pytest.approx(v), k
+    assert max(sizes.values()) == sizes[(0, "conv-hot")] == len(rows) // 5
 
 
 def test_plan_inspection_pushdown_and_pruning(spark):

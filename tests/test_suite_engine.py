@@ -211,33 +211,6 @@ def test_ref_only_suite_without_ref_df_raises(spark, transcripts):
         ev.evaluate(transcripts, None, snapshot_id=1)
 
 
-def test_salted_and_plain_aggregation_agree(spark, transcripts):
-    """The explicit two-stage salted plan and the plain group-count must
-    produce identical results (Spark's partial agg does the same local
-    combining) — the A/B knob changes physics, never answers."""
-    from chronominer_spark.constraints.engine import SuiteEvaluator
-    from chronominer_spark.constraints.spec import (
-        ConstraintSuite,
-        group_stats,
-        unique,
-    )
-
-    def run(salted):
-        suite = ConstraintSuite(
-            name=f"ab_{salted}",
-            constraints=(unique("conv_id", "turn_idx", salted=salted),
-                         group_stats("conv_id", salted=salted)),
-        )
-        ev = SuiteEvaluator(spark, suite)
-        res, vio = ev.evaluate(transcripts, None, snapshot_id=1)
-        out = (sorted(map(tuple, res.drop("suite_name").collect())),
-               sorted(map(tuple, vio.collect())))
-        ev.unpersist_all()
-        return out
-
-    assert run(True) == run(False)
-
-
 def test_digest_and_turn_join_equality_agree(spark, transcripts, ref_snapshot):
     """The conv-digest fast path and the direct per-turn join must emit
     identical results and violation rows — the digest only changes the
