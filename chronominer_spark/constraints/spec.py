@@ -522,10 +522,6 @@ class ConstraintSuite:
         blob = json.dumps(self.to_dict(), sort_keys=True, separators=(",", ":"))
         return hashlib.sha256(blob.encode("utf-8")).hexdigest()
 
-    def constraint_ids(self) -> list[str]:
-        return [c.constraint_id for c in self.constraints]
-
-
 def default_transcript_suite(
     role_vocab: list[str], tool_vocab: list[str]
 ) -> ConstraintSuite:

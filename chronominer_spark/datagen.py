@@ -227,7 +227,3 @@ def generate_reference_snapshot(spark: SparkSession, cfg: TranscriptGenConfig) -
 
 def role_vocab_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([(r,) for r in ROLE_VOCAB], "role string")
-
-
-def tool_vocab_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(t,) for t in TOOL_VOCAB], "tool string")

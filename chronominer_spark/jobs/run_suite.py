@@ -21,7 +21,8 @@ Precedence: 2 beats 3 — a FAILED run keeps exit 2 even when it also
 regressed, so the harder signal is never masked; only complete/partial
 runs (0/1) escalate to 3. An unreadable ``--diff-prev`` path is a
 clean exit-64 usage error (EX_USAGE), never a traceback — and never
-exit 2, which is reserved for real data failures.
+exit 2, which is reserved for real data failures; it is checked before
+the run, so it writes no results and no manifest.
 """
 
 from __future__ import annotations
@@ -67,6 +68,24 @@ def main(argv: list[str] | None = None) -> int:
     from chronominer_spark.session import build_session
 
     spark = build_session("run_suite", master=args.master)
+
+    if args.diff_prev:
+        # a usage error, so it is raised before the run writes anything
+        from pyspark.errors import AnalysisException
+        try:
+            prev = spark.read.parquet(f"{args.diff_prev}/results")
+        except AnalysisException as e:
+            # EX_USAGE (64), NOT 2: exit 2 is reserved for a FAILED
+            # validation run, and an orchestrator branching on exit
+            # codes must be able to tell a mis-typed path from real
+            # data failures (round-5 ADVICE)
+            print(f"error: --diff-prev {args.diff_prev!r} has no readable "
+                  f"results table ({e.getErrorClass() or e})", file=sys.stderr)
+            spark.stop()
+            return 64
+        # held in memory before the run: --diff-prev may name --output
+        # itself, whose result files the run replaces
+        prev = prev.localCheckpoint()
 
     if args.synthetic:
         cfg = TranscriptGenConfig(n_turns=args.synthetic,
@@ -133,21 +152,8 @@ def main(argv: list[str] | None = None) -> int:
         # constraint) verdict transition vs a previous run's results
         # (the reference's failed-set reconciliation between retry
         # ledgers, as a results-table diff — O(partitions x constraints))
-        from pyspark.errors import AnalysisException
-
         from chronominer_spark.reporting import diff_validation_results
 
-        try:
-            prev = spark.read.parquet(f"{args.diff_prev}/results")
-        except AnalysisException as e:
-            # EX_USAGE (64), NOT 2: exit 2 is reserved for a FAILED
-            # validation run, and an orchestrator branching on exit
-            # codes must be able to tell a mis-typed path from real
-            # data failures (round-5 ADVICE)
-            print(f"error: --diff-prev {args.diff_prev!r} has no readable "
-                  f"results table ({e.getErrorClass() or e})", file=sys.stderr)
-            spark.stop()
-            return 64
         cur = spark.read.parquet(f"{args.output}/results")
         diff = diff_validation_results(prev, cur)
         counts = {r["transition"]: r["n"] for r in

@@ -102,15 +102,6 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def doc_fingerprint(text_col, normalize: bool = True) -> F.Column:
-    """Whole-document content fingerprint (md5 of normalized text) —
-    engine-portable; the dedup content key."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    if normalize:
-        c = normalize_text(c)
-    return F.md5(F.coalesce(c, F.lit("")))
-
-
 def winnowing_fingerprints(
     df: DataFrame, id_col: str, text_col: str,
     k: int = 5, window: int = 4,

@@ -3,6 +3,6 @@ from chronominer_spark.streaming.dedup_stream import (  # noqa: F401
     IncrementalNearDup,
 )
 from chronominer_spark.streaming.validate import (  # noqa: F401
+    IncrementalSuiteValidation,
     incremental_validation_query,
-    windowed_event_counts_stream,
 )

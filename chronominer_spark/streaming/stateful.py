@@ -1,53 +1,17 @@
 """Custom stateful streaming operators (applyInPandasWithState).
 
-The streaming twin of the EWMA accounting estimator (A6,
-``/root/reference/modules/infra/token_tracker.py:263-265``): per-key
-exponentially weighted usage estimates maintained as explicit streaming
-state across micro-batches, with the per-batch update fully vectorized
-in pandas (state carries one (ewma, n) pair per key — O(keys) state, not
-O(rows)).
+The streaming twin of the ``conversation_shape`` constraint family
+(:func:`conversation_shape_stream`): role-sequence validation with one
+(last_role, n_seen) pair of explicit streaming state per conversation —
+O(conversations) state, not O(turns) — and each batch validated
+vectorized in pandas.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "key string, ewma double, n long, batch_rows long"
-STATE_SCHEMA = "ewma double, n long"
-
-
-def _ewma_update(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    alpha = 0.3
-    if state.exists:
-        ewma, n = state.get
-    else:
-        ewma, n = None, 0
-    batch_rows = 0
-    for pdf in pdfs:
-        vals = pdf["value"].astype(float)
-        batch_rows += len(vals)
-        # vectorized fold of the batch: ewm over [carry] + batch
-        if ewma is None:
-            series = vals
-        else:
-            series = pd.concat([pd.Series([ewma]), vals], ignore_index=True)
-        folded = series.ewm(alpha=alpha, adjust=False).mean()
-        ewma = float(folded.iloc[-1])
-        n += len(vals)
-    state.update((ewma, n))
-    yield pd.DataFrame(
-        {"key": [key[0]], "ewma": [ewma], "n": [n], "batch_rows": [batch_rows]}
-    )
-
 
 SHAPE_OUTPUT_SCHEMA = "conv_id string, turn_idx long, role string, detail string"
 SHAPE_STATE_SCHEMA = "last_role string, n_seen long"
@@ -199,35 +163,3 @@ def conversation_shape_stream(
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return writer.start()
 
-
-def ewma_stream(
-    spark,
-    source_dir: str,
-    schema,
-    key_col: str = "event_type",
-    value_col: str = "value",
-    query_name: str = "ewma_state",
-) -> StreamingQuery:
-    """Streaming per-key EWMA with explicit GroupState. Each micro-batch
-    emits the key's updated estimate; state survives across batches
-    (and restarts, via the checkpoint when one is configured)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .select(F.col(key_col).cast("string").alias("key"),
-                F.col(value_col).cast("double").alias("value"))
-    )
-    out = stream.groupBy("key").applyInPandasWithState(
-        _ewma_update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )

@@ -1,4 +1,11 @@
-"""Structured-Streaming incremental validation.
+"""Structured-Streaming incremental validation of a constraint suite.
+
+The stream runs the batch engine, not a restated copy: every micro-batch
+is evaluated by :class:`~chronominer_spark.constraints.engine.SuiteEvaluator`
+and its per-(partition, constraint) counts fold into durable state
+through :class:`~chronominer_spark.streaming.dedup_stream.MergeableStateFold`.
+Counts add, so any merge tree of the batches gives the batch answer
+(mergeable summaries, Agarwal et al. 2012).
 
 The reference's streaming-shaped mechanisms (SURVEY.md §2.9) map to:
 
@@ -8,173 +15,113 @@ The reference's streaming-shaped mechanisms (SURVEY.md §2.9) map to:
   iterators inside ``mapInPandas`` are already bounded);
 - re-pass loop over pending units (ST3, ``modules/extract/
   file_processor.py:1099-1161``) -> ``Trigger.AvailableNow`` repeated
-  passes + the checkpoint manifest;
+  passes over one streaming checkpoint;
 - idempotent finalization (ST6, ``main/check_batches.py:145-176``)
-  -> ``foreachBatch`` with idempotent per-partition overwrite keyed by
-  (partition, batch_id);
-- EWMA rolling estimate (A6, ``modules/infra/token_tracker.py:263-265``)
-  -> stateful streaming agg / pandas ``ewm`` in the batch engine
-  (:func:`chronominer_spark.operators.accounting.ewma_per_key`).
-
-In the sandbox, streams are driven from parquet directories with
-``format("memory")`` + ``processAllAvailable()`` for synchronous tests;
-on a real cluster the same plans read Kafka.
+  -> the fold's snapshot-log replay guard: a batch id already
+  committed is skipped.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from chronominer_spark.constraints.engine import (
+    ROW_LEVEL_KINDS,
+    SuiteEvaluator,
+    _result_rows,
+)
+from chronominer_spark.constraints.spec import ConstraintSuite
+from chronominer_spark.streaming.dedup_stream import (
+    MergeableStateFold,
+    StreamFoldBase,
+)
 
-def windowed_event_counts_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    watermark: str = "2 hours",
-    window: str = "1 hour",
-    query_name: str = "windowed_counts",
-    output_mode: str = "append",
-) -> StreamingQuery:
-    """Watermarked tumbling-window counts per event_type over a streamed
-    parquet directory — the streaming twin of q24_windowed_event_counts.
-    Late rows beyond the watermark are dropped (the reference's
-    late-data recovery boundary, ST4). In ``append`` mode a window is
-    emitted only once the watermark passes it (exactly-once, finalized
-    windows); use ``complete`` to observe open windows (e.g. the
-    synchronous memory-sink tests)."""
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        # watermarks require TIMESTAMP; parquet may carry TIMESTAMP_NTZ
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total"))
-        .select(
-            F.col("win.start").cast("long").alias("win_start"),
-            "event_type", "n", "total",
+
+class IncrementalSuiteValidation(MergeableStateFold):
+    """Streaming twin of the row-level constraint families: a suite's
+    per-partition results maintained across micro-batches.
+
+    Each batch's partial is the batch engine's own results frame
+    (``SuiteEvaluator.evaluate``) reduced to ``rows_checked``,
+    ``violation_count`` and ``threshold`` per ``(partition_id,
+    constraint_id)``; the fold sums the two counts. :meth:`result`
+    rebuilds ``observed`` and ``passed`` with the engine's results
+    helper, so after any batch split the rows equal ``evaluate`` over
+    the concatenated input. Only row-level kinds qualify: the other
+    families' results (uniqueness, drift, statistics) do not add
+    across batches. Commit/replay/bucket mechanics from
+    :class:`MergeableStateFold`."""
+
+    OP_PREFIX = "suite"
+
+    def __init__(self, spark: SparkSession, state_root: str,
+                 suite: ConstraintSuite,
+                 vocab_dfs: dict[str, DataFrame] | None = None):
+        not_additive = sorted({c.kind for c in suite.constraints}
+                              - ROW_LEVEL_KINDS)
+        if not_additive:
+            raise ValueError(
+                f"suite {suite.name!r} has kinds {not_additive} whose "
+                "results do not add across micro-batches; the stream "
+                f"folds only {sorted(ROW_LEVEL_KINDS)}")
+        super().__init__(spark, state_root, ["partition_id", "constraint_id"])
+        self.evaluator = SuiteEvaluator(spark, suite, vocab_dfs)
+
+    def _partial(self, batch_df: DataFrame) -> DataFrame:
+        res, _ = self.evaluator.evaluate(batch_df, with_violations=False)
+        return res.select(*self.key_cols, "threshold",
+                          "rows_checked", "violation_count")
+
+    def _merge_exprs(self) -> list[Column]:
+        return [F.first("threshold").alias("threshold"),
+                F.sum("rows_checked").alias("rows_checked"),
+                F.sum("violation_count").alias("violation_count")]
+
+    def result(self) -> DataFrame:
+        """Per-(partition, constraint) results over everything ingested
+        so far: the engine's results columns minus ``snapshot_id``."""
+        return _result_rows(
+            self.table.read().withColumnRenamed("partition_id", "_pid"),
+            F.col("constraint_id"),
+            F.col("violation_count") / F.col("rows_checked"),
+            F.col("threshold"),
         )
-    )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-
-
-def session_window_counts_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    query_name: str = "session_counts",
-    output_mode: str = "complete",
-) -> StreamingQuery:
-    """Event-time SESSION windows per key: a session closes when no
-    event arrives within ``gap`` (the streaming twin of the batch
-    ``sessionize`` operator / A9's gap variant). State is bounded by the
-    watermark — closed sessions are evicted, so memory is O(open
-    sessions), the posture a 10^12-row stream needs."""
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), key_col)
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.round(F.sum("value"), 2).alias("total"))
-        .select(
-            F.col("win.start").cast("long").alias("session_start"),
-            F.col("win.end").cast("long").alias("session_end"),
-            key_col, "n", "total",
-        )
-    )
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
 
 
 def incremental_validation_query(
     spark: SparkSession,
     source_dir: str,
     schema,
-    sink_path: str,
+    twin: StreamFoldBase,
     checkpoint_path: str,
-    row_violation_preds: dict[str, F.Column] | None = None,
-    available_now: bool = False,
 ) -> StreamingQuery:
-    """Micro-batch constraint validation with an exactly-once sink:
-    every micro-batch of new transcript files is validated with the
-    row-level constraint predicates, and per-batch aggregate rows are
-    appended via ``foreachBatch`` (idempotent on batch_id — Spark
-    replays a failed batch with the same id, the writer overwrites).
-
-    ``available_now=True`` runs ONE drain pass over everything currently
-    available and terminates (``Trigger.AvailableNow``) — the streaming
-    form of the reference's re-pass loop over pending units (ST3,
-    ``modules/extract/file_processor.py:1099-1161``): call again later
-    with the same checkpoint and only files added since the last pass
-    are processed.
-    """
-    preds = row_violation_preds or {
-        "not_null:role": F.col("role").isNull(),
-        "not_empty:text": F.col("text").isNotNull() & (F.trim("text") == ""),
-    }
-
+    """Fold every file under ``source_dir`` into ``twin``, one file per
+    micro-batch (``maxFilesPerTrigger=1``). The query drains what is
+    available now and terminates; a later call with the same checkpoint
+    folds only files added since."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        aggs = [F.count(F.lit(1)).alias("rows_checked")] + [
-            F.sum(p.cast("long")).alias(cid) for cid, p in preds.items()
-        ]
-        out = (
-            batch_df.groupBy("pbucket").agg(*aggs)
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        # idempotent per-batch commit: replayed batch ids overwrite
-        (out.write.mode("overwrite")
-            .parquet(f"{sink_path}/batch_id={batch_id}"))
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return twin.attach(stream, checkpoint_path)
 
 
 def run_available_now_pass(
     spark: SparkSession,
     source_dir: str,
     schema,
-    sink_path: str,
+    suite: ConstraintSuite,
+    state_root: str,
     checkpoint_path: str,
-    row_violation_preds: dict[str, F.Column] | None = None,
-) -> None:
-    """One synchronous AvailableNow validation pass (start, drain all
-    currently-available files, terminate). Repeated calls with the same
-    checkpoint resume where the previous pass stopped."""
-    q = incremental_validation_query(
-        spark, source_dir, schema, sink_path, checkpoint_path,
-        row_violation_preds, available_now=True,
-    )
-    q.awaitTermination()
+) -> IncrementalSuiteValidation:
+    """One synchronous validation pass: fold every file currently in
+    ``source_dir`` into the suite's state at ``state_root`` and return
+    the twin. Repeated calls with the same checkpoint resume where the
+    previous pass stopped."""
+    twin = IncrementalSuiteValidation(spark, state_root, suite)
+    incremental_validation_query(
+        spark, source_dir, schema, twin, checkpoint_path).awaitTermination()
+    return twin

@@ -31,33 +31,25 @@ def test_strip_payloads_projects_blob_away(spark):
     assert lean.where(F.col("byte_size") <= 0).count() == 0
 
 
-def test_streaming_windowed_counts_match_batch(spark, tmp_path):
-    from chronominer_spark.streaming.validate import windowed_event_counts_stream
+def _role_text_suite():
+    from chronominer_spark.constraints.spec import (
+        ConstraintSuite, not_empty, not_null)
+    return ConstraintSuite(name="stream_rows",
+                           constraints=(not_null("role"), not_empty("text")))
 
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "stream_src")
-    events.write.mode("overwrite").parquet(src)
 
-    q = windowed_event_counts_stream(
-        spark, src, events.schema, watermark="1 hour",
-        window="1 hour", query_name="wc_test", output_mode="complete",
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT * FROM wc_test")
-
-    batch = (
-        events.groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total"))
-        .select(F.col("h").cast("timestamp").cast("long").alias("win_start"),
-                "event_type", "n", "total")
-    )
-    assert got.count() == batch.count()
-    assert got.exceptAll(batch).count() == 0
+def _suite_totals(twin) -> dict:
+    """Per-constraint (rows_checked, violation_count) summed over the
+    twin's partitions."""
+    return {r["constraint_id"]: (r["rows"], r["viol"]) for r in
+            twin.result().groupBy("constraint_id")
+            .agg(F.sum("rows_checked").alias("rows"),
+                 F.sum("violation_count").alias("viol")).collect()}
 
 
 def test_incremental_validation_sink(spark, tmp_path, transcripts):
-    from chronominer_spark.streaming.validate import incremental_validation_query
+    from chronominer_spark.streaming.validate import (
+        IncrementalSuiteValidation, incremental_validation_query)
 
     src = str(tmp_path / "tsrc")
     # two "arrival" files -> two micro-batches (maxFilesPerTrigger=1)
@@ -74,51 +66,18 @@ def test_incremental_validation_sink(spark, tmp_path, transcripts):
     for i, f in enumerate(sorted(glob.glob(src + "/*/part-*.parquet"))):
         shutil.copy(f, f"{flat}/file{i}.parquet")
 
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
+    twin = IncrementalSuiteValidation(
+        spark, str(tmp_path / "state"), _role_text_suite())
     q = incremental_validation_query(
-        spark, flat, transcripts.schema, sink, ckpt
-    )
+        spark, flat, transcripts.schema, twin, str(tmp_path / "ckpt"))
     q.processAllAvailable()
     q.stop()
+    assert len(twin.table.snapshots()) == 2
 
-    out = spark.read.option("basePath", sink).parquet(sink + "/batch_id=*")
-    total_rows = out.agg(F.sum("rows_checked")).collect()[0][0]
+    total_rows, n_null_roles = _suite_totals(twin)["not_null:role"]
     assert total_rows == transcripts.count()
-    n_null_roles = out.agg(F.sum("`not_null:role`")).collect()[0][0]
     oracle = transcripts.where(F.col("role").isNull()).count()
     assert n_null_roles == oracle
-
-
-def test_session_window_stream_matches_batch_sessionize(spark, tmp_path):
-    from chronominer_spark.operators.assembly import sessionize
-    from chronominer_spark.streaming.validate import session_window_counts_stream
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "sess_src")
-    events.write.mode("overwrite").parquet(src)
-
-    q = session_window_counts_stream(
-        spark, src, events.schema, key_col="user_id",
-        gap="30 minutes", watermark="1 hour",
-        query_name="sess_test", output_mode="complete",
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql("SELECT * FROM sess_test")
-
-    # batch oracle: gap sessionization with the same 1800s gap
-    sessions = sessionize(events, "user_id", "ts", 1800)
-    batch = sessions.groupBy("user_id").agg(
-        F.countDistinct("session_id").alias("n_sessions"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
-    got_per_user = got.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum("n").alias("n_events"),
-    )
-    assert got_per_user.count() == batch.count()
-    assert got_per_user.exceptAll(batch).count() == 0
 
 
 def test_available_now_repass_picks_up_new_files(spark, tmp_path, transcripts):
@@ -139,23 +98,90 @@ def test_available_now_repass_picks_up_new_files(spark, tmp_path, transcripts):
     assert len(parts) == 2
 
     flat = str(tmp_path / "flat"); os.makedirs(flat)
-    sink = str(tmp_path / "sink"); ckpt = str(tmp_path / "ckpt")
+    state = str(tmp_path / "state"); ckpt = str(tmp_path / "ckpt")
+    suite = _role_text_suite()
 
     # pass 1: only the first file exists
     shutil.copy(parts[0], flat + "/f0.parquet")
-    run_available_now_pass(spark, flat, transcripts.schema, sink, ckpt)
-    out1 = spark.read.option("basePath", sink).parquet(sink + "/batch_id=*")
-    n1 = out1.agg(F.sum("rows_checked")).collect()[0][0]
+    twin = run_available_now_pass(spark, flat, transcripts.schema, suite,
+                                  state, ckpt)
+    ops1 = [s.operation for s in twin.table.snapshots()]
+    n1, _ = _suite_totals(twin)["not_null:role"]
     assert n1 == transcripts.where(F.col("pbucket") < 4).count()
 
     # a file lands AFTER the first pass terminated
     shutil.copy(parts[1], flat + "/f1.parquet")
-    run_available_now_pass(spark, flat, transcripts.schema, sink, ckpt)
-    out2 = spark.read.option("basePath", sink).parquet(sink + "/batch_id=*")
-    n2 = out2.agg(F.sum("rows_checked")).collect()[0][0]
-    # second pass added exactly the new file's rows (no reprocessing)
-    assert n2 == transcripts.count()
-    assert out2.count() > out1.count()
+    twin = run_available_now_pass(spark, flat, transcripts.schema, suite,
+                                  state, ckpt)
+    ops2 = [s.operation for s in twin.table.snapshots()]
+    n2, _ = _suite_totals(twin)["not_null:role"]
+    # second pass folded exactly the new file (no reprocessing): one
+    # new batch op, and the total grew by that file's rows
+    assert ops2[:len(ops1)] == ops1 and len(ops2) == len(ops1) + 1
+    assert n2 - n1 == transcripts.where(F.col("pbucket") >= 4).count()
+
+
+def test_suite_twin_matches_batch_engine(spark, tmp_path, transcripts,
+                                         vocabs):
+    """The stream validates the suite: the default suite's row-level
+    constraints (the dim-table tool RI included) folded over 3
+    micro-batches give exactly the rows ``SuiteEvaluator.evaluate``
+    gives over their union, with every partition split across batches;
+    a replayed batch id adds no snapshot; a suite holding a kind whose
+    results do not add is refused before any Spark job."""
+    from chronominer_spark.constraints.engine import (
+        ROW_LEVEL_KINDS, SuiteEvaluator)
+    from chronominer_spark.constraints.spec import (
+        ConstraintSuite, default_transcript_suite, default_vocab_dfs, unique)
+    from chronominer_spark.streaming.validate import (
+        IncrementalSuiteValidation)
+
+    role_vocab, tool_vocab = vocabs
+    full = default_transcript_suite(role_vocab, tool_vocab)
+    suite = ConstraintSuite(
+        name="row_level", constraints=tuple(
+            c for c in full.constraints if c.kind in ROW_LEVEL_KINDS))
+    assert len(suite.constraints) == 9
+    assert any(c.params.get("vocab_name") for c in suite.constraints)
+    vocab_dfs = default_vocab_dfs(spark, tool_vocab)
+
+    batches = [transcripts.where(F.col("turn_idx") % 3 == i)
+               for i in range(3)]
+    spans = (transcripts.groupBy("pbucket")
+             .agg(F.countDistinct(F.col("turn_idx") % 3).alias("n"))
+             .agg(F.min("n")).collect()[0][0])
+    assert spans >= 2
+
+    twin = IncrementalSuiteValidation(
+        spark, str(tmp_path / "state"), suite, vocab_dfs)
+    for i, b in enumerate(batches):
+        twin.process_batch(b, i)
+    got = twin.result()
+
+    union = batches[0].unionByName(batches[1]).unionByName(batches[2])
+    want, _ = SuiteEvaluator(spark, suite, vocab_dfs).evaluate(
+        union, with_violations=False)
+    want = want.drop("snapshot_id").select(*got.columns)
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.count() == 9 * transcripts.select("pbucket").distinct().count()
+    assert got.agg(F.sum("violation_count")).collect()[0][0] > 0
+
+    n_snaps = len(twin.table.snapshots())
+    twin.process_batch(batches[1], 1)
+    assert len(twin.table.snapshots()) == n_snaps == 3
+
+    sc = spark.sparkContext
+    sc.setJobGroup("suite-twin-refusal", "no job may run before the kind check")
+    try:
+        with pytest.raises(ValueError, match="unique"):
+            IncrementalSuiteValidation(
+                spark, str(tmp_path / "bad"),
+                ConstraintSuite(name="bad", constraints=(
+                    *suite.constraints, unique("conv_id", "turn_idx"))))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("suite-twin-refusal") == []
 
 
 def test_streaming_shape_matches_batch_family(spark, tmp_path):
@@ -526,123 +552,6 @@ def test_incremental_heavy_hitters_folds_through_batch_merge(spark, tmp_path):
         .withColumnRenamed("est_count", "cnt")), k, with_total=True)
     assert as_dict(inc.table.read(), "cnt") == as_dict(fold, "cnt")
     assert inc.result()[1] == 2000
-
-
-def test_incremental_fd_audit_matches_batch_family(spark, tmp_path):
-    """Streaming twin of the functional_dependency family: the same
-    frame split into 3 micro-batches and folded through the mergeable
-    (min, max, has_null) witness state must reach EXACTLY the batch
-    family's per-key verdicts — including keys whose inconsistency is
-    only visible ACROSS batches — and a replayed batch id is a no-op."""
-    from chronominer_spark.constraints.engine import SuiteEvaluator
-    from chronominer_spark.constraints.spec import (
-        ConstraintSuite, functional_dependency)
-    from chronominer_spark.streaming.dedup_stream import IncrementalFDAudit
-
-    # key plans: a1 consistent; a2 inconsistent WITHIN batch 0;
-    # a3 inconsistent only ACROSS batches (gold in b0, free in b2);
-    # a4 {null} only (consistent); a5 {x, null} across batches (bad)
-    rows = [("a1", "gold", 0), ("a1", "gold", 1), ("a1", "gold", 2),
-            ("a2", "gold", 0), ("a2", "free", 0),
-            ("a3", "gold", 0), ("a3", "free", 2),
-            ("a4", None, 0), ("a4", None, 1),
-            ("a5", "pro", 1), ("a5", None, 2)]
-    full = spark.createDataFrame(rows, "account string, plan string, b int")
-
-    src = str(tmp_path / "fd_stream")
-    for i in range(3):
-        (full.where(F.col("b") == i).drop("b")
-         .coalesce(1).write.mode("append").parquet(src))
-
-    inc = IncrementalFDAudit(
-        spark, str(tmp_path / "fd_state"), ["account"], "plan")
-    stream = (spark.readStream.schema("account string, plan string")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = inc.attach(stream, str(tmp_path / "fd_ckpt"))
-    q.awaitTermination()
-    assert len(inc.table.snapshots()) == 3
-
-    got = {r["account"]: r for r in inc.result().collect()}
-    assert {k for k, r in got.items() if r["inconsistent"]} == {
-        "a2", "a3", "a5"}
-    assert got["a3"]["dep_min"] == "free" and got["a3"]["dep_max"] == "gold"
-    assert got["a4"]["dep_has_null"] and not got["a4"]["inconsistent"]
-    assert got["a1"]["n_rows"] == 3
-
-    # the batch family over the concatenated input agrees key-for-key
-    suite = ConstraintSuite(
-        name="fd_twin",
-        constraints=(functional_dependency(["account"], "plan"),))
-    _, vio = SuiteEvaluator(spark, suite).evaluate(
-        full.withColumn("pbucket", F.lit(1)))
-    batch_bad = {r["value"] for r in vio.collect()}
-    assert batch_bad == {k for k, r in got.items() if r["inconsistent"]}
-
-    # replaying an already-committed batch id must not change the state
-    before = inc.table.current_snapshot_id()
-    inc.process_batch(full.drop("b").limit(4), 0)
-    assert inc.table.current_snapshot_id() == before
-
-
-def test_incremental_group_agg_audit_matches_batch_family(spark, tmp_path):
-    """Streaming twin of group_agg_check (mergeable kernel): the same
-    frame split into 3 micro-batches and folded through the per-group
-    (sum, cnt, n_rows, min, max) state must reach the batch family's
-    flagged-group set for avg bounds — including a group pushed over
-    budget only by a LATER batch and an all-null group (null aggregate
-    violates); a replayed batch id is a no-op; a non-mergeable agg name
-    is rejected."""
-    import pytest as _pytest
-
-    from chronominer_spark.constraints.engine import SuiteEvaluator
-    from chronominer_spark.constraints.spec import (
-        ConstraintSuite, group_agg_check)
-    from chronominer_spark.streaming.dedup_stream import (
-        IncrementalGroupAggAudit)
-
-    # c1 stays under avg<=100 across batches; c2 exceeds only once
-    # batch 2 lands; c3 all-null -> null avg -> violation
-    rows = [("c1", 80, 0), ("c1", 90, 1), ("c1", 100, 2),
-            ("c2", 90, 0), ("c2", 90, 1), ("c2", 400, 2),
-            ("c3", None, 0), ("c3", None, 2)]
-    full = spark.createDataFrame(rows, "conv_id string, est int, b int")
-
-    src = str(tmp_path / "gagg_stream")
-    for i in range(3):
-        (full.where(F.col("b") == i).drop("b")
-         .coalesce(1).write.mode("append").parquet(src))
-
-    inc = IncrementalGroupAggAudit(
-        spark, str(tmp_path / "gagg_state"), "conv_id", "est",
-        agg="avg", hi=100.0)
-    stream = (spark.readStream.schema("conv_id string, est int")
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = inc.attach(stream, str(tmp_path / "gagg_ckpt"))
-    q.awaitTermination()
-    assert len(inc.table.snapshots()) == 3
-
-    got = {r["conv_id"]: r for r in inc.result().collect()}
-    assert {k for k, r in got.items() if r["violating"]} == {"c2", "c3"}
-    assert got["c2"]["agg_value"] == (90 + 90 + 400) / 3
-    assert got["c3"]["agg_value"] is None and got["c3"]["n_rows"] == 2
-
-    suite = ConstraintSuite(
-        name="gagg_twin",
-        constraints=(group_agg_check("est_avg", "conv_id", "avg(est)",
-                                     hi=100.0),))
-    _, vio = SuiteEvaluator(spark, suite).evaluate(
-        full.withColumn("pbucket", F.lit(1)))
-    assert ({r["value"] for r in vio.collect()}
-            == {k for k, r in got.items() if r["violating"]})
-
-    before = inc.table.current_snapshot_id()
-    inc.process_batch(full.drop("b").limit(3), 0)
-    assert inc.table.current_snapshot_id() == before
-
-    with _pytest.raises(ValueError, match="mergeable"):
-        IncrementalGroupAggAudit(
-            spark, str(tmp_path / "x"), "conv_id", "est",
-            agg="percentile")
 
 
 def test_incremental_categorical_drift_matches_batch_family(spark, tmp_path):

@@ -1,5 +1,5 @@
 """Tests for the scale-discipline features: per-group stats and their
-skew plan, plan inspection, stateful streaming EWMA, IVF ANN."""
+skew plan, plan inspection, IVF ANN."""
 
 import pandas as pd
 import pytest
@@ -129,27 +129,6 @@ def test_plan_inspection_broadcast(spark):
     assert uses_broadcast_join(j)
     # broadcast join: no shuffle exchange needed for the join itself
     assert count_exchanges(j) == 0
-
-
-def test_stateful_ewma_stream_matches_batch(spark, tmp_path):
-    from chronominer_spark.streaming.stateful import ewma_stream
-
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "src")
-    # deterministic single file -> single micro-batch
-    events.orderBy("event_id").coalesce(1).write.mode("overwrite").parquet(src)
-
-    q = ewma_stream(spark, src, events.schema, query_name="ewma_t")
-    q.processAllAvailable()
-    q.stop()
-    got = {r["key"]: (r["ewma"], r["n"])
-           for r in spark.sql("SELECT * FROM ewma_t").collect()}
-
-    pdf = events.orderBy("event_id").toPandas()
-    for key, grp in pdf.groupby("event_type"):
-        expect = grp["value"].astype(float).ewm(alpha=0.3, adjust=False).mean().iloc[-1]
-        assert got[key][1] == len(grp)
-        assert abs(got[key][0] - expect) < 1e-9
 
 
 def test_ivf_topk_recall(vectors):

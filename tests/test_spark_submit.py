@@ -73,7 +73,8 @@ def test_run_suite_diff_prev_regression_gate(spark, tmp_path):
     reports regressed (partition, constraint) verdicts in the JSON
     summary and exits 3 — the operational regression gate of
     reporting.py:diff_validation_results, driven through the real CLI
-    subprocess."""
+    subprocess. The second run writes into that same root, so the
+    previous results must be read before the run replaces them."""
     from pyspark.sql import functions as F
 
     rows = [(f"conv-{c:08d}", i, ["system", "user", "assistant"][i % 3],
@@ -104,8 +105,11 @@ def test_run_suite_diff_prev_regression_gate(spark, tmp_path):
     rc_a, pay_a = run(clean_p, str(tmp_path / "out_a"), [])
     assert rc_a == 0 and pay_a["status"] == "complete"
 
-    rc_b, pay_b = run(damaged_p, str(tmp_path / "out_b"),
-                      ["--diff-prev", str(tmp_path / "out_a"),
+    # the damaged snapshot revalidated INTO the clean run's own root:
+    # the diff is against that root's results from before this run
+    rc_b, pay_b = run(damaged_p, str(tmp_path / "out_a"),
+                      ["--snapshot", "1",
+                       "--diff-prev", str(tmp_path / "out_a"),
                        "--fail-on-regression"])
     assert rc_b == 3
     assert pay_b["diff"]["regressed"] >= 1
@@ -114,7 +118,7 @@ def test_run_suite_diff_prev_regression_gate(spark, tmp_path):
 
     # same damaged snapshot re-diffed against itself: nothing regresses
     rc_c, pay_c = run(damaged_p, str(tmp_path / "out_c"),
-                      ["--diff-prev", str(tmp_path / "out_b"),
+                      ["--diff-prev", str(tmp_path / "out_a"),
                        "--fail-on-regression"])
     assert rc_c == 1 or rc_c == 0  # failures persist, none regress
     assert "regressed" not in pay_c["diff"]
@@ -184,7 +188,8 @@ def test_run_suite_diff_prev_bad_path_is_clean_cli_error(tmp_path):
     """An unreadable --diff-prev path must be a friendly exit-64
     (EX_USAGE) CLI error on stderr — not a traceback (round-4 ADVICE),
     and not exit 2, which is reserved for a FAILED validation run so
-    orchestrators can branch on it (round-5 ADVICE)."""
+    orchestrators can branch on it (round-5 ADVICE). The path is checked
+    before the run, so the output root stays empty."""
     rows_path = str(tmp_path / "t")
     import pandas as pd
     pd.DataFrame({
@@ -193,9 +198,10 @@ def test_run_suite_diff_prev_bad_path_is_clean_cli_error(tmp_path):
         "text": ["a", "b", "c"], "tool": ["none"] * 3,
         "pbucket": [1, 1, 1],
     }).to_parquet(rows_path)
+    out = tmp_path / "out"
     proc = subprocess.run(
         [sys.executable, "-m", "chronominer_spark.jobs.run_suite",
-         "--table", rows_path, "--output", str(tmp_path / "out"),
+         "--table", rows_path, "--output", str(out),
          "--master", "local[4]", "--json",
          "--diff-prev", str(tmp_path / "nope"), "--fail-on-regression"],
         capture_output=True, text=True, cwd=REPO,
@@ -204,3 +210,7 @@ def test_run_suite_diff_prev_bad_path_is_clean_cli_error(tmp_path):
     assert proc.returncode == 64
     assert "error: --diff-prev" in proc.stderr
     assert "Traceback" not in proc.stderr
+    # a usage error is caught before the run: no results table and no
+    # manifest are committed under --output
+    left = sorted(p.name for p in out.iterdir()) if out.exists() else []
+    assert left == [], left

@@ -7,6 +7,12 @@ inside a function, and ``<alias>.<name>`` attributes read off an
 imported ``chronominer_spark`` module — so removing engine code a kept
 script depends on fails here rather than at the script's next use.
 
+The reverse check covers the streaming package: every public top-level
+class or function in ``chronominer_spark/streaming/`` must be named by
+non-test code (a query, a job, another package module or the perfbench
+source; the package ``__init__`` re-exports do not count), so a twin
+that only its own tests reach fails here.
+
 The benchmark's ``perfbench/*.py`` files are only read, never imported
 (they are a frozen instrument with their own entry point): the same
 name check runs over their source, plus every ``wrap(<engine class>,
@@ -28,6 +34,14 @@ TOOLS = sorted(
 )
 SCRIPTS = TOOLS + [REPO / "bench_extra.py"]
 PERFBENCH = sorted((REPO / "perfbench").glob("*.py"))
+PACKAGE = REPO / "chronominer_spark"
+STREAMING = PACKAGE / "streaming"
+
+# public streaming names whose callers live outside the repo, with why
+STREAMING_ENTRY_POINTS = {
+    "run_available_now_pass": "the suite twin's resumable AvailableNow "
+                              "pass (ST3); a scheduler calls it",
+}
 
 
 def _check_engine_names(path: pathlib.Path) -> set[tuple[str, str]]:
@@ -90,3 +104,34 @@ def test_perfbench_engine_names(path):
     if path.name == "tracing.py":
         assert {("RefAggCache", "load"), ("RefAggCache", "save"),
                 ("SnapshotTable", "snapshots")} <= wrapped, wrapped
+
+
+def _names_used(path: pathlib.Path) -> set[str]:
+    """Every identifier ``path`` reads, imports or takes as an
+    attribute (definitions themselves are not uses)."""
+    used = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            used.add(node.attr)
+        elif isinstance(node, ast.ImportFrom):
+            used.update(alias.name for alias in node.names)
+    return used
+
+
+def test_every_streaming_name_has_a_consumer():
+    public = {
+        node.name
+        for path in STREAMING.glob("*.py")
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+        and not node.name.startswith("_")
+    }
+    assert set(STREAMING_ENTRY_POINTS) <= public
+    consumers = [p for p in PACKAGE.rglob("*.py")
+                 if p != STREAMING / "__init__.py"] + PERFBENCH
+    used = set().union(*(_names_used(p) for p in consumers))
+    unreached = sorted(public - used - set(STREAMING_ENTRY_POINTS))
+    assert unreached == [], (
+        f"streaming names only tests reach: {unreached}")
