@@ -20,8 +20,9 @@ Scale design (SURVEY.md §4, §7):
   duplicate violations, rows_checked totals and group sizes —
   suite-level scan sharing.
 - **Vocabulary RI** dims are tiny by definition -> fused ``isin``
-  (Catalyst InSet) in the shared scan when declared inline, or a
-  ``broadcast()`` + ``left_anti`` join when declared as a dim DataFrame.
+  (Catalyst InSet) in the shared scan when declared inline, or one
+  ``left_anti`` join when declared as a dim DataFrame (Spark broadcasts
+  a vocab-sized dim by size).
 - **Equality/drift** need the reference snapshot; both shuffle only
   aggregates, keys and 64-bit hashes, never wide rows: drift bins each
   (expr, range) pair ONCE and derives PSI and KS from the same joined
@@ -58,6 +59,10 @@ VIOLATION_COLUMNS = [
 ]
 
 _VALUE_TRUNC = 256
+# digest="auto" probe: sample 1/_AUTO_SAMPLE_MOD of conversations, pick
+# the digest prepass iff their mismatch rate is at most _AUTO_THRESHOLD
+_AUTO_SAMPLE_MOD = 20
+_AUTO_THRESHOLD = 0.05
 
 ROW_LEVEL_KINDS = {
     "not_null", "not_empty", "referential", "cast_ok",
@@ -438,7 +443,7 @@ class SuiteEvaluator:
     @staticmethod
     def _fusable(c: Constraint) -> bool:
         """Row-level kinds fuse into one scan, except RI declared via a
-        named dim DataFrame, which uses the broadcast left-anti plan."""
+        named dim DataFrame, which uses the left-anti join plan."""
         return c.kind in ROW_LEVEL_KINDS and not c.params.get("vocab_name")
 
     # -- row-level family ---------------------------------------------------
@@ -456,8 +461,9 @@ class SuiteEvaluator:
             return _RowCheck(c, pred, p["col"], F.lit("").cast("string"),
                              F.lit("empty_after_trim"), p.get("max_rate", 0.0))
         if kind == "referential":
+            # as strings, like the dim join: never cast the vocabulary
             col = F.col(p["col"])
-            bad = col.isNotNull() & ~col.isin(*p["vocab"])
+            bad = col.isNotNull() & ~col.cast("string").isin(*p["vocab"])
             if not p.get("allow_null", True):
                 bad = bad | col.isNull()
             detail = F.format_string("not in %s vocabulary", F.lit(p["col"]))
@@ -632,25 +638,15 @@ class SuiteEvaluator:
             )
         )
 
-    # -- referential via broadcast left-anti --------------------------------
+    # -- referential via left-anti join ---------------------------------------
     def _referential_join(
         self, df: DataFrame, ref: DataFrame | None, c: Constraint, shared=None,
     ) -> tuple[DataFrame, DataFrame]:
-        """RI against a dim DataFrame — the J6 plan family.
-
-        ``strategy='broadcast'`` (default): violations = left_anti
-        (broadcast dim); zero shuffle, right for vocab-sized dims.
-
-        ``strategy='shuffle'``: the 100-TB path for dims that do NOT
-        fit in a broadcast (a billions-key conversations dim). The fact
-        side is first collapsed to distinct ``(col, _pid)`` keys with
-        map-side-combined counts — the anti-join then shuffles distinct
-        keys instead of rows (for a vocab-like column that is ~|vocab| x
-        #partitions rows regardless of corpus size). Violation ROWS are
-        recovered by broadcasting the (typically tiny) bad-key set back
-        over the fact side as a left-semi join, so per-row lineage is
-        identical to the broadcast plan without ever shuffling the fact
-        table."""
+        """RI against a dim DataFrame — the J6 plan: violations = one
+        hint-free ``left_anti`` join, broadcast or shuffled by Spark's
+        size-based choice. Values compare as strings (an all-NULL fact
+        column reads as ``int``); for a string column ``SimplifyCasts``
+        drops the cast."""
         p = c.params
         col = p["col"]
         if p["vocab_name"] not in self.vocab_dfs:
@@ -661,29 +657,15 @@ class SuiteEvaluator:
             )
         vocab = self.vocab_dfs[p["vocab_name"]]
         vocab_col = vocab.columns[0]
-        dim = vocab.select(F.col(vocab_col).alias(col)).distinct()
+        dim = vocab.select(
+            F.col(vocab_col).cast("string").alias(col)).distinct()
 
         candidates = df.where(F.col(col).isNotNull()) if p.get("allow_null", True) else df
         totals = df.groupBy("_pid").agg(F.count(F.lit(1)).alias("rows_checked"))
-
-        if p.get("strategy", "broadcast") == "shuffle":
-            keys = candidates.groupBy(col, "_pid").agg(
-                F.count(F.lit(1)).alias("__n"))
-            bad_keys = keys.join(dim, on=col, how="left_anti")
-            bad_counts = bad_keys.groupBy("_pid").agg(
-                F.sum("__n").alias("violation_count"))
-            # null-SAFE semi join: with allow_null=False a null key is a
-            # violation, and a plain equi-join would silently drop those
-            # rows from the violations frame
-            bad_set = F.broadcast(
-                bad_keys.select(F.col(col).alias("__bad_key")).distinct())
-            bad = candidates.join(
-                bad_set, on=F.col(col).eqNullSafe(F.col("__bad_key")),
-                how="left_semi")
-        else:
-            bad = candidates.join(F.broadcast(dim), on=col, how="left_anti")
-            bad_counts = bad.groupBy("_pid").agg(
-                F.count(F.lit(1)).alias("violation_count"))
+        bad = candidates.join(
+            dim, candidates[col].cast("string") == dim[col], how="left_anti")
+        bad_counts = bad.groupBy("_pid").agg(
+            F.count(F.lit(1)).alias("violation_count"))
         res = _rate_rows(totals, bad_counts, c.constraint_id,
                          p.get("max_rate", 0.0))
         vio = self._violation_rows(
@@ -1096,16 +1078,13 @@ class SuiteEvaluator:
         """Resolve ``digest="auto"``: digest a deterministic conversation
         sample on both sides and pick the digest prepass iff the observed
         conv-level mismatch rate is at or below the threshold. The sample
-        is keyed on ``xxhash64(conv) % auto_sample_mod == 0`` so both
+        is keyed on ``xxhash64(conv) % _AUTO_SAMPLE_MOD == 0`` so both
         sides sample the SAME conversations at any parallelism."""
-        p = c.params
         conv = self.suite.key_cols[0]
-        mod = int(p.get("auto_sample_mod", 20))
-        threshold = float(p.get("auto_threshold", 0.05))
 
         def side(s: DataFrame, pfx: str) -> DataFrame:
             sampled = s.where(
-                F.pmod(F.xxhash64(F.col(conv)), F.lit(mod)) == 0)
+                F.pmod(F.xxhash64(F.col(conv)), F.lit(_AUTO_SAMPLE_MOD)) == 0)
             return self._conv_digest(sampled, c, pfx, [F.col(conv)])
 
         j = side(df, "_cur_").join(side(ref, "_ref_"), on=conv,
@@ -1119,11 +1098,11 @@ class SuiteEvaluator:
                         c.constraint_id)
             return False
         rate = row["bad"] / row["n"]
-        choice = rate <= threshold
+        choice = rate <= _AUTO_THRESHOLD
         logger.info(
             "text_equality[%s]: auto sampled %d convs, mismatch rate %.3f "
             "(threshold %.3f) -> %s", c.constraint_id, row["n"], rate,
-            threshold, "digest prepass" if choice else "direct join",
+            _AUTO_THRESHOLD, "digest prepass" if choice else "direct join",
         )
         return choice
 
@@ -1155,10 +1134,10 @@ class SuiteEvaluator:
           join for every conversation (the drilldown plan applied
           globally).
         - ``digest="auto"``: measure, don't guess — a deterministic
-          ~1/``auto_sample_mod`` conversation sample (default 1/20) is
+          ~1/``_AUTO_SAMPLE_MOD`` conversation sample (1/20) is
           digested on BOTH sides first, and the observed conv-level
-          mismatch rate picks the plan: rate ≤ ``auto_threshold``
-          (default 5%) → digest prepass (diffs are rare, the prepass
+          mismatch rate picks the plan: rate ≤ ``_AUTO_THRESHOLD``
+          (5%) → digest prepass (diffs are rare, the prepass
           removes the turn-level join for ~95%+ of conversations);
           above → direct join (dense diffs would drill most
           conversations anyway, making the prepass pure overhead — the

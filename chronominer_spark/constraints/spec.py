@@ -76,31 +76,21 @@ def referential(
     vocab_name: str | None = None,
     allow_null: bool = True,
     max_rate: float = 0.0,
-    strategy: str = "broadcast",
 ) -> Constraint:
     """Membership in a closed vocabulary. ``vocab`` inline (tiny enums) or
     ``vocab_name`` referencing a dim DataFrame supplied at evaluation time.
     Nullable enums admit null, mirroring
     ``tests/test_schema_invariants.py:71-90``.
 
-    ``strategy`` picks the dim-join plan: ``"broadcast"`` (default —
-    broadcast + left-anti, right for vocab-sized dims) or ``"shuffle"``
-    for dims too large to broadcast (e.g. RI of conv_id against a
-    billions-row conversations dim): candidates are first collapsed to
-    distinct ``(col, partition)`` keys with map-side-combined counts, so
-    the anti-join shuffles distinct keys, not rows — then only the bad
-    keys (typically few) are broadcast back to fish out violation rows.
-    Results and violation rows are identical between the two
-    (``tests/test_suite_engine.py`` asserts it)."""
-    if strategy not in ("broadcast", "shuffle"):
-        raise ValueError(
-            f"referential strategy must be 'broadcast' or 'shuffle', "
-            f"got {strategy!r}")
+    A ``vocab_name`` dim is one left-anti join with no hint: Spark's
+    size-based join choice broadcasts a dim of known small size (a local
+    or table-backed frame, as :func:`default_vocab_dfs` builds) and
+    shuffles one too large to broadcast. Values compare as strings, so a
+    fact column of any type checks against a string dim."""
     return Constraint(
         f"ri:{col}", "referential",
         {"col": col, "vocab": vocab, "vocab_name": vocab_name,
-         "allow_null": allow_null, "max_rate": max_rate,
-         "strategy": strategy},
+         "allow_null": allow_null, "max_rate": max_rate},
     )
 
 
@@ -348,8 +338,6 @@ def text_equality(
     strip_diacritics: bool = False,
     max_mismatch_rate: float = 0.0,
     digest: bool | str = False,
-    auto_sample_mod: int = 20,
-    auto_threshold: float = 0.05,
 ) -> Constraint:
     """Per-turn text equality vs the reference snapshot under stable turn
     ordering (W1) — normalization knobs mirror the matching config at
@@ -365,9 +353,10 @@ def text_equality(
     pure overhead — see BENCH/BASELINE.md). ``digest=False`` (default)
     is the direct per-turn join.
 
-    ``digest="auto"`` samples ~1/``auto_sample_mod`` of conversations,
-    digests them on both sides, and turns the prepass on iff the
-    observed conv-level mismatch rate ≤ ``auto_threshold``. Decision
+    ``digest="auto"`` samples ~1/20 of conversations, digests them on
+    both sides, and turns the prepass on iff the observed conv-level
+    mismatch rate ≤ 5% (``engine._AUTO_SAMPLE_MOD`` /
+    ``engine._AUTO_THRESHOLD``). Decision
     rule when choosing by hand: expected fraction of conversations with
     any diff under ~5% → digest; above → direct (the measured crossover
     sits between 5% and the bench's planted 15%)."""
@@ -378,8 +367,7 @@ def text_equality(
         f"eq:{col}", "text_equality",
         {"col": col, "lowercase": lowercase, "collapse_ws": collapse_ws,
          "strip_punct": strip_punct, "strip_diacritics": strip_diacritics,
-         "max_mismatch_rate": max_mismatch_rate, "digest": digest,
-         "auto_sample_mod": auto_sample_mod, "auto_threshold": auto_threshold},
+         "max_mismatch_rate": max_mismatch_rate, "digest": digest},
     )
 
 
@@ -560,8 +548,11 @@ def default_transcript_suite(
 
 def default_vocab_dfs(spark, tool_vocab: list[str]) -> dict:
     """Dim DataFrames for :func:`default_transcript_suite` — the tool
-    registry as a (broadcastable) one-column table."""
+    registry as a one-column local relation (built from pandas: a
+    list-built frame is an RDD of unknown size, never broadcast)."""
+    import pandas as pd
+
     return {
-        "tool_vocab": spark.createDataFrame([(v,) for v in tool_vocab],
+        "tool_vocab": spark.createDataFrame(pd.DataFrame({"tool": tool_vocab}),
                                             "tool string"),
     }

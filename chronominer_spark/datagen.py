@@ -226,4 +226,8 @@ def generate_reference_snapshot(spark: SparkSession, cfg: TranscriptGenConfig) -
 
 
 def role_vocab_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(r,) for r in ROLE_VOCAB], "role string")
+    """The role vocabulary as a dim of known size (built from pandas)."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame({"role": list(ROLE_VOCAB)}),
+                                 "role string")

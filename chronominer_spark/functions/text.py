@@ -50,42 +50,19 @@ def normalize_text(
     return c
 
 
-def normalize_text_arrow(
-    col: Column | str,
-    lowercase: bool = True,
-    collapse_ws: bool = True,
-    strip_punct: bool = False,
-    strip_diacritics: bool = False,
-) -> Column:
-    """Arrow/pyarrow.compute twin of :func:`normalize_text` — identical
-    output (pytest-asserted on whitespace/punct/unicode edge fixtures),
-    one vectorized RE2 pass per Arrow batch instead of a per-row JVM
-    regex (guide §4.2; measured ~2.5× on the 2M-row equality
-    normalization stage, the suite's hottest scalar expression).
+def _arrow_norm_array(s: pd.Series, lowercase: bool, collapse_ws: bool,
+                      strip_punct: bool, strip_diacritics: bool):
+    """pyarrow.compute twin of :func:`normalize_text` — the body
+    :func:`norm_hash64_arrow` runs per Arrow batch. Identical output
+    (pytest-asserted on whitespace/punct/unicode edge fixtures), one
+    vectorized RE2 pass per batch instead of a per-row JVM regex.
+    Returns a pyarrow string array.
 
     Java regex classes are spelled out as explicit ASCII sets so RE2
     matches Java exactly: ``\\s`` → ``[ \\t\\n\\x0B\\f\\r]``, ``\\w`` →
     ``[0-9A-Za-z_]``. ``utf8_trim(' ')`` matches Spark's space-only
-    ``trim``; ``utf8_lower`` matches ``lower`` for ASCII (the same
-    exotic-codepoint caveat the engine's DuckDB oracles already
-    carry). Use on hot paths; :func:`normalize_text` remains the
-    executable spec."""
-    c = F.col(col) if isinstance(col, str) else col
-
-    @F.pandas_udf(StringType())
-    def _norm(s: pd.Series) -> pd.Series:
-        return _arrow_norm_array(
-            s, lowercase, collapse_ws, strip_punct, strip_diacritics
-        ).to_pandas()
-
-    return _norm(c)
-
-
-def _arrow_norm_array(s: pd.Series, lowercase: bool, collapse_ws: bool,
-                      strip_punct: bool, strip_diacritics: bool):
-    """Shared pyarrow.compute normalization body for the Arrow twins
-    (see :func:`normalize_text_arrow` for the Java-regex equivalence
-    notes). Returns a pyarrow string array."""
+    ``trim``; lowercasing keeps the JVM's full Unicode case mapping
+    (see below)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -95,14 +72,8 @@ def _arrow_norm_array(s: pd.Series, lowercase: bool, collapse_ws: bool,
         # have no null-type kernel — cast keeps NULL→NULL semantics
         arr = arr.cast(pa.string())
     if strip_diacritics:
-        vals = [
-            None if v is None else "".join(
-                ch for ch in unicodedata.normalize("NFD", v)
-                if unicodedata.category(ch) != "Mn"
-            )
-            for v in arr.to_pylist()
-        ]
-        arr = pa.array(vals, type=pa.string())
+        arr = pa.array([_strip_marks(v) for v in arr.to_pylist()],
+                       type=pa.string())
     if strip_punct:
         arr = pc.replace_substring_regex(
             arr, pattern=r"[^0-9A-Za-z_ \t\n\x0B\f\r]", replacement="")
@@ -220,6 +191,16 @@ def _duckdb_hash64(arr) -> pd.Series:
         types_mapper={pa.int64(): pd.Int64Dtype()}.get)
 
 
+def _strip_marks(v: str | None) -> str | None:
+    """NFD-decompose ``v`` and drop its combining marks (Mn); None → None."""
+    if v is None:
+        return None
+    return "".join(
+        ch for ch in unicodedata.normalize("NFD", v)
+        if unicodedata.category(ch) != "Mn"
+    )
+
+
 @F.pandas_udf(StringType())
 def strip_diacritics_udf(s: pd.Series) -> pd.Series:
     """NFD-decompose and drop combining marks (Mn), Arrow-vectorized.
@@ -227,15 +208,7 @@ def strip_diacritics_udf(s: pd.Series) -> pd.Series:
     The only normalization step without a Spark builtin; batched via
     Arrow, never row-at-a-time Python in the JVM loop.
     """
-    def _strip(v):
-        if v is None:
-            return None
-        return "".join(
-            ch for ch in unicodedata.normalize("NFD", v)
-            if unicodedata.category(ch) != "Mn"
-        )
-
-    return s.map(_strip)
+    return s.map(_strip_marks)
 
 
 def levenshtein_ratio(a: Column | str, b: Column | str) -> Column:

@@ -14,8 +14,10 @@ chunk-slice semantics:
   reference loop (trims the previous end AND shifts the current start,
   clamping inversions) — ``applyInPandas`` per doc; matches the
   reference bit-for-bit including fully-contained ranges
-- :func:`enforce_max_gap`   W5 extend a range toward its successor when
-  the gap exceeds a maximum (``readjuster.py:1749-1804``)
+- :func:`enforce_max_gap_exact`  W5/W8 extend a range toward its
+  successor when the gap exceeds a maximum, reducing it to exactly that
+  maximum, never shrinking and never into a deleted span
+  (``readjuster.py:1749-1804``)
 - :func:`slice_chunks`      L1 first_n / last_n / index-range slicing
   under ABSOLUTE 1-based indices that survive slicing
   (``modules/infra/chunking.py:376-489``): indices are computed once
@@ -145,11 +147,10 @@ def enforce_max_gap_exact(
     (``/root/reference/modules/line_ranges/readjuster.py:1749-1804``):
     when the gap to the NEXT range exceeds ``max_gap``, extend THIS
     range's end to ``next_start - max_gap - 1`` — reducing the gap to
-    exactly ``max_gap``, not zero (:func:`enforce_max_gap` closes it
-    fully, a divergence mirroring the W4 boundary-direction choice).
-    The extension never shrinks (monotone clamp) and never reaches into
-    a ``deleted_spans`` row (columns ``key, span_start, span_end``):
-    spans confirmed content-free cap the extension at ``span_start - 1``
+    exactly ``max_gap``, not zero. The extension never shrinks (W8
+    monotone clamp) and never reaches into a ``deleted_spans`` row
+    (columns ``key, span_start, span_end``): spans confirmed
+    content-free cap the extension at ``span_start - 1``
     — otherwise deletion would be silently undone and the no-content
     lines re-extracted.
 
@@ -201,28 +202,6 @@ def enforce_max_gap_exact(
     return base.withColumn(
         end, F.coalesce(new_end, F.col(end))
     ).drop("__cand", "__cap")
-
-
-def enforce_max_gap(
-    df: DataFrame, key: str, start: str = "start", end: str = "end",
-    max_gap: int = 1, order_col: str | None = None,
-) -> DataFrame:
-    """Extend each range's end toward the successor when the gap
-    exceeds ``max_gap`` (W5): ``end' = next_start - 1`` for oversized
-    gaps, clamped to never shrink (W8 monotone clamp). NOTE: the
-    reference reduces the gap to exactly ``max_gap`` and honors
-    deleted-span caps — :func:`enforce_max_gap_exact` is the
-    reference-parity variant; this one closes the gap fully."""
-    order = [F.col(start).asc()]
-    if order_col:
-        order.append(F.col(order_col).asc())
-    w = W.partitionBy(key).orderBy(*order)
-    next_start = F.lead(F.col(start)).over(w)
-    gap = next_start - F.col(end) - 1
-    new_end = F.when(
-        next_start.isNotNull() & (gap > max_gap), next_start - 1
-    ).otherwise(F.col(end))
-    return df.withColumn(end, F.greatest(new_end, F.col(end)))
 
 
 def resolve_anchor_lines(

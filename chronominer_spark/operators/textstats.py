@@ -140,7 +140,6 @@ def repetition_features(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     k: int = 2,
     max_dup_ngram_frac: float = 0.6, max_top_ngram_frac: float = 0.2,
-    method: str = "explode",
 ) -> DataFrame:
     """Within-document repetition profile — the Gopher-family quality
     filters (duplicate-n-gram fraction and most-frequent-n-gram
@@ -159,22 +158,12 @@ def repetition_features(
     - ``repetitive`` = dup_ngram_frac > max_dup_ngram_frac OR
       top_ngram_frac > max_top_ngram_frac
 
-    Scale posture — ``method='explode'`` (default): two hash
-    aggregates keyed (doc, gram) then (doc), both map-side-combining
-    and fully whole-stage-codegen'd; docs shorter than k words survive
-    via ``explode_outer``. ``method='fold'`` is the measured-and-
-    REJECTED shuffle-free alternative (all three gram statistics from
-    the sorted gram array in-row, modal count via one ``F.aggregate``
-    longest-equal-run fold, zero exchanges): at sf0.1/local[32] it runs
-    ~4x SLOWER warm (18.7 s vs 4.7 s) because higher-order-function
-    lambdas evaluate interpreted per element while the explode plan
-    stays inside codegen, and the (doc, gram) exchange mostly collapses
-    map-side anyway — shuffle-free is not free CPU. Kept (with a
-    row-for-row pytest equality) as the documented negative result and
-    for exchange-constrained deployments.
+    Scale posture: two hash aggregates keyed (doc, gram) then (doc),
+    both map-side-combining and fully whole-stage-codegen'd; docs
+    shorter than k words survive via ``explode_outer``. A shuffle-free
+    in-row fold (sorted gram array + ``F.aggregate`` longest-run) was
+    measured ~4x slower warm and deleted (BENCH/BASELINE.md).
     """
-    if method not in ("fold", "explode"):
-        raise ValueError(f"method must be 'fold' or 'explode', got {method!r}")
     c = F.coalesce(F.col(text_col), F.lit(""))
     ws = F.split(F.lower(F.trim(c)), r"\s+")
     n_words = F.size(ws)
@@ -185,34 +174,6 @@ def repetition_features(
             lambda i: F.array_join(F.slice(ws, i + 1, k), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-    if method == "fold":
-        sg = F.array_sort(grams)
-        # longest equal-run in the sorted array == modal gram count
-        top = F.aggregate(
-            sg,
-            F.struct(F.lit("").alias("prev"), F.lit(0).cast("long").alias("run"),
-                     F.lit(0).cast("long").alias("best")),
-            lambda acc, x: F.struct(
-                x.alias("prev"),
-                F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1).cast("long")).alias("run"),
-                F.greatest(
-                    acc["best"],
-                    F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1).cast("long")),
-                ).alias("best"),
-            ),
-            lambda acc: acc["best"],
-        )
-        per_doc = df.select(
-            F.col(id_col),
-            n_words.alias("n_words"),
-            F.size(F.array_distinct(ws)).alias("__ndw"),
-            F.size(grams).cast("long").alias("n_grams"),
-            F.size(F.array_distinct(grams)).cast("long").alias("__ndg"),
-            top.alias("__top"),
-        )
-        return _repetition_select(per_doc, id_col,
-                                  max_dup_ngram_frac, max_top_ngram_frac)
 
     exploded = df.select(
         F.col(id_col),
@@ -233,17 +194,6 @@ def repetition_features(
         F.sum(F.when(live, 1).otherwise(0)).alias("__ndg"),
         F.max(F.when(live, F.col("__cnt")).otherwise(0)).alias("__top"),
     )
-    return _repetition_select(per_doc, id_col,
-                              max_dup_ngram_frac, max_top_ngram_frac)
-
-
-def _repetition_select(
-    per_doc: DataFrame, id_col: str,
-    max_dup_ngram_frac: float, max_top_ngram_frac: float,
-) -> DataFrame:
-    """Shared output projection over (id, n_words, __ndw, n_grams,
-    __ndg, __top) — both repetition plans must emit bit-identical
-    fractions and flags."""
     safe_w = F.greatest(F.col("n_words"), F.lit(1))
     safe_g = F.greatest(F.col("n_grams"), F.lit(1))
     dup_w = 1.0 - F.col("__ndw") / safe_w

@@ -8,6 +8,8 @@ configs so every assertion is reproducible.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from chronominer_spark.datagen import (
@@ -60,3 +62,25 @@ def ref_snapshot(spark, gen_cfg):
 @pytest.fixture(scope="session")
 def vocabs():
     return list(ROLE_VOCAB), list(TOOL_VOCAB)
+
+
+@pytest.fixture
+def broadcast_joins_off(spark):
+    """A context manager that sets both broadcast-join size thresholds
+    to -1, so Spark plans every join as a shuffled one, as it does for
+    a dim too large to broadcast; the settings are restored on exit."""
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+    @contextmanager
+    def off():
+        saved = {k: spark.conf.get(k) for k in keys}
+        try:
+            for k in keys:
+                spark.conf.set(k, "-1")
+            yield
+        finally:
+            for k, v in saved.items():
+                spark.conf.set(k, v)
+
+    return off

@@ -9,7 +9,6 @@ from chronominer_spark.constraints.tdigest import _compress, tdigest_quantiles
 from chronominer_spark.functions.jsonx import extract_json, extract_json_string
 from chronominer_spark.operators.fuzzy import fuzzy_match
 from chronominer_spark.operators.ranges import (
-    enforce_max_gap,
     sanitize_ranges,
     slice_chunks,
     trim_overlaps,
@@ -71,15 +70,6 @@ def test_trim_overlaps_swallowed_range(spark):
     ok, bad = sanitize_ranges(out)
     assert sorted((r["start"], r["end"]) for r in ok.collect()) == [(1, 100), (150, 160)]
     assert bad.count() == 1
-
-
-def test_enforce_max_gap(spark):
-    df = spark.createDataFrame(
-        [(1, 1, 10), (1, 20, 30)], "doc long, start long, end long"
-    )
-    got = sorted((r["start"], r["end"]) for r in
-                 enforce_max_gap(df, "doc", max_gap=3).collect())
-    assert got == [(1, 19), (20, 30)]
 
 
 def test_slice_chunks_absolute_indices(spark):

@@ -706,13 +706,12 @@ def test_heavy_hitters_guarantee_under_any_partitioning(spark):
     assert got == {"a": 7, "b": 3}
 
 
-def test_repetition_fold_plan_matches_explode_and_is_shuffle_free(spark):
-    """The fold plan (sorted-array longest-run; measured-and-rejected
-    as default — see the operator docstring) must agree row-for-row
-    with the default explode plan on messy inputs, and must compile to
-    ZERO exchanges — it is a pure projection."""
+def test_repetition_features_degenerate_docs(spark):
+    """repetition_features on messy inputs: a NULL text, an empty text
+    and a single-word doc (fewer than k words) each survive as one row
+    with zero grams via ``explode_outer``, next to looped, clean and
+    mixed docs. Expected rows are literal."""
     from chronominer_spark.operators.textstats import repetition_features
-    from chronominer_spark.plans.inspect import count_exchanges
 
     docs = spark.createDataFrame(
         [(1, "buy now buy now buy now buy now buy now"),
@@ -720,12 +719,15 @@ def test_repetition_fold_plan_matches_explode_and_is_shuffle_free(spark):
          (3, "single"), (4, None), (5, ""),
          (6, "a a a a b b a a a")],
         "doc_id long, text string")
-    fold = repetition_features(docs, k=2, method="fold")
-    expl = repetition_features(docs, k=2, method="explode")
-    assert count_exchanges(fold) == 0
-    rows_f = sorted(map(tuple, fold.collect()))
-    rows_e = sorted(map(tuple, expl.collect()))
-    assert rows_f == rows_e
+    got = sorted(map(tuple, repetition_features(docs, k=2).collect()))
+    assert got == [
+        (1, 10, 0.8, 9, 0.777778, 0.555556, True),
+        (2, 9, 0.111111, 8, 0.0, 0.125, False),
+        (3, 1, 0.0, 0, 0.0, 0.0, False),
+        (4, 1, 0.0, 0, 0.0, 0.0, False),
+        (5, 1, 0.0, 0, 0.0, 0.0, False),
+        (6, 9, 0.777778, 8, 0.5, 0.625, True),
+    ]
 
 
 def test_heavy_hitters_empty_and_all_null_inputs(spark):
@@ -1267,19 +1269,21 @@ def test_norm_hash64_null_batch_precision(spark):
     assert got == [None, None]
 
 
-def test_normalize_text_arrow_matches_catalyst(spark):
-    """Round-7 optimization guard: normalize_text_arrow (pyarrow.compute
-    RE2 passes) must reproduce normalize_text (JVM regex) exactly for
-    every toggle combination, on whitespace/punct/unicode edge
-    fixtures: Java \\s == [ \\t\\n\\x0B\\f\\r], Java \\w ==
-    [0-9A-Za-z_], space-only trim, NULL propagation."""
+def test_arrow_norm_array_matches_catalyst(spark):
+    """Optimization guard: _arrow_norm_array (pyarrow.compute RE2
+    passes, the body norm_hash64_arrow runs) must reproduce
+    normalize_text (JVM regex) exactly for every toggle combination, on
+    whitespace/punct/unicode edge fixtures: Java \\s == [ \\t\\n\\x0B\\f\\r],
+    Java \\w == [0-9A-Za-z_], space-only trim, NULL propagation. The
+    Catalyst side of all 16 combinations is one Spark job."""
     from itertools import product
 
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from chronominer_spark.functions.text import (
+        _arrow_norm_array,
         normalize_text,
-        normalize_text_arrow,
     )
 
     rows = [
@@ -1295,12 +1299,15 @@ def test_normalize_text_arrow_matches_catalyst(spark):
         (9, "a  b   c    d"),
     ]
     df = spark.createDataFrame(rows, "i long, s string")
-    for lc, cw, sp, sd in product([True, False], repeat=4):
-        opts = dict(lowercase=lc, collapse_ws=cw, strip_punct=sp,
-                    strip_diacritics=sd)
-        ref = {r["i"]: r["n"] for r in df.select(
-            "i", normalize_text(F.col("s"), **opts).alias("n")).collect()}
-        got = {r["i"]: r["n"] for r in df.select(
-            "i", normalize_text_arrow(F.col("s"), **opts).alias("n"))
-            .collect()}
+    combos = [dict(lowercase=lc, collapse_ws=cw, strip_punct=sp,
+                   strip_diacritics=sd)
+              for lc, cw, sp, sd in product([True, False], repeat=4)]
+    catalyst = df.select("i", *[
+        normalize_text(F.col("s"), **opts).alias(f"n{j}")
+        for j, opts in enumerate(combos)]).collect()
+    texts = pd.Series([s for _, s in rows], dtype=object)
+    for j, opts in enumerate(combos):
+        ref = {r["i"]: r[f"n{j}"] for r in catalyst}
+        got = dict(zip((i for i, _ in rows),
+                       _arrow_norm_array(texts, **opts).to_pylist()))
         assert got == ref, opts

@@ -334,13 +334,15 @@ def test_digest_equality_stale_duplicate_in_other_partition(spark):
     assert total_checked == 3  # 3 distinct (conv, turn) keys, no double count
 
 
-def test_digest_auto_picks_by_observed_diff_rate(spark, transcripts, ref_snapshot):
+def test_digest_auto_picks_by_observed_diff_rate(spark, transcripts, ref_snapshot,
+                                                monkeypatch):
     """digest='auto' must pick the digest prepass when the sampled
     conv-level mismatch rate is low (re-validating a mostly-identical
     snapshot — the standard fixture's per-turn diff rates put ~3.5% of
     convs over, under the 5% threshold) and the direct join on a
     dense-diff snapshot (mutate rate bumped so ~1/3 of convs differ) —
     and the auto plan's outputs must equal the explicit plans'."""
+    from chronominer_spark.constraints import engine
     from chronominer_spark.constraints.engine import SuiteEvaluator
     from chronominer_spark.constraints.spec import ConstraintSuite, text_equality
     from chronominer_spark.datagen import (TranscriptGenConfig,
@@ -348,7 +350,8 @@ def test_digest_auto_picks_by_observed_diff_rate(spark, transcripts, ref_snapsho
 
     # sample every conversation so the verdict is deterministic at
     # fixture scale
-    c = text_equality("text", digest="auto", auto_sample_mod=1)
+    monkeypatch.setattr(engine, "_AUTO_SAMPLE_MOD", 1)
+    c = text_equality("text", digest="auto")
     suite = ConstraintSuite(name="auto_eq", constraints=(c,))
     ev = SuiteEvaluator(spark, suite)
 
@@ -369,8 +372,7 @@ def test_digest_auto_picks_by_observed_diff_rate(spark, transcripts, ref_snapsho
     def run(suite_name, digest):
         s = ConstraintSuite(
             name=suite_name,
-            constraints=(text_equality("text", digest=digest,
-                                       auto_sample_mod=1),))
+            constraints=(text_equality("text", digest=digest),))
         e = SuiteEvaluator(spark, s)
         res, vio = e.evaluate(transcripts, ref_snapshot, snapshot_id=1)
         out = (sorted(map(tuple, res.drop("suite_name").collect())),
@@ -381,34 +383,86 @@ def test_digest_auto_picks_by_observed_diff_rate(spark, transcripts, ref_snapsho
     assert run("auto_e2e", "auto") == run("direct_e2e", False)
 
 
-def test_referential_shuffle_strategy_matches_broadcast(spark, transcripts):
-    """The large-dim 'shuffle' RI plan (distinct-key anti-join +
-    broadcast-back of bad keys) must produce byte-identical per-
-    partition results AND violation rows to the broadcast plan — the
-    contract that lets a deployment flip the strategy by dim size
-    without changing any output."""
-    results = {}
-    for strategy in ("broadcast", "shuffle"):
-        suite = ConstraintSuite(
-            name=f"ri_{strategy}",
-            constraints=(referential("role", vocab_name="roles",
-                                     allow_null=False, strategy=strategy),),
-        )
-        ev = SuiteEvaluator(spark, suite, {"roles": role_vocab_df(spark)})
+def _ri_dim_anti_join_lines(spark, df, c):
+    """The physical-plan lines of the left-anti join that a dim RI
+    constraint's results frame runs."""
+    from chronominer_spark.constraints.spec import default_vocab_dfs
+    from chronominer_spark.plans.inspect import physical_plan
+
+    res, _ = SuiteEvaluator(spark, ConstraintSuite(
+        name="ri_dim", constraints=(c,)),
+        default_vocab_dfs(spark, list(TOOL_VOCAB))).evaluate(df)
+    return [ln for ln in physical_plan(res).splitlines() if "LeftAnti" in ln]
+
+
+def test_referential_dim_join_chosen_by_size(spark, transcripts,
+                                             broadcast_joins_off):
+    """The dim RI is one left-anti join with no hint, so Spark picks the
+    join by size: a vocab-sized dim of known size plans a broadcast
+    anti-join (the default suite's ``ri:tool`` plan), and with both
+    broadcast thresholds off it plans a shuffled one."""
+    default_ri = next(c for c in default_transcript_suite(
+        list(ROLE_VOCAB), list(TOOL_VOCAB)).constraints
+        if c.constraint_id == "ri:tool")
+    strict_ri = referential("tool", vocab_name="tool_vocab", allow_null=False)
+
+    for c in (default_ri, strict_ri):
+        lines = _ri_dim_anti_join_lines(spark, transcripts, c)
+        assert lines and all("BroadcastHashJoin" in ln for ln in lines), lines
+    with broadcast_joins_off():
+        lines = _ri_dim_anti_join_lines(spark, transcripts, strict_ri)
+    assert lines and all("Broadcast" not in ln for ln in lines), lines
+
+
+def test_referential_shuffle_strategy_matches_broadcast(spark, transcripts,
+                                                        broadcast_joins_off):
+    """The shuffled anti-join Spark plans for a dim too large to
+    broadcast gives the same results and violation rows as the
+    broadcast one, so the size-based choice never changes an output."""
+    from chronominer_spark.constraints.spec import default_vocab_dfs
+
+    def rows():
+        ev = SuiteEvaluator(spark, ConstraintSuite(
+            name="ri_dim",
+            constraints=(referential("tool", vocab_name="tool_vocab",
+                                     allow_null=False),)),
+            default_vocab_dfs(spark, list(TOOL_VOCAB)))
         res, vio = ev.evaluate(transcripts)
-        results[strategy] = (
-            sorted(map(tuple, res.drop("evaluated_at").collect())),
-            sorted(map(tuple, vio.collect())),
-        )
-    assert results["broadcast"][0] == results["shuffle"][0]
-    assert results["broadcast"][1] == results["shuffle"][1]
-    # the planted generator violations actually exercise the path
-    assert any(r for r in results["shuffle"][1])
+        return (sorted(map(tuple, res.collect())),
+                sorted(map(tuple, vio.collect())))
+
+    broadcast_rows = rows()
+    with broadcast_joins_off():
+        shuffled_rows = rows()
+    assert shuffled_rows == broadcast_rows
+    # null tools are violations under allow_null=False, so both
+    # frames are non-empty and the comparison is not vacuous
+    assert broadcast_rows[1]
 
 
-def test_referential_rejects_unknown_strategy():
-    with pytest.raises(ValueError, match="strategy"):
-        referential("role", vocab_name="roles", strategy="bloom")
+@pytest.mark.parametrize("dim", [True, False], ids=["dim", "inline"])
+def test_referential_non_string_all_null_column_passes(spark, dim):
+    """A fact column Spark reads as ``int`` because every value is NULL
+    (a pandas-written parquet column of None) must validate clean
+    against a string vocabulary: the values compare as strings, never
+    by casting the vocabulary to the fact column's type."""
+    df = spark.createDataFrame(
+        [("conv-00000001", i, None, 0) for i in (1, 2, 3)],
+        "conv_id string, turn_idx int, tool int, pbucket int")
+    if dim:
+        from chronominer_spark.constraints.spec import default_vocab_dfs
+        c = referential("tool", vocab_name="tool_vocab")
+        vocab = default_vocab_dfs(spark, list(TOOL_VOCAB))
+    else:
+        c = referential("tool", vocab=list(TOOL_VOCAB))
+        vocab = None
+    ev = SuiteEvaluator(spark, ConstraintSuite(
+        name="ri_int", constraints=(c,)), vocab)
+    res, vio = ev.evaluate(df)
+    got = [(r["constraint_id"], r["passed"], r["rows_checked"],
+            r["violation_count"]) for r in res.collect()]
+    assert got == [("ri:tool", True, 3, 0)]
+    assert vio.count() == 0
 
 
 def test_monotone_constraint_flags_backward_timestamps(spark):

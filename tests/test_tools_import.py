@@ -4,8 +4,10 @@ behind a ``__main__`` guard; ``bench_extra.py`` dispatches on argv
 there and has no ``main``), and every ``chronominer_spark`` name it
 uses must still exist — names imported at module level or lazily
 inside a function, and ``<alias>.<name>`` attributes read off an
-imported ``chronominer_spark`` module — so removing engine code a kept
-script depends on fails here rather than at the script's next use.
+imported ``chronominer_spark`` module — and every keyword argument it
+passes to such a name must still be a parameter of it, so removing
+engine code or an option a kept script depends on fails here rather
+than at the script's next use.
 
 The reverse check covers the streaming package: every public top-level
 class or function in ``chronominer_spark/streaming/`` must be named by
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import ast
 import importlib
+import inspect
 import pathlib
 import types
 
@@ -45,8 +48,10 @@ STREAMING_ENTRY_POINTS = {
 
 
 def _check_engine_names(path: pathlib.Path) -> set[tuple[str, str]]:
-    """Assert every ``chronominer_spark`` name ``path`` uses exists;
-    return the ``(class, attr)`` targets of its ``wrap`` calls."""
+    """Assert every ``chronominer_spark`` name ``path`` uses exists and
+    every keyword it passes to a ``chronominer_spark`` callable is still
+    a parameter of that callable; return the ``(class, attr)`` targets
+    of its ``wrap`` calls."""
     tree = ast.parse(path.read_text())
     modules: dict[str, types.ModuleType] = {}   # local alias -> module
     imported: dict[str, object] = {}            # local name -> object
@@ -72,6 +77,26 @@ def _check_engine_names(path: pathlib.Path) -> set[tuple[str, str]]:
             mod = modules[node.value.id]
             assert hasattr(mod, node.attr), (
                 f"{path.name}: {mod.__name__}.{node.attr} is gone")
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Name) and f.id in imported:
+            fn, label = imported[f.id], f.id
+        elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name) \
+                and f.value.id in modules:
+            fn, label = getattr(modules[f.value.id], f.attr), f.attr
+        else:
+            continue
+        if not callable(fn) or isinstance(fn, types.ModuleType):
+            continue
+        params = inspect.signature(fn).parameters
+        if any(q.kind is q.VAR_KEYWORD for q in params.values()):
+            continue
+        for kw in node.keywords:
+            assert kw.arg is None or kw.arg in params, (
+                f"{path.name}:{node.lineno}: {label}() has no "
+                f"parameter {kw.arg!r}")
     wrapped = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Call) \
